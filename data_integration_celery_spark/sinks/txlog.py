@@ -25,14 +25,18 @@ set is adds minus removes — snapshot isolation and time travel for free.
 
 Scale notes (the 100 TB shape):
 
-* The log is tiny (one small JSON per commit); replay is O(commits) driver
-  work. Every ``checkpoint_interval`` commits the writer rolls a checkpoint
-  (``<version>.checkpoint.json``: the full live set + schema at that
-  version) and replay restarts from the newest checkpoint at-or-below the
-  requested version — O(interval) per read regardless of table age, the
-  standard log-compaction design. Checkpoints are derived data: best-effort,
-  never required for correctness (a missing or stale checkpoint just means a
-  longer replay).
+* The log is tiny (one small JSON per commit). ``replay`` is its only
+  reader: it folds the commits into one ``TableState`` — version, schema,
+  ``stats_cols``, ``bloom``, ``constraints``, ``cdf``, the per-app ``txns``
+  high-water marks and the live add-actions — shared by every ``TxTable``
+  op, ``last_txn``, the commit retry loop and the txlog source. Every
+  ``checkpoint_interval`` commits the writer serialises that state as
+  ``<version>.checkpoint.json`` (the same fields, the live set under
+  ``add``), and replay resumes from the newest readable checkpoint
+  at-or-below the requested version — O(interval) per read regardless of
+  table age, the standard log-compaction design. Checkpoints are derived
+  data: best-effort, never required for correctness (a missing or corrupt
+  checkpoint just means resuming from an older one, or from version 1).
 * Every ``add`` carries per-file min/max stats for the declared
   ``stats_cols`` (read from the just-written parquet FOOTERS — O(files)
   driver metadata I/O, no re-read of the data; a Spark
@@ -42,7 +46,8 @@ Scale notes (the 100 TB shape):
   range overlaps the update keys are rewritten (copy-on-write), the rest of
   the table is never opened. Batches are ``repartitionByRange`` on
   ``stats_cols`` so ranges are tight and pruning actually bites.
-* ``put_if_absent`` maps to ``O_CREAT|O_EXCL`` locally (``LocalLogStore``),
+* ``put_if_absent`` maps to ``link(2)`` of a fully written temp file locally
+  (``LocalLogStore``: the link fails with EEXIST if the version exists),
   an atomic no-overwrite ``FileContext.rename`` on HDFS (``HadoopLogStore``),
   and a coordination service or conditional-PUT on object stores — the
   LogStore seam is one method.
@@ -57,10 +62,12 @@ caller re-runs on the new snapshot; serializable, never silently lost).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
+from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +80,12 @@ from data_integration_celery_spark.operators.upsert import (
 _LOG_DIR = "_txlog"
 _DATA_DIR = "_data"
 _VERSION_DIGITS = 20
+_CKPT_SUFFIX = ".checkpoint.json"
+
+
+def log_path(log_dir: str, version: int, suffix: str = ".json") -> str:
+    """The commit (or, with ``_CKPT_SUFFIX``, checkpoint) file of a version."""
+    return os.path.join(log_dir, f"{version:0{_VERSION_DIGITS}d}{suffix}")
 
 
 class ConflictError(RuntimeError):
@@ -138,10 +151,11 @@ def _bloom_admits(entry: dict, positions: list[int]) -> bool:
 class LocalLogStore:
     """Atomic put-if-absent on a driver-visible filesystem.
 
-    ``O_CREAT|O_EXCL`` is the POSIX atomic create-exclusive primitive — of N
-    processes racing to create the same name, exactly one open() succeeds.
-    Payload is written to a temp name first and linked into place only when
-    complete, so a reader can never observe a half-written commit file.
+    ``link(2)`` is the POSIX atomic create-exclusive primitive here — of N
+    processes racing to link the same name, exactly one succeeds, the rest
+    get EEXIST. Payload is written to a temp name first and linked into
+    place only when complete, so a reader can never observe a half-written
+    commit file.
     """
 
     def put_if_absent(self, path: str, payload: bytes) -> bool:
@@ -223,7 +237,7 @@ class HadoopLogStore:
     filesystem contract makes it so (HDFS serializes it in the NameNode);
     on local/``file://`` paths the default AbstractFileSystem check is
     check-then-act and POSIX rename overwrites — so this store DELEGATES
-    those schemes to the O_EXCL/link(2) primitive, keeping exactly-one-
+    those schemes to the link(2) primitive, keeping exactly-one-
     winner on every supported scheme. NOT safe on raw S3A — S3 has no
     atomic no-overwrite rename; an S3 port needs an external coordinator
     (the paper's DynamoDB LogStore), which this seam accommodates as a
@@ -498,6 +512,125 @@ class ObjectStoreLogStore:
         self.data.prune_empty_dirs(root, ttl_seconds, now)
 
 
+@dataclass
+class TableState:
+    """The table as of one log version — what ``replay`` folds the commit
+    log into and what a checkpoint stores. Readers need the schema and the
+    live add-actions (keyed by path); writers also need the layout
+    properties (``stats_cols``, whose first entry is the merge prune key,
+    and the ``bloom`` spec), the CHECK ``constraints``, the change-data-feed
+    flag and the per-app ``txns`` high-water marks that make txn-stamped
+    commits exactly-once."""
+
+    version: int = 0
+    schema: str | None = None
+    stats_cols: list[str] = field(default_factory=list)
+    bloom: dict | None = None
+    constraints: dict = field(default_factory=dict)
+    cdf: bool = False
+    txns: dict[str, int] = field(default_factory=dict)
+    live: dict[str, dict] = field(default_factory=dict)
+
+    def apply(self, version: int, commit: dict) -> None:
+        """Fold one commit in. A property a commit records replaces the
+        carried value (only create/overwrite/compact/restore/set_* commits
+        record them); removes drop BEFORE adds land, so a path in both
+        resolves to the add (``restore`` relies on it); txn marks only
+        rise."""
+        self.version = version
+        if commit.get("schema"):
+            self.schema = commit["schema"]
+        if "stats_cols" in commit:
+            self.stats_cols = commit["stats_cols"] or []
+        if "bloom" in commit:
+            self.bloom = commit["bloom"]
+        if "constraints" in commit:
+            self.constraints = commit["constraints"] or {}
+        if "cdf" in commit:
+            self.cdf = bool(commit["cdf"])
+        txn = commit.get("txn")
+        if txn:
+            app, batch = txn["app_id"], txn["batch_id"]
+            self.txns[app] = max(self.txns.get(app, batch), batch)
+        for rel in commit.get("remove") or []:
+            self.live.pop(rel, None)
+        for add in commit.get("add") or []:
+            self.live[add["path"]] = add
+
+    def applied(self, txn: dict | None) -> bool:
+        """True iff ``txn`` is at or below its app's committed batch id —
+        a replayed writer batch that must not commit again."""
+        mark = self.txns.get(txn["app_id"]) if txn else None
+        return mark is not None and mark >= txn["batch_id"]
+
+    def struct(self) -> StructType:
+        return StructType.fromJson(json.loads(self.schema))
+
+    def adds(self) -> list[dict]:
+        return list(self.live.values())
+
+    def to_checkpoint(self) -> dict:
+        return {"version": self.version, "schema": self.schema,
+                "stats_cols": self.stats_cols, "bloom": self.bloom,
+                "constraints": self.constraints, "cdf": self.cdf,
+                "txns": self.txns, "add": self.adds()}
+
+    @classmethod
+    def from_checkpoint(cls, ck: dict) -> "TableState":
+        """Every field is required: a checkpoint missing one (e.g. the
+        txn marks) cannot stand in for the commits it covers."""
+        return cls(version=ck["version"], schema=ck["schema"],
+                   stats_cols=ck["stats_cols"], bloom=ck["bloom"],
+                   constraints=ck["constraints"], cdf=ck["cdf"],
+                   txns=dict(ck["txns"]),
+                   live={a["path"]: a for a in ck["add"]})
+
+
+def replay(store, log_dir: str, version: int | None = None) -> TableState:
+    """The table state at ``version`` (default: latest) — the one place the
+    commit log is folded. Resumes from the newest readable checkpoint
+    at-or-below the target (a corrupt one falls back to the next older,
+    then to version 1) and reads only the commits past it:
+    O(checkpoint_interval) reads whatever the table's age. Session-free, so
+    the txlog source's Python workers share it with ``TxTable``."""
+    versions = store.list_versions(log_dir)
+    table = os.path.dirname(log_dir)
+    if version is None:
+        if not versions:
+            raise FileNotFoundError(f"no TxTable at {table}")
+        version = versions[-1]
+    elif version not in versions:
+        raise ValueError(f"version {version} not in log at {table}")
+    st = TableState()
+    ckpts = store.list_versions(log_dir, suffix=_CKPT_SUFFIX)
+    for c in reversed([c for c in ckpts if c <= version]):
+        try:
+            st = TableState.from_checkpoint(
+                store.read(log_path(log_dir, c, _CKPT_SUFFIX)))
+            break
+        except Exception:
+            continue  # corrupt/unreadable checkpoint: try an older one
+    for v in versions:
+        if st.version < v <= version:
+            st.apply(v, store.read(log_path(log_dir, v)))
+    return st
+
+
+def _idempotent(op):
+    """Run a txn-stamped write op on the latest state. The one "already
+    applied" check: a replayed ``txn`` skips the op (no files written, no
+    commit) and returns the current version. ``_commit`` repeats the check
+    on the state it rolls forward, so a replayed writer racing itself
+    still applies exactly once."""
+    @functools.wraps(op)
+    def run(self, *args, txn: dict | None = None, **kwargs):
+        st = self._state()
+        if st.applied(txn):
+            return st.version
+        return op(self, st, *args, txn=txn, **kwargs)
+    return run
+
+
 class TxTable:
     """A parquet table with an ACID commit log (create/append/merge/overwrite,
     snapshot isolation, time travel, vacuum, compaction)."""
@@ -510,9 +643,10 @@ class TxTable:
         """``batch_partitions`` pins the range-partition count per written
         batch; default None lets AQE size files by data volume (the right
         call at scale — tests pin it to exercise multi-file pruning).
-        ``checkpoint_interval``: roll a live-set checkpoint every N commits
-        (0 disables); reads replay only the commits past the newest
-        checkpoint, so replay cost is bounded for long-lived tables."""
+        ``checkpoint_interval``: checkpoint the replayed ``TableState``
+        every N commits (0 disables); reads replay only the commits past
+        the newest checkpoint, so replay cost is bounded for long-lived
+        tables."""
         self.spark = spark
         self.path = path.rstrip("/")
         self.store = store or LocalLogStore()
@@ -522,120 +656,31 @@ class TxTable:
 
     # ---------------------------------------------------------------- log --
 
-    def _log_path(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json")
-
     def latest_version(self) -> int:
         """0 = table does not exist yet (version numbers start at 1)."""
         versions = self.store.list_versions(self.log_dir)
         return versions[-1] if versions else 0
 
     def history(self) -> list[dict]:
-        return [self.store.read(self._log_path(v))
+        return [self.store.read(log_path(self.log_dir, v))
                 for v in self.store.list_versions(self.log_dir)]
-
-    def _commits_between(self, after: int, upto: int) -> list[dict]:
-        return [self.store.read(self._log_path(v))
-                for v in range(after + 1, upto + 1)]
 
     # ----------------------------------------------------------- snapshot --
 
-    def _ckpt_path(self, version: int) -> str:
-        return os.path.join(
-            self.log_dir, f"{version:0{_VERSION_DIGITS}d}.checkpoint.json")
+    def _state(self, version: int | None = None) -> TableState:
+        return replay(self.store, self.log_dir, version)
 
-    def _write_checkpoint(self, version: int) -> None:
-        """Roll a live-set checkpoint at ``version`` — derived data, written
-        put-if-absent (racing writers produce byte-identical content), and
-        best-effort: any failure leaves reads on the plain replay path.
-        Carries the per-app txn high-water marks so ``last_txn`` (run on
-        EVERY txn-stamped commit) is O(interval), not O(table age)."""
+    def _write_checkpoint(self, st: TableState) -> None:
+        """Serialise ``st`` as the checkpoint of its version — derived data,
+        written put-if-absent (racing writers produce byte-identical
+        content), and best-effort: any failure leaves reads on the plain
+        replay path."""
         try:
-            top, meta, adds = self._replay(version)
-            body = json.dumps({"version": top, "schema": meta["schema"],
-                               "stats_cols": self._stats_cols(meta),
-                               "bloom": self._bloom_spec(meta),
-                               "constraints": self._constraints(meta),
-                               "cdf": self._cdf_enabled(meta),
-                               "txns": self._txn_state(version),
-                               "add": adds}, sort_keys=True).encode()
-            self.store.put_if_absent(self._ckpt_path(version), body)
+            body = json.dumps(st.to_checkpoint(), sort_keys=True).encode()
+            self.store.put_if_absent(
+                log_path(self.log_dir, st.version, _CKPT_SUFFIX), body)
         except Exception:
             pass
-
-    def _txn_state(self, upto: int) -> dict[str, int]:
-        """Per-app max committed batch_id at version ``upto`` — resumed from
-        the newest checkpoint below it, then rolled forward commit by
-        commit (falls back to a full scan if no checkpoint carries txns)."""
-        state: dict[str, int] = {}
-        start = 0
-        ckpts = [c for c in self.store.list_versions(
-                     self.log_dir, suffix=".checkpoint.json") if c < upto]
-        for c in reversed(ckpts):
-            try:
-                ck = self.store.read(self._ckpt_path(c))
-            except Exception:
-                continue
-            if "txns" in ck:
-                state = dict(ck["txns"])
-                start = ck["version"]
-                break
-        for commit in self._commits_between(start, upto):
-            txn = commit.get("txn")
-            if txn:
-                prev = state.get(txn["app_id"])
-                state[txn["app_id"]] = (txn["batch_id"] if prev is None
-                                        else max(prev, txn["batch_id"]))
-        return state
-
-    def _replay(self, version: int | None = None) -> tuple[int, dict, list[dict]]:
-        """Returns (version, last schema-bearing commit, live add-actions).
-        Starts from the newest checkpoint at-or-below the target, replaying
-        only the commits past it — O(checkpoint_interval) per read."""
-        versions = self.store.list_versions(self.log_dir)
-        if version is not None:
-            versions = [v for v in versions if v <= version]
-            if not versions or versions[-1] != version:
-                raise ValueError(f"version {version} not in log at {self.path}")
-        if not versions:
-            raise FileNotFoundError(f"no TxTable at {self.path}")
-        live: dict[str, dict] = {}
-        meta: dict = {}
-        ckpts = [c for c in self.store.list_versions(
-                     self.log_dir, suffix=".checkpoint.json")
-                 if c <= versions[-1]]
-        if ckpts:
-            try:
-                ck = self.store.read(self._ckpt_path(ckpts[-1]))
-                live = {a["path"]: a for a in ck["add"]}
-                meta = {"schema": ck["schema"],
-                        "stats_cols": ck.get("stats_cols", [])}
-                for kk in ("bloom", "constraints", "cdf"):
-                    if kk in ck:
-                        meta[kk] = ck[kk]
-                versions = [v for v in versions if v > ck["version"]]
-            except Exception:
-                live, meta = {}, {}  # corrupt/unreadable checkpoint: full replay
-        for v in versions:
-            commit = self.store.read(self._log_path(v))
-            if commit.get("schema"):
-                # every commit carries 'schema', but only create/overwrite/
-                # compact carry 'stats_cols'/'bloom' — preserve the carried
-                # values so _stats_cols/_bloom_spec never need their
-                # O(table-age) history() fallback
-                carried = {kk: meta[kk]
-                           for kk in ("stats_cols", "bloom", "constraints",
-                                      "cdf")
-                           if kk in meta and kk not in commit}
-                meta = dict(commit, **carried) if carried else commit
-            for rel in commit.get("remove", []):
-                live.pop(rel, None)
-            for add in commit.get("add", []):
-                live[add["path"]] = add
-        return (version if version is not None
-                else max(versions[-1] if versions else 0,
-                         ckpts[-1] if ckpts else 0),
-                meta, list(live.values()))
 
     def snapshot(self, version: int | None = None,
                  prune: dict[str, tuple] | None = None,
@@ -653,8 +698,8 @@ class TxTable:
         pure optimization: callers still apply the real filter (files KEPT
         may contain out-of-range rows). A file with no recorded stats for
         ``col`` is conservatively kept."""
-        _, meta, adds = self._replay(version)
-        schema = StructType.fromJson(json.loads(meta["schema"]))
+        st = self._state(version)
+        schema, adds = st.struct(), st.adds()
         for col, (lo, hi) in (prune or {}).items():
             lo, hi = _widen(lo, -1), _widen(hi, +1)
             adds = [a for a in adds
@@ -743,7 +788,7 @@ class TxTable:
         return out
 
     def live_files(self, version: int | None = None) -> list[dict]:
-        return self._replay(version)[2]
+        return self._state(version).adds()
 
     # -------------------------------------------------------------- write --
 
@@ -959,46 +1004,57 @@ class TxTable:
                 for j, (_, _, _, _, k) in enumerate(probes)]
 
     def last_txn(self, app_id: str) -> int | None:
-        """Highest committed writer batch id for ``app_id`` (None if never).
-        The idempotence handle for exactly-once streaming sinks: a replayed
-        micro-batch with batch_id <= last_txn(app) is a no-op. Checkpoint-
-        accelerated: O(checkpoint_interval) commit reads, not O(table age)."""
-        return self._txn_state(self.latest_version()).get(app_id)
+        """Highest committed writer batch id for ``app_id`` (None if never,
+        or if the table does not exist). The idempotence handle for
+        exactly-once streaming sinks: a replayed micro-batch with
+        batch_id <= last_txn(app) is a no-op. Checkpoint-accelerated:
+        O(checkpoint_interval) commit reads, not O(table age)."""
+        if not self.latest_version():
+            return None
+        return self._state().txns.get(app_id)
 
-    def _commit(self, op: str, adds: list[dict], removes: list[str],
-                read_version: int, schema_json: str,
+    def _commit(self, op: str, st: TableState, adds: list[dict],
+                removes: list[str], schema_json: str | None = None,
                 extra: dict | None = None, blind_append: bool = False,
                 txn: dict | None = None) -> int:
-        """Optimistic commit. Returns the committed version.
+        """Optimistic commit on top of ``st``, the state the op read (its
+        schema unless ``schema_json`` is given). Returns the committed
+        version.
 
         ``blind_append`` retries through lost races (appends commute with
         appends/merges/compactions); table-reading ops raise ``ConflictError``
         on ANY intervening commit — strict serializability, no lost updates.
 
         ``txn`` = ``{"app_id": str, "batch_id": int}`` stamps the commit with
-        a writer version; a commit whose txn is already at-or-past the log's
-        ``last_txn(app_id)`` is skipped (returns the current version) — the
+        a writer version; a commit whose txn is already at-or-below the
+        app's committed mark is skipped (returns the current version) — the
         public idempotent-writer design (Delta's ``txn`` action). The check
         re-runs inside the retry loop so a replayed writer racing itself
         still applies exactly once; a skipped commit's staged files become
         vacuumable orphans.
+
+        Each attempt lists the log once and folds only the commits ``st``
+        has not seen into it, so on success ``st`` is the committed
+        version's state (the checkpoint, when one is due, serialises it).
         """
         self.store.ensure_dir(self.log_dir)
-        attempt_version = read_version + 1
+        read_version = st.version
+        schema_json = schema_json or st.schema
+        intervening: list[dict] = []
         while True:
-            latest = self.latest_version()
-            if txn is not None:
-                applied = self.last_txn(txn["app_id"])
-                if applied is not None and applied >= txn["batch_id"]:
-                    return latest  # replayed batch: already committed
-            if latest >= attempt_version:
-                intervening = self._commits_between(read_version, latest)
+            for v in range(st.version + 1, self.latest_version() + 1):
+                commit = self.store.read(log_path(self.log_dir, v))
+                st.apply(v, commit)
+                intervening.append(commit)
+            if st.applied(txn):
+                return st.version  # replayed batch: already committed
+            if intervening:
                 if not blind_append:
                     raise ConflictError(
                         f"{op} read version {read_version} of {self.path} but "
                         f"{[c['op'] for c in intervening]} committed "
-                        f"version(s) {read_version + 1}..{latest}; re-run on "
-                        f"the new snapshot")
+                        f"version(s) {read_version + 1}..{st.version}; re-run "
+                        f"on the new snapshot")
                 if any(c["op"] in ("overwrite", "create") for c in intervening):
                     raise ConflictError(
                         f"append lost to a table-replacing commit at {self.path}")
@@ -1006,11 +1062,8 @@ class TxTable:
                 # stale schema after a concurrent widening would regress the
                 # table schema for every later reader (files are unaffected —
                 # the explicit-schema scan fills missing columns with NULL)
-                for c in reversed(intervening):
-                    if c.get("schema"):
-                        schema_json = c["schema"]
-                        break
-                attempt_version = latest + 1
+                schema_json = st.schema
+            attempt_version = st.version + 1
             payload = {
                 "version": attempt_version, "op": op,
                 "ts": time.time_ns() // 1_000_000,
@@ -1033,19 +1086,20 @@ class TxTable:
             if txn is not None:
                 payload["txn"] = txn
             body = json.dumps(payload, sort_keys=True).encode()
-            if self.store.put_if_absent(self._log_path(attempt_version), body):
+            if self.store.put_if_absent(
+                    log_path(self.log_dir, attempt_version), body):
+                st.apply(attempt_version, payload)
                 self.spark.catalog.refreshByPath(self.path)
                 if (self.checkpoint_interval
                         and attempt_version % self.checkpoint_interval == 0):
-                    self._write_checkpoint(attempt_version)
+                    self._write_checkpoint(st)
                 return attempt_version
-            # lost the O_EXCL race for this exact version: loop WITHOUT
-            # advancing attempt_version — latest_version() now sees the
-            # rival commit, so the `latest >= attempt_version` branch runs
-            # the overwrite/create conflict check and schema carry-forward
-            # before picking the next slot (advancing here would skip both:
-            # the append could land after a table replacement, or re-commit
-            # a stale schema over a concurrent widening)
+            # lost the put-if-absent race for this exact version: the next
+            # attempt's listing sees the rival commit and folds it, so the
+            # overwrite/create conflict check and the schema carry-forward
+            # run before the next slot is picked (skipping them would let
+            # the append land after a table replacement, or re-commit a
+            # stale schema over a concurrent widening)
 
     # ---------------------------------------------------------------- ops --
 
@@ -1080,59 +1134,19 @@ class TxTable:
         bloom = ({"cols": bloom_cols, "bits": int(bloom_bits),
                   "k": int(bloom_k)} if bloom_cols else None)
         adds = self._write_batch(df, stats_cols, bloom=bloom)
-        # 'bloom' is recorded even when None: _bloom_spec runs on EVERY
-        # append/merge, and an absent key would send bloom-less tables
-        # down the O(table-age) history fallback each time
-        # 'cdf' recorded even when False, same reason as 'bloom'
-        return self._commit("create", adds, [], read_version=0,
+        return self._commit("create", TableState(), adds, [],
                             schema_json=df.schema.json(),
                             extra={"stats_cols": stats_cols,
                                    "bloom": bloom,
                                    "constraints": constraints,
                                    "cdf": bool(change_data_feed)})
 
-    def _stats_cols(self, meta: dict) -> list[str]:
-        if "stats_cols" in meta:  # checkpoint/create/overwrite metas carry it
-            return meta["stats_cols"]
-        for commit in reversed(self.history()):
-            if "stats_cols" in commit:
-                return commit["stats_cols"]
-        return []
-
-    def _bloom_spec(self, meta: dict) -> dict | None:
-        """The table's Bloom-index spec ({cols, bits, k}) or None — carried
-        through _replay meta exactly like stats_cols."""
-        if "bloom" in meta:
-            return meta["bloom"]
-        for commit in reversed(self.history()):
-            if "bloom" in commit:
-                return commit["bloom"]
-        return None
-
-    def _constraints(self, meta: dict) -> dict:
-        """The table's CHECK constraints ({name: sql}) — carried through
-        _replay meta exactly like stats_cols/bloom. No history() fallback:
-        replay carries the key forward from wherever it appeared
-        (set/drop commits carry schema so they ARE the replay meta, and
-        post-r10 checkpoints + create always record it) — a meta without
-        the key means no constraint existed at that version, so scanning
-        the whole log would be O(table-age) work to learn {}."""
-        return meta.get("constraints") or {}
-
-    def _cdf_enabled(self, meta: dict) -> bool:
-        """Whether the change-data-feed table property is on — carried
-        through _replay meta exactly like constraints (create and set_cdf
-        commits record it; an absent key means it was never enabled)."""
-        return bool(meta.get("cdf", False))
-
     def set_change_data_feed(self, enabled: bool) -> int:
         """ALTER TABLE SET the change-data-feed property. Takes effect for
         commits AFTER this version — CoW merges before it wrote no
         change-data files, so the streaming CDC source still refuses them
         (``TxTable.changes()`` is the batch fallback there)."""
-        version, meta, _live = self._replay()
-        return self._commit("set_cdf", [], [], read_version=version,
-                            schema_json=meta["schema"],
+        return self._commit("set_cdf", self._state(), [], [],
                             extra={"cdf": bool(enabled)})
 
     def _enforce(self, df: DataFrame, constraints: dict) -> None:
@@ -1168,28 +1182,28 @@ class TxTable:
         append/merge/update/overwrite validates its rows before commit and
         raises ``ConstraintViolation`` instead of writing. Constraints ride
         the commit meta like stats_cols/bloom (checkpoint-carried)."""
-        version, meta, _live = self._replay()
-        cur = dict(self._constraints(meta))
+        st = self._state()
+        cur = dict(st.constraints)
         if name in cur:
             raise ValueError(f"constraint {name!r} already exists "
                              f"({cur[name]!r}); drop it first")
-        self._enforce(self.snapshot(version), {name: check_sql})
+        self._enforce(self._read_adds(st.adds(), st.struct()),
+                      {name: check_sql})
         cur[name] = check_sql
-        return self._commit("set_constraint", [], [], read_version=version,
-                            schema_json=meta["schema"],
+        return self._commit("set_constraint", st, [], [],
                             extra={"constraints": cur})
 
     def drop_constraint(self, name: str) -> int:
-        version, meta, _live = self._replay()
-        cur = dict(self._constraints(meta))
+        st = self._state()
+        cur = dict(st.constraints)
         if name not in cur:
             raise ValueError(f"no constraint {name!r} on {self.path}")
         cur.pop(name)
-        return self._commit("drop_constraint", [], [], read_version=version,
-                            schema_json=meta["schema"],
+        return self._commit("drop_constraint", st, [], [],
                             extra={"constraints": cur})
 
-    def append(self, df: DataFrame, txn: dict | None = None,
+    @_idempotent
+    def append(self, st: TableState, df: DataFrame, txn: dict | None = None,
                merge_schema: bool = False) -> int:
         """Blind append — never conflicts (retries through lost races).
         ``txn={"app_id", "batch_id"}`` makes replays idempotent (exactly-once
@@ -1201,19 +1215,13 @@ class TxTable:
         the explicit-schema scan makes evolution free, no rewrite). Silently
         dropping unknown columns is the one behavior a sink must never have.
         """
-        version, meta, _ = self._replay()
-        if txn is not None:
-            applied = self.last_txn(txn["app_id"])
-            if applied is not None and applied >= txn["batch_id"]:
-                return version  # replay of a committed batch: skip the write
-        schema = StructType.fromJson(json.loads(meta["schema"]))
+        schema = st.struct()
         known = {f.name for f in schema.fields}
         new_cols = [c for c in df.columns if c not in known]
         if new_cols and not merge_schema:
             raise ValueError(
                 f"append has columns the table lacks: {new_cols} — pass "
                 f"merge_schema=True to widen the schema, or drop them")
-        schema_json = meta["schema"]
         if new_cols:
             from pyspark.sql.types import StructField
             # a schema-widening column MUST be recorded nullable whatever
@@ -1222,42 +1230,38 @@ class TxTable:
             # so a non-nullable record would lie to downstream consumers
             # (observed: the streaming source's arrow null-fill NPE'd in
             # catalyst's UnsafeWriter on the non-nullable claim)
-            widened = StructType(
+            schema = StructType(
                 list(schema.fields)
                 + [StructField(c, df.schema[c].dataType, nullable=True,
                                metadata=df.schema[c].metadata)
                    for c in new_cols])
-            schema_json = widened.json()
-            meta = dict(meta, schema=schema_json)
-        stats_cols = self._stats_cols(meta)
-        df = _conform(df, meta)
-        self._enforce(df, self._constraints(meta))
-        adds = self._write_batch(df, stats_cols,
-                                 bloom=self._bloom_spec(meta))
-        return self._commit("append", adds, [], read_version=version,
-                            schema_json=schema_json,
+        df = _conform(df, schema)
+        self._enforce(df, st.constraints)
+        adds = self._write_batch(df, st.stats_cols, bloom=st.bloom)
+        return self._commit("append", st, adds, [],
+                            schema_json=schema.json() if new_cols else None,
                             blind_append=not new_cols, txn=txn)
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace the table contents atomically (readers see old or new).
         The overwrite's schema becomes the table schema; stats columns the
         new frame lacks are dropped from the recorded layout."""
-        version, meta, live = self._replay()
-        stats_cols = [c for c in self._stats_cols(meta) if c in df.columns]
-        bloom = self._bloom_spec(meta)
+        st = self._state()
+        stats_cols = [c for c in st.stats_cols if c in df.columns]
+        bloom = st.bloom
         if bloom:
             cols = [c for c in bloom["cols"] if c in df.columns]
             bloom = dict(bloom, cols=cols) if cols else None
-        cons = self._constraints(meta)
-        self._enforce(df, cons)
+        self._enforce(df, st.constraints)
         adds = self._write_batch(df, stats_cols, bloom=bloom)
-        return self._commit("overwrite", adds, [a["path"] for a in live],
-                            read_version=version, schema_json=df.schema.json(),
+        return self._commit("overwrite", st, adds, list(st.live),
+                            schema_json=df.schema.json(),
                             extra={"stats_cols": stats_cols, "bloom": bloom,
-                                   "constraints": cons})
+                                   "constraints": st.constraints})
 
-    def merge_upsert(self, updates: DataFrame, keys: list[str],
-                     order_col: str = "batch_id",
+    @_idempotent
+    def merge_upsert(self, st: TableState, updates: DataFrame,
+                     keys: list[str], order_col: str = "batch_id",
                      txn: dict | None = None) -> int:
         """MERGE: last-write-wins per PK (``upsert_frames`` semantics) as a
         copy-on-write commit — the ACID form of ``write_upsert``.
@@ -1266,47 +1270,43 @@ class TxTable:
         update key value are read+rewritten; files that provably contain no
         updated key stay live untouched. Requires the FIRST stats column to
         be one of ``keys``; otherwise the merge rewrites the whole table
-        (still correct, documented degradation).
+        (still correct, documented degradation). An empty ``updates``
+        writes nothing and burns no commit (returns the current version).
         """
-        version, meta, live = self._replay()
-        if txn is not None:
-            applied = self.last_txn(txn["app_id"])
-            if applied is not None and applied >= txn["batch_id"]:
-                return version  # replay of a committed batch: skip the write
-        stats_cols = self._stats_cols(meta)
+        stats_cols = st.stats_cols
         prune_col = stats_cols[0] if stats_cols and stats_cols[0] in keys else None
-        if prune_col is not None and live:
-            bounds = updates.select(
-                F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")
-            ).collect()[0]  # bounded: one row
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if prune_col is not None:
+            aggs += [F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")]
+        bounds = updates.select(*aggs).collect()[0]  # bounded: one row
+        if not bounds["n"]:
+            return st.version
+        touched, kept = st.adds(), []
+        if prune_col is not None:
             # bounds normalized like the stored stats; Decimal bounds widen
             # OUTWARD so float rounding can only disable pruning, never
             # prune a file that holds an updated key
             lo, hi = _widen(bounds["lo"], -1), _widen(bounds["hi"], +1)
             touched, kept = [], []
-            for add in live:
+            for add in st.adds():
                 if _overlaps(add.get("stats", {}).get(prune_col), lo, hi):
                     touched.append(add)
                 else:
                     kept.append(add)
-        else:
-            touched, kept = list(live), []
-        schema = StructType.fromJson(json.loads(meta["schema"]))
+        schema = st.struct()
         # DV-aware read: rows deleted merge-on-read must not resurrect
         # through the CoW rewrite of their file
         base = self._read_adds(touched, schema)
-        conformed = _conform(updates, meta, keep=order_col)
+        conformed = _conform(updates, schema, keep=order_col)
         merged = upsert_frames(base, conformed, keys, order_col)
-        self._enforce(merged, self._constraints(meta))
-        adds = self._write_batch(merged, stats_cols,
-                                  bloom=self._bloom_spec(meta))
+        self._enforce(merged, st.constraints)
+        adds = self._write_batch(merged, stats_cols, bloom=st.bloom)
         extra: dict = {"pruned_files": len(kept)}
-        if self._cdf_enabled(meta):
+        if st.cdf:
             extra.update(self._write_merge_cdf(base, conformed, keys,
                                                schema, order_col))
-        return self._commit("merge_upsert", adds, [a["path"] for a in touched],
-                            read_version=version, schema_json=meta["schema"],
-                            extra=extra, txn=txn)
+        return self._commit("merge_upsert", st, adds,
+                            [a["path"] for a in touched], extra=extra, txn=txn)
 
     def _write_merge_cdf(self, base: DataFrame, updates: DataFrame,
                          keys: list[str], schema: StructType,
@@ -1368,7 +1368,9 @@ class TxTable:
             .write.parquet(os.path.join(self.path, cdf_dir)))
         return {"cdf_files": [cdf_dir]}
 
-    def delete_where(self, condition, txn: dict | None = None) -> int:
+    @_idempotent
+    def delete_where(self, st: TableState, condition,
+                     txn: dict | None = None) -> int:
         """DELETE matching rows WITHOUT rewriting any data file
         (merge-on-read deletion vectors).
 
@@ -1396,35 +1398,24 @@ class TxTable:
         Returns the committed version (or the current one if nothing
         matched — an empty delete never burns a commit).
         """
-        version, meta, live = self._replay()
-        if txn is not None:
-            applied = self.last_txn(txn["app_id"])
-            if applied is not None and applied >= txn["batch_id"]:
-                return version  # replay of a committed batch
-        schema = StructType.fromJson(json.loads(meta["schema"]))
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        matched = (self._read_adds(live, schema, with_rowid=True)
+        matched = (self._read_adds(st.adds(), st.struct(), with_rowid=True)
                    .where(cond).select("__file", "__pos"))
-        return self._commit_dv_delete(matched, version, meta, live, txn)
+        return self._commit_dv_delete(matched, st, txn)
 
-    def delete_matching(self, keys_df: DataFrame, keys: list[str],
-                        txn: dict | None = None) -> int:
+    @_idempotent
+    def delete_matching(self, st: TableState, keys_df: DataFrame,
+                        keys: list[str], txn: dict | None = None) -> int:
         """DV-delete every row whose key tuple appears in ``keys_df`` — the
         retraction form (a stream of erasure requests, a bad-batch id
         list). Same merge-on-read mechanics as ``delete_where``; the match
         is a left-semi join on ``keys``, so the request set never needs to
         fit in a SQL literal or on the driver."""
-        version, meta, live = self._replay()
-        if txn is not None:
-            applied = self.last_txn(txn["app_id"])
-            if applied is not None and applied >= txn["batch_id"]:
-                return version  # replay of a committed batch
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        matched = (self._read_adds(live, schema, with_rowid=True)
+        matched = (self._read_adds(st.adds(), st.struct(), with_rowid=True)
                    .join(keys_df.select(*keys).dropDuplicates(), keys,
                          "left_semi")
                    .select("__file", "__pos"))
-        return self._commit_dv_delete(matched, version, meta, live, txn)
+        return self._commit_dv_delete(matched, st, txn)
 
     @staticmethod
     def _sized_for_write(df: DataFrame, n_input_files: int,
@@ -1459,12 +1450,12 @@ class TxTable:
                 "DV row identity needs unique file basenames; duplicate "
                 "basenames found in the live set")
 
-    def _commit_dv_delete(self, matched: DataFrame, version: int,
-                          meta: dict, live: list[dict],
+    def _commit_dv_delete(self, matched: DataFrame, st: TableState,
                           txn: dict | None) -> int:
         """Write the matched (file, pos) rows as a DV sidecar and commit the
         per-file cumulative refs. Returns the committed version, or the
         current one when nothing matched (no commit burned)."""
+        live = st.adds()
         self._require_unique_basenames(live)
         sidecar = f"{_DATA_DIR}/dv_{uuid.uuid4().hex}"
         self._sized_for_write(matched, len(live)).write.parquet(
@@ -1474,7 +1465,7 @@ class TxTable:
                   .groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}  # bounded: one row per affected file
         if not counts:
-            return version  # nothing matched; orphan sidecar is vacuumable
+            return st.version  # nothing matched; orphan sidecar is vacuumable
         adds = []
         for a in live:
             n = counts.get(os.path.basename(a["path"]))
@@ -1483,13 +1474,13 @@ class TxTable:
                 adds.append({**a, "dv": {"refs": old["refs"] + [sidecar],
                                          "rows": old["rows"] + int(n)}})
         return self._commit(
-            "delete", adds, [], read_version=version,
-            schema_json=meta["schema"],
+            "delete", st, adds, [],
             extra={"deleted_rows": int(sum(counts.values())),
                    "dv_sidecars": [sidecar]},
             txn=txn)
 
-    def update_where(self, condition, set_exprs: dict,
+    @_idempotent
+    def update_where(self, st: TableState, condition, set_exprs: dict,
                      txn: dict | None = None) -> int:
         """UPDATE matching rows merge-on-read: one atomic commit marks the
         originals in a deletion-vector sidecar AND appends the rewritten
@@ -1512,12 +1503,7 @@ class TxTable:
 
         Returns the committed version (current version if nothing matched).
         """
-        version, meta, live = self._replay()
-        if txn is not None:
-            applied = self.last_txn(txn["app_id"])
-            if applied is not None and applied >= txn["batch_id"]:
-                return version  # replay of a committed batch
-        schema = StructType.fromJson(json.loads(meta["schema"]))
+        live, schema = st.adds(), st.struct()
         names = {f.name for f in schema.fields}
         unknown = [c for c in set_exprs if c not in names]
         if unknown:
@@ -1535,7 +1521,7 @@ class TxTable:
                   dv.groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}  # bounded: one row per affected file
         if not counts:
-            return version  # nothing matched; orphan sidecar is vacuumable
+            return st.version  # nothing matched; orphan sidecar is vacuumable
         # rewritten rows come from the SAME sidecar (semi-join), so the
         # marked set and the re-inserted set cannot diverge; only the
         # files the sidecar actually references are re-scanned (the
@@ -1560,9 +1546,8 @@ class TxTable:
             else:
                 out_cols.append(F.col(f.name))
         upd = upd.select(*out_cols)
-        self._enforce(upd, self._constraints(meta))
-        new_adds = self._write_batch(upd, self._stats_cols(meta),
-                                     bloom=self._bloom_spec(meta))
+        self._enforce(upd, st.constraints)
+        new_adds = self._write_batch(upd, st.stats_cols, bloom=st.bloom)
         dv_adds = []
         for a in live:
             n = counts.get(os.path.basename(a["path"]))
@@ -1571,8 +1556,7 @@ class TxTable:
                 dv_adds.append({**a, "dv": {"refs": old["refs"] + [sidecar],
                                             "rows": old["rows"] + int(n)}})
         return self._commit(
-            "update", new_adds + dv_adds, [], read_version=version,
-            schema_json=meta["schema"],
+            "update", st, new_adds + dv_adds, [],
             extra={"updated_rows": int(sum(counts.values())),
                    "dv_sidecars": [sidecar]},
             txn=txn)
@@ -1598,9 +1582,9 @@ class TxTable:
             raise ValueError(
                 f"changes() requires v_from <= v_to, got {v_from} > {v_to} "
                 f"(a reversed range would silently invert the feed)")
-        _, meta_to, adds_to = self._replay(v_to)
-        _, _meta_from, adds_from = self._replay(v_from)
-        schema = StructType.fromJson(json.loads(meta_to["schema"]))
+        st_to = self._state(v_to)
+        adds_to, adds_from = st_to.adds(), self._state(v_from).adds()
+        schema = st_to.struct()
 
         # a file's CONTENT identity is (path, deletion-vector state): a
         # merge-on-read delete leaves the path live in both versions but
@@ -1677,12 +1661,12 @@ class TxTable:
         ``min_refs`` or more refs. Table-reading op: concurrent commits
         raise ``ConflictError``. Returns the committed version.
         """
-        version, meta, live = self._replay()
-        dv_files = [a for a in live if a.get("dv", {}).get("refs")]
+        st = self._state()
+        dv_files = [a for a in st.adds() if a.get("dv", {}).get("refs")]
         if not dv_files or max(len(a["dv"]["refs"])
                                for a in dv_files) < min_refs:
-            return version
-        self._require_unique_basenames(live)
+            return st.version
+        self._require_unique_basenames(st.adds())
         refs = sorted({r for a in dv_files for r in a["dv"]["refs"]})
         # semi-join against the live DV'd basenames so rows for files that
         # have since been compacted/overwritten away don't ride along
@@ -1707,8 +1691,7 @@ class TxTable:
                                  os.path.basename(a["path"]), 0))}}
                 for a in dv_files]
         return self._commit(
-            "coalesce_dv", adds, [], read_version=version,
-            schema_json=meta["schema"],
+            "coalesce_dv", st, adds, [],
             extra={"coalesced_refs": len(refs), "dv_sidecars": [sidecar]})
 
     def compact_dv(self, min_ratio: float = 0.1) -> int:
@@ -1735,19 +1718,16 @@ class TxTable:
         Table-reading op: concurrent commits raise ``ConflictError``.
         Returns the committed version.
         """
-        version, meta, live = self._replay()
-        targets = [a for a in live
+        st = self._state()
+        targets = [a for a in st.adds()
                    if a.get("dv", {}).get("rows", 0)
                    >= max(1.0, a.get("rows", 0) * min_ratio)]
         if not targets:
-            return version
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        survivors = self._read_adds(targets, schema)  # DV-applied content
-        adds = self._write_batch(survivors, self._stats_cols(meta),
-                                 bloom=self._bloom_spec(meta))
+            return st.version
+        survivors = self._read_adds(targets, st.struct())  # DV-applied
+        adds = self._write_batch(survivors, st.stats_cols, bloom=st.bloom)
         return self._commit(
-            "compact_dv", adds, [a["path"] for a in targets],
-            read_version=version, schema_json=meta["schema"],
+            "compact_dv", st, adds, [a["path"] for a in targets],
             extra={"rewritten_files": len(targets),
                    "materialized_dv_rows": int(sum(a["dv"]["rows"]
                                                    for a in targets))})
@@ -1761,9 +1741,10 @@ class TxTable:
         ALL of them — after which ``snapshot(prune=...)`` skips files on a
         predicate over ANY interleaved column, not just the primary range
         key. The lakehouse OPTIMIZE ZORDER, as one CoW commit."""
-        version, meta, live = self._replay()
-        stats_cols = self._stats_cols(meta)
-        df, layout, stat_set = self.snapshot(), None, list(stats_cols)
+        st = self._state()
+        stats_cols = st.stats_cols
+        df = self._read_adds(st.adds(), st.struct())
+        layout, stat_set = None, list(stats_cols)
         extra = None
         if zorder:
             from ..operators.zorder import with_zorder_key
@@ -1777,11 +1758,8 @@ class TxTable:
             stat_set = stats_cols + [c for c in zorder if c not in stats_cols]
             extra = {"zorder": zorder, "stats_cols": stat_set}
         adds = self._write_batch(df, stat_set, num=target_files,
-                                 layout_by=layout,
-                                 bloom=self._bloom_spec(meta))
-        return self._commit("compact", adds, [a["path"] for a in live],
-                            read_version=version, schema_json=meta["schema"],
-                            extra=extra)
+                                 layout_by=layout, bloom=st.bloom)
+        return self._commit("compact", st, adds, list(st.live), extra=extra)
 
     def restore(self, version: int) -> int:
         """Roll the table back to ``version`` — as a NEW commit that re-adds
@@ -1792,8 +1770,8 @@ class TxTable:
         table size. Fails with ConflictError if anything commits
         concurrently; fails fast if ``vacuum`` already reclaimed any of the
         target version's files (the documented time-travel horizon)."""
-        cur_version, meta, cur_live = self._replay()
-        _, old_meta, old_live = self._replay(version)
+        cur, old = self._state(), self._state(version)
+        old_live = old.adds()
         targets = [a["path"] for a in old_live] + sorted(
             {r for a in old_live for r in a.get("dv", {}).get("refs", [])})
         missing = [p for p in targets
@@ -1802,15 +1780,13 @@ class TxTable:
             raise FileNotFoundError(
                 f"cannot restore {self.path} to v{version}: {len(missing)} "
                 f"file(s) already vacuumed, e.g. {missing[0]}")
-        cur_paths = {a["path"] for a in cur_live}
         return self._commit(
-            "restore",
-            [a for a in old_live],  # re-add (shared paths: add wins replay)
-            [p for p in cur_paths - {a["path"] for a in old_live}],
-            read_version=cur_version, schema_json=old_meta["schema"],
+            "restore", cur,
+            old_live,  # re-add (shared paths: add wins replay)
+            [p for p in cur.live if p not in old.live],
+            schema_json=old.schema,
             extra={"restored_version": version,
-                   "stats_cols": self._stats_cols(old_meta),
-                   "bloom": self._bloom_spec(old_meta)})
+                   "stats_cols": old.stats_cols, "bloom": old.bloom})
 
     def vacuum(self, ttl_seconds: float = 7 * 86400) -> list[str]:
         """Delete data files no snapshot references, older than ``ttl_seconds``.
@@ -1911,10 +1887,10 @@ def _overlaps(st: dict | None, lo, hi) -> bool:
     return True
 
 
-def _conform(df: DataFrame, meta: dict, keep: str | None = None) -> DataFrame:
+def _conform(df: DataFrame, schema: StructType,
+             keep: str | None = None) -> DataFrame:
     """Project ``df`` onto the table schema (order + missing→NULL), keeping
     ``keep`` (the merge order column) if present."""
-    schema = StructType.fromJson(json.loads(meta["schema"]))
     cols = [F.col(f.name).cast(f.dataType) if f.name in df.columns
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields]

@@ -16,13 +16,18 @@ jobs subscribe to the table itself).
 
 Implementation: the Spark 4 Python Data Source API
 (``pyspark.sql.datasource``). The reader runs in Python workers WITHOUT a
-SparkSession, so it re-reads the commit log with plain file I/O (POSIX
-paths — the LocalLogStore layout; hdfs:///object-store tables stream via
-their mounted filesystems). ``read()`` executes ON EXECUTORS, one
-partition per added file, and yields Arrow RecordBatches straight from
-the parquet footer — the vectorized path, never row-at-a-time Python.
-Scale shape: driver work is O(versions) JSON reads per trigger; data
-movement is executor-side and proportional to the NEW files only.
+SparkSession, so it reads the commit log through ``LocalLogStore`` (POSIX
+paths; hdfs:///object-store tables stream via their mounted filesystems).
+Table states — the schema, the live set behind a snapshot read or a
+snapshot-start stream, the pre-overwrite rows of the CDC feed — come
+from ``sinks.txlog.replay``, the same checkpointed fold ``TxTable``
+reads, so the source and the table can never disagree on what is live;
+tailing classifies each new commit on its own. ``read()`` executes ON
+EXECUTORS, one partition per added file, and yields Arrow RecordBatches
+straight from the parquet footer — the vectorized path, never
+row-at-a-time Python. Scale shape: driver work is one JSON read per new
+version per trigger (plus one replay for a snapshot); data movement is
+executor-side and proportional to the NEW files only.
 
 Options:
 - ``startingVersion`` (default 0): first batch covers versions
@@ -90,15 +95,16 @@ stream.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceStreamReader, InputPartition)
 from pyspark.sql.types import (
     ArrayType, BooleanType, ByteType, DateType, DecimalType, DoubleType,
-    FloatType, IntegerType, LongType, ShortType, StringType, StructType,
-    TimestampType)
+    FloatType, IntegerType, LongType, ShortType, StringType, StructField,
+    StructType, TimestampType)
+
+from ..sinks.txlog import LocalLogStore, log_path, replay
 
 _LOG_DIR = "_txlog"
 
@@ -120,33 +126,11 @@ def _list_versions(log_dir: str) -> list[int]:
     # driver-side log access reuses the engine's LogStore so the two
     # never drift on layout/suffix rules; only executor-side read()
     # stays store-free (plain parquet I/O)
-    from ..sinks.txlog import LocalLogStore
     return LocalLogStore().list_versions(log_dir)
 
 
 def _read_commit(log_dir: str, version: int) -> dict:
-    from ..sinks.txlog import LocalLogStore
-    return LocalLogStore().read(
-        os.path.join(log_dir, f"{version:020d}.json"))
-
-
-def _replay_live(log_dir: str, upto: int) -> list[dict]:
-    """The live add-set at ``upto``, replayed from plain commit JSONs
-    (last-add-wins per path, removes drop) — the session-free twin of
-    TxTable._replay for the initial-snapshot bootstrap."""
-    live: dict[str, dict] = {}
-    for v in range(1, upto + 1):
-        commit = _read_commit(log_dir, v)
-        if commit.get("op") in ("overwrite", "create", "restore"):
-            live = {}
-        # removes BEFORE adds — matching TxTable._replay exactly, so a
-        # path listed in both resolves to the add (restore() documents
-        # relying on this 'add wins' property)
-        for path in commit.get("remove") or []:
-            live.pop(path, None)
-        for a in commit.get("add") or []:
-            live[a["path"]] = a
-    return list(live.values())
+    return LocalLogStore().read(log_path(log_dir, version))
 
 
 def _arrow_type(dt):
@@ -206,14 +190,18 @@ class _TxLogReaderCore:
             raise ValueError(f"txlog {kind}: unknown mode "
                              f"{self.mode!r} (expected 'append' or 'cdc')")
 
-    def _snapshot_partitions(self, v: int) -> "list[_FilePartition]":
-        """The DV-applied live file set at version ``v`` as partitions
-        (merge-on-read applied executor-side via drop_refs)."""
+    def _snapshot_partitions(self, v: int, kind: str = "insert",
+                             version: int | None = None
+                             ) -> "list[_FilePartition]":
+        """The DV-applied live file set at version ``v`` as ``kind``
+        partitions stamped with ``version`` (default ``v``) —
+        merge-on-read applied executor-side via drop_refs."""
         parts = []
-        for a in _replay_live(self.log_dir, v):
+        for a in replay(LocalLogStore(), self.log_dir, v).adds():
             refs = a.get("dv", {}).get("refs") or None
             parts.append(_FilePartition(
-                os.path.join(self.table_path, a["path"]), "insert", v,
+                os.path.join(self.table_path, a["path"]), kind,
+                v if version is None else version,
                 drop_refs=[os.path.join(self.table_path, r)
                            for r in refs] if refs else None))
         return parts
@@ -273,13 +261,7 @@ class _TxLogReaderCore:
             # whole-file replacement): every pre-commit live row is a
             # delete (DV-applied — merge-on-read-deleted rows were already
             # gone), every added file an insert
-            parts = []
-            for a in _replay_live(self.log_dir, v - 1):
-                refs = a.get("dv", {}).get("refs") or None
-                parts.append(_FilePartition(
-                    os.path.join(self.table_path, a["path"]), "delete", v,
-                    drop_refs=[os.path.join(self.table_path, r)
-                               for r in refs] if refs else None))
+            parts = self._snapshot_partitions(v - 1, "delete", v)
             parts += [_FilePartition(
                 os.path.join(self.table_path, a["path"]), "insert", v)
                 for a in adds]
@@ -495,41 +477,26 @@ class TxLogStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("txlog source requires a table path")
-        log_dir = os.path.join(path.rstrip("/"), _LOG_DIR)
-        versions = _list_versions(log_dir)
-        if not versions:
-            raise FileNotFoundError(f"no TxTable commit log at {log_dir}")
-        if "versionasof" in self.options:
-            # time-travel batch read: that version's schema, not today's
-            v_as_of = int(self.options["versionasof"])
-            versions = [v for v in versions if v <= v_as_of]
-            if not versions:
-                raise ValueError(f"versionAsOf={v_as_of} predates the "
-                                 f"commit log at {log_dir}")
-        # newest commit carrying a schema wins (every commit records one).
+        # time-travel batch read: that version's schema, not today's
+        v_as_of = self.options.get("versionasof")
+        recorded = replay(LocalLogStore(),
+                          os.path.join(path.rstrip("/"), _LOG_DIR),
+                          None if v_as_of is None else int(v_as_of)).struct()
         # All fields served nullable: files written before a column was
         # added NULL-fill it, and old logs (pre-r11) may carry widened
         # columns recorded non-nullable from a lit() frame.
-        from pyspark.sql.types import StructField
-        cdc = str(self.options.get("mode", "append")).lower() == "cdc"
-        for v in reversed(versions):
-            commit = _read_commit(log_dir, v)
-            if commit.get("schema"):
-                recorded = StructType.fromJson(json.loads(commit["schema"]))
-                fields = [StructField(f.name, f.dataType, nullable=True,
-                                      metadata=f.metadata)
-                          for f in recorded.fields]
-                if cdc:
-                    taken = [f.name for f in fields if f.name in _CDC_COLS]
-                    if taken:
-                        raise ValueError(
-                            f"cdc mode reserves column names {_CDC_COLS}; "
-                            f"the table already has {taken}")
-                    fields += [StructField("_change", StringType(), False),
-                               StructField("_commit_version", LongType(),
-                                           False)]
-                return StructType(fields)
-        raise ValueError(f"no schema recorded in the commit log at {log_dir}")
+        fields = [StructField(f.name, f.dataType, nullable=True,
+                              metadata=f.metadata)
+                  for f in recorded.fields]
+        if str(self.options.get("mode", "append")).lower() == "cdc":
+            taken = [f.name for f in fields if f.name in _CDC_COLS]
+            if taken:
+                raise ValueError(
+                    f"cdc mode reserves column names {_CDC_COLS}; "
+                    f"the table already has {taken}")
+            fields += [StructField("_change", StringType(), False),
+                       StructField("_commit_version", LongType(), False)]
+        return StructType(fields)
 
     def streamReader(self, schema: StructType) -> TxLogStreamReader:
         return TxLogStreamReader(schema, dict(self.options))

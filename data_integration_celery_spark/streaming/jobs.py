@@ -97,13 +97,15 @@ def txlog_sink(stream: DataFrame, path: str, keys: list[str] | None,
 
     The checkpoint gives at-least-once batch replay; the table's ``txn``
     stamp (app_id, batch_id) turns the replay into exactly-once — a
-    restarted query re-emitting an already-committed micro-batch hits
-    ``last_txn(app_id) >= batch_id`` and commits nothing (the public
-    idempotent-writer design Delta documents for its streaming sink). With
-    ``keys`` each batch is a last-write-wins MERGE commit; ``keys=None``
-    is a pure append stream — the case where replay WOULD duplicate rows
-    without the txn stamp (plain-parquet upsert replay is only idempotent
-    because the merge is; appends have no such luck).
+    restarted query re-emitting an already-committed micro-batch finds
+    batch_id at or below the app's mark in the table's replayed state and
+    writes and commits nothing (the public idempotent-writer design Delta
+    documents for its streaming sink). With ``keys`` each batch is a
+    last-write-wins MERGE commit, and an empty batch (e.g. a watermark-only
+    trigger) commits nothing; ``keys=None`` is a pure append stream — the
+    case where replay WOULD duplicate rows without the txn stamp
+    (plain-parquet upsert replay is only idempotent because the merge is;
+    appends have no such luck).
 
     ``mode="delete"`` turns the stream into a RETRACTION feed: each
     micro-batch carries key tuples to erase, applied as a merge-on-read

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from data_integration_celery_spark.operators.upsert import upsert_frames
 from data_integration_celery_spark.sinks.txlog import (
-    ConflictError, LocalLogStore, TxTable)
+    ConflictError, LocalLogStore, TxTable, replay)
 
 
 @pytest.fixture()
@@ -364,6 +364,21 @@ def test_txn_merge_replay_is_noop(spark, sf_dir, tdir):
     assert t.merge_upsert(upd, keys=["o_orderkey"],
                           txn={"app_id": "m", "batch_id": 7}) == v
     assert len(t.history()) == 2  # create + one merge; replay left no commit
+
+
+@pytest.mark.parametrize("stats_cols", [["o_orderkey"], []])
+def test_empty_merge_writes_and_commits_nothing(spark, sf_dir, tdir,
+                                                stats_cols):
+    """A merge of zero update rows (a watermark-only micro-batch) must not
+    rewrite the table or burn a commit — with or without a prune column."""
+    t = TxTable(spark, tdir, batch_partitions=4)
+    src = _orders(spark, sf_dir).limit(100)
+    t.create(src, stats_cols=stats_cols)
+    live = t.live_files()
+    assert t.merge_upsert(src.limit(0), keys=["o_orderkey"],
+                          txn={"app_id": "m", "batch_id": 0}) == 1
+    assert t.latest_version() == 1
+    assert t.live_files() == live
 
 
 def test_snapshot_prune_skips_files(spark, sf_dir, tdir):
@@ -719,7 +734,7 @@ def test_zorder_compact_persists_widened_stats_cols(spark, sf_dir, tdir):
     assert all({"o_orderkey", "o_custkey"} <= set(a["stats"])
                for a in appended)
     # and the merge prune key is STILL the original first stats col
-    assert t._stats_cols({})[0] == "o_orderkey"
+    assert t._state().stats_cols[0] == "o_orderkey"
 
 
 def test_merge_reserved_order_col_preserves_user_batch_id(spark, sf_dir, tdir):
@@ -791,6 +806,99 @@ def test_last_txn_resumes_from_checkpoint(spark, sf_dir, tdir):
     assert t.snapshot().count() == 30
 
 
+# ------------------------------------ one replay: checkpoints, store calls
+
+
+class _NoCheckpointStore(LocalLogStore):
+    """Replays as if the table had ``checkpoint_interval=0``."""
+
+    def list_versions(self, log_dir, suffix=".json"):
+        return super().list_versions(log_dir) if suffix == ".json" else []
+
+
+def test_checkpointed_replay_equals_full_replay(spark, sf_dir, tdir):
+    """At every version of a table whose history crosses every kind of
+    commit, replay resumed from checkpoints equals replay from version 1
+    in every state field, and the txlog source's snapshot equals
+    TxTable.snapshot."""
+    from data_integration_celery_spark.sources.txlog_stream import (
+        read_txlog_snapshot)
+
+    t = TxTable(spark, tdir, batch_partitions=2, checkpoint_interval=2)
+    src = _orders(spark, sf_dir).limit(40)
+    fresh = src.withColumn("o_orderkey", F.col("o_orderkey") + 100000)
+    t.create(src, stats_cols=["o_orderkey"])                              # v1
+    t.append(fresh, txn={"app_id": "a", "batch_id": 0})                   # v2
+    t.merge_upsert(src.limit(10).withColumn("o_orderstatus", F.lit("R")),
+                   keys=["o_orderkey"], txn={"app_id": "m", "batch_id": 0})
+    t.add_constraint("price_pos", "o_totalprice > 0")                     # v4
+    t.set_change_data_feed(True)                                          # v5
+    t.merge_upsert(src.limit(5).withColumn("o_orderstatus", F.lit("S")),
+                   keys=["o_orderkey"], txn={"app_id": "m", "batch_id": 1})
+    t.delete_where(F.col("o_orderkey") % 3 == 0)                          # v7
+    t.append(fresh.withColumn("o_orderkey", F.col("o_orderkey") + 1000),
+             txn={"app_id": "a", "batch_id": 1})                          # v8
+    t.compact(target_files=2)                                             # v9
+    t.restore(7)                                                          # v10
+    assert t.latest_version() == 10
+    assert len(glob.glob(os.path.join(tdir, "_txlog",
+                                      "*.checkpoint.json"))) == 5
+    final = replay(LocalLogStore(), t.log_dir)
+    assert final.txns == {"a": 1, "m": 1}
+    assert final.constraints == {"price_pos": "o_totalprice > 0"}
+    assert final.cdf is True and final.stats_cols == ["o_orderkey"]
+    for v in range(1, 11):
+        resumed = replay(LocalLogStore(), t.log_dir, v)
+        assert resumed == replay(_NoCheckpointStore(), t.log_dir, v), v
+        want = t.snapshot(version=v)
+        got = read_txlog_snapshot(spark, tdir, version=v)
+        assert _rows(got.select(*want.columns)) == _rows(want), v
+
+
+class _CountingStore(LocalLogStore):
+    """Counts log-file reads (by file name) and log listings."""
+
+    def __init__(self):
+        self.reads: dict[str, int] = {}
+        self.listings = 0
+
+    def read(self, path):
+        name = os.path.basename(path)
+        self.reads[name] = self.reads.get(name, 0) + 1
+        return super().read(path)
+
+    def list_versions(self, log_dir, suffix=".json"):
+        self.listings += 1
+        return super().list_versions(log_dir, suffix)
+
+
+@pytest.mark.parametrize("interval", [20, 5])
+def test_txn_merge_reads_each_commit_once(spark, sf_dir, tdir, interval):
+    """One txn-stamped merge on a 13-commit table folds the log once: every
+    commit past the newest checkpoint is read at most once, nothing older
+    is read, and the log is listed a constant number of times."""
+    t = TxTable(spark, tdir, checkpoint_interval=interval)
+    src = _orders(spark, sf_dir).limit(10)
+    t.create(src, stats_cols=["o_orderkey"])
+    for b in range(12):
+        t.append(src.withColumn("o_orderkey",
+                                F.col("o_orderkey") + 1000 * (b + 1)),
+                 txn={"app_id": "s", "batch_id": b})
+    newest_ckpt = 13 // interval * interval
+    store = _CountingStore()
+    counted = TxTable(spark, tdir, store=store, checkpoint_interval=interval)
+    assert counted.merge_upsert(
+        src.withColumn("o_orderstatus", F.lit("R")), keys=["o_orderkey"],
+        txn={"app_id": "m", "batch_id": 0}) == 14
+    commits = {n: c for n, c in store.reads.items()
+               if not n.endswith(".checkpoint.json")}
+    assert all(c == 1 for c in commits.values()), commits
+    assert sorted(commits) == [f"{v:020d}.json"
+                               for v in range(newest_ckpt + 1, 14)]
+    assert sum(store.reads.values()) - len(commits) == (newest_ckpt > 0)
+    assert store.listings <= 3
+
+
 # ------------------------------------------- lost put_if_absent races (r9)
 
 
@@ -854,19 +962,19 @@ def test_changes_rejects_reversed_range(spark, sf_dir, tdir):
 
 
 def test_stats_cols_survive_replay_without_history_scan(spark, sf_dir, tdir):
-    """Append commits carry 'schema' but not 'stats_cols'; _replay must
-    preserve the carried stats_cols so _stats_cols never falls back to the
-    O(table-age) full-history scan."""
+    """Append commits carry 'schema' but not 'stats_cols'; replay must
+    carry the create's stats_cols forward in the table state, never
+    falling back to the O(table-age) full-history scan."""
     t = TxTable(spark, tdir)
     src = _orders(spark, sf_dir).limit(10)
     t.create(src, stats_cols=["o_orderkey"])
     t.append(src)
     t.append(src)
-    _, meta, _ = t._replay()
-    assert meta.get("stats_cols") == ["o_orderkey"]
+    st = t._state()
+    assert st.stats_cols == ["o_orderkey"]
     t.history = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("O(table-age) history() fallback was used"))
-    assert t._stats_cols(meta) == ["o_orderkey"]
+    assert t._state().stats_cols == ["o_orderkey"]
 
 
 # --------------------------------------------- HadoopLogStore (r9, VERDICT 3)
@@ -1183,19 +1291,19 @@ def test_hadoop_store_uri_root_full_cycle(spark, sf_dir, tdir):
 
 
 def test_bloomless_tables_never_scan_history_for_spec(spark, sf_dir, tdir):
-    """_bloom_spec runs on every append/merge; a table created WITHOUT
-    bloom_cols must resolve the (null) spec from replay meta, never the
-    O(table-age) history fallback."""
+    """Every append/merge reads the bloom spec; a table created WITHOUT
+    bloom_cols must resolve the (null) spec from the replayed state, never
+    the O(table-age) history fallback."""
     t = TxTable(spark, tdir)
     src = _orders(spark, sf_dir).limit(20)
     t.create(src)
     t.append(src)
-    _, meta, _ = t._replay()
-    assert "bloom" in meta and meta["bloom"] is None
+    st = t._state()
+    assert st.bloom is None
     t.history = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("history() fallback used for bloom spec"))
-    assert t._bloom_spec(meta) is None
-    assert t._stats_cols(meta) == []
+    assert t._state().bloom is None
+    assert t._state().stats_cols == []
 
 
 # ----------------------- conditional-PUT object store (r10, VERDICT r9 #3)
