@@ -2,18 +2,23 @@
 
 The reference merges two vendors' views of the same instrument-day with a rule
 dictionary ``{out_col: (dtype, kernel, kwargs)}`` applied **row by row in
-Python** (``merge_data``, /root/reference tasks/merge/__init__.py:20-95; rule
+Python** (``merge_data``, reference tasks/merge/__init__.py:20-95; rule
 tables tasks/merge/stock.py:52-66,121-169). That is O(rows × cols) interpreted
 Python — the single hottest path in the reference.
 
 Here every kernel is a Catalyst Column expression, so the whole merge is one
 whole-stage-codegen projection over the joined frame: no Python in the loop,
 same semantics (including the NaN/None matrix and the tolerance warning).
+``compile_rule_table`` is the one compiler of a rule table into output
+columns and conflict flags (``conflict_audit`` builds the side-output); every
+merge front end only builds its joined frame and calls it.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Mapping
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -138,6 +143,53 @@ KERNELS = {
 }
 
 
+_NON_NUMERIC = ("string", "date", "timestamp", "boolean", "binary")
+
+
+def compile_rule_table(
+    rules: Mapping[str, tuple[str, str, Mapping, float | None]],
+) -> tuple[dict[str, Column], dict[str, Column]]:
+    """The one rule-table compiler behind every cross-vendor merge.
+
+    ``rules``: {out_col: (dtype, kernel_name, sources, tolerance)} where
+    ``sources`` names columns on the joined frame: {'left', 'right'}, or
+    {'col'} for the single-source get_value. Returns (outputs, flags):
+    ``outputs`` maps each out_col to its kernel cast to dtype and aliased;
+    ``flags`` maps ``{out}_conflict`` to the tolerance check of every
+    toleranced mean_value rule. The reference's prefer_* kernels accept but
+    ignore the accuracy field (tasks/merge/__init__.py:21-37), so they flag
+    nothing.
+    """
+    outputs: dict[str, Column] = {}
+    flags: dict[str, Column] = {}
+    for out, (dtype, kernel, src, tol) in rules.items():
+        if kernel in ("prefer_left", "prefer_right") and dtype in _NON_NUMERIC:
+            # the numeric kernels NaN-probe via isnan(cast('double')), which
+            # does not analyze for these types; NaN is impossible there
+            # anyway, so the plain-coalesce variants apply
+            kernel = kernel + "_any"
+        if kernel == "get_value":
+            expr = get_value(F.col(src["col"]))
+        else:
+            l, r = F.col(src["left"]), F.col(src["right"])
+            expr = KERNELS[kernel](l, r)
+            if kernel == "mean_value" and tol is not None:
+                flags[f"{out}_conflict"] = mean_value_warning(l, r, tol)
+        outputs[out] = expr.cast(dtype).alias(out)
+    return outputs, flags
+
+
+def conflict_audit(joined: DataFrame, key_cols: list[Column | str],
+                   flags: Mapping[str, Column]) -> DataFrame | None:
+    """The tolerance side-output: ``key_cols`` plus every flag, filtered to
+    rows where any flag fired (the reference logged warnings; we emit an
+    audit table). None when no rule carries a flag."""
+    if not flags:
+        return None
+    flagged = joined.select(*key_cols, *[c.alias(n) for n, c in flags.items()])
+    return flagged.where(reduce(operator.or_, map(F.col, flags)))
+
+
 def compile_merge_rules(
     joined: DataFrame,
     rules: Mapping[str, tuple[str, str, Mapping]],
@@ -150,21 +202,6 @@ def compile_merge_rules(
     The whole merge becomes a single codegen'd projection — the Spark-first
     replacement for the row-wise ``merge_data`` interpreter.
     """
-    cols: list[Column] = [F.col(c) if isinstance(c, str) else c
-                          for c in (key_cols or [])]
-    non_numeric = ("string", "date", "timestamp", "boolean", "binary")
-    for out, (dtype, kernel, kw) in rules.items():
-        if kernel in ("prefer_left", "prefer_right") and dtype in non_numeric:
-            # the numeric kernels NaN-probe via isnan(cast('double')),
-            # which does not analyze for these types; NaN is impossible
-            # there anyway, so plain-coalesce variants apply (the same
-            # dispatch merge_stock_daily does — it belongs in the shared
-            # compiler, not in one caller)
-            kernel = kernel + "_any"
-        fn = KERNELS[kernel]
-        if kernel == "get_value":
-            expr = fn(F.col(kw["col"]))
-        else:
-            expr = fn(F.col(kw["left"]), F.col(kw["right"]))
-        cols.append(expr.cast(dtype).alias(out))
-    return joined.select(*cols)
+    outputs, _ = compile_rule_table(
+        {out: (*rule, None) for out, rule in rules.items()})
+    return joined.select(*(key_cols or []), *outputs.values())

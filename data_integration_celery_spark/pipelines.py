@@ -1,11 +1,11 @@
 """Reference-fidelity pipeline definitions.
 
 These assemble the operator library into the reference's actual jobs, with
-the real rule tables. The column sets mirror the canonical merged tables
-(/root/reference tasks/merge/stock.py:52-66,121-176 for stock,
-tasks/merge/future.py:43-75 for futures); kernels and tolerances follow the
-reference's rule dicts. One codegen'd projection replaces the row-wise
-``merge_data`` interpreter.
+the real rule tables. The stock merge's columns, kernels and tolerances
+transcribe the reference's rule dict (tasks/merge/stock.py:52-66,121-176).
+Both merge entry points only build their joined frame; the one rule-table
+compiler (``merge_kernels.compile_rule_table``) turns the rules into a single
+codegen'd projection, replacing the row-wise ``merge_data`` interpreter.
 """
 
 from __future__ import annotations
@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 from .functions import merge_kernels as mk
 
-# merged stock daily rule table — {out_col: (dtype, kernel, tolerance)}
-# mirrors tasks/merge/stock.py:121-169: prices mean_value with 0.01-0.5
-# tolerances, volumes prefer_left, labels max_up_or_down.
+# example rule table for same-name vendor columns (merge_vendor_daily's
+# default) — {out_col: (dtype, kernel, tolerance)}: prices mean_value with
+# 0.01-0.5 tolerances, volumes prefer_left, labels max_up_or_down. Not the
+# reference's table; that is STOCK_DAILY_FULL_RULES below.
 STOCK_DAILY_RULES: dict[str, tuple[str, str, float | None]] = {
     "open": ("double", "mean_value", 0.5),
     "high": ("double", "mean_value", 0.5),
@@ -45,40 +46,22 @@ def merge_vendor_daily(left: DataFrame, right: DataFrame,
     conflicts is the tolerance side-output (the reference logged warnings;
     we emit an audit table).
     """
-    lcols = set(left.columns)
-    rcols = set(right.columns)
-    j = (left.alias("l").join(right.alias("r"), key_cols, "full_outer"))
-
-    out_cols: list = [F.col(k) for k in key_cols]
-    conflict_cols: dict[str, object] = {}
+    j = left.alias("l").join(right.alias("r"), key_cols, "full_outer")
+    # the (dtype, kernel, tol) shorthand → the compiler's one format: the
+    # same column on l./r., or get_value from whichever side has it
+    cols = {"l": set(left.columns), "r": set(right.columns)}
+    table = {}
     for out, (dtype, kernel, tol) in rules.items():
-        in_l, in_r = out in lcols, out in rcols
-        if not (in_l or in_r):
-            continue
-        if in_l and in_r:
-            l, r = F.col(f"l.{out}"), F.col(f"r.{out}")
-            expr = mk.KERNELS[kernel](l, r)
-            # conflict audit applies to mean_value rules only: the
-            # reference's prefer_* kernels ignore the accuracy field, so a
-            # toleranced prefer_left row must not emit warnings the
-            # reference never logs (same condition as merge_stock_daily)
-            if kernel == "mean_value" and tol is not None and audit:
-                conflict_cols[f"{out}_conflict"] = mk.mean_value_warning(l, r, tol)
-        else:
-            expr = F.col(f"l.{out}") if in_l else F.col(f"r.{out}")
-        out_cols.append(expr.cast(dtype).alias(out))
-
-    merged = j.select(*out_cols)
-    conflicts = None
-    if audit and conflict_cols:
-        flagged = j.select(*[F.col(k) for k in key_cols],
-                           *[c.alias(name) for name, c in conflict_cols.items()])
-        any_conflict = None
-        for name in conflict_cols:
-            col = F.col(name)
-            any_conflict = col if any_conflict is None else (any_conflict | col)
-        conflicts = flagged.where(any_conflict)
-    return merged, conflicts
+        sides = [side for side, names in cols.items() if out in names]
+        if len(sides) == 2:
+            src = {"left": f"l.{out}", "right": f"r.{out}"}
+            table[out] = (dtype, kernel, src, tol)
+        elif sides:
+            table[out] = (dtype, "get_value", {"col": f"{sides[0]}.{out}"}, None)
+    outputs, flags = mk.compile_rule_table(table)
+    keys = [F.col(k) for k in key_cols]
+    merged = j.select(*keys, *outputs.values())
+    return merged, mk.conflict_audit(j, keys, flags) if audit else None
 
 
 # Full-fidelity merge_stock_daily rule table — a 1:1 transcription of the
@@ -104,7 +87,7 @@ STOCK_DAILY_FULL_RULES: dict[str, tuple[str, str, dict, float | None]] = {
             {"left": "low_x", "right": "low_y"}, 0.01),
     # wind close is unreliable per the reference's own TODO (stock.py:139)
     "close": ("double", "prefer_left",
-              {"left": "close_x", "right": "close_y"}, None),
+              {"left": "close_x", "right": "close_y"}, 0.01),
     "volume": ("double", "mean_value",
                {"left": "volume_x", "right": "volume_y"}, 1.0),
     "amount": ("double", "mean_value",
@@ -127,7 +110,7 @@ STOCK_DAILY_FULL_RULES: dict[str, tuple[str, str, dict, float | None]] = {
                           {"col": "free_float_shares"}, None),
     # ths pe_ttm keys on report date, wind on period — wind wins (stock.py:166)
     "pe_ttm": ("double", "prefer_right",
-               {"left": "ths_pe_ttm_stock", "right": "pe_ttm"}, None),
+               {"left": "ths_pe_ttm_stock", "right": "pe_ttm"}, 0.01),
     "pe": ("double", "get_value", {"col": "pe"}, None),
     "pb": ("double", "get_value", {"col": "pb"}, None),
     "ps": ("double", "get_value", {"col": "ps"}, None),
@@ -154,8 +137,8 @@ def merge_stock_daily(ifind: DataFrame, wind: DataFrame,
     plus ``indicator_column`` ∈ {both, left_only, right_only}; ``conflicts``
     has the merged key columns plus one boolean per toleranced mean_value
     rule, filtered to rows where any fired (None when ``audit=False`` or no
-    rule has a tolerance). At scale this is one shuffle (the join); the
-    projection and the conflict filter are map-side.
+    mean_value rule has a tolerance). At scale this is one shuffle (the
+    join); the projection and the conflict filter are map-side.
     """
     # provenance sentinels, not key-nullness: pandas' indicator is
     # merge-metadata-based, so an unmatched RIGHT row whose own join key is
@@ -172,38 +155,12 @@ def merge_stock_daily(ifind: DataFrame, wind: DataFrame,
                   .when(F.col("__from_left").isNull(), "right_only")
                   .otherwise("both").alias("indicator_column"))
 
-    out_cols: list = []
-    key_exprs: list = []
-    conflict_cols: dict[str, object] = {}
-    non_numeric = ("string", "date", "timestamp", "boolean", "binary")
-    for out, (dtype, kernel, src, tol) in rules.items():
-        if kernel in ("prefer_left", "prefer_right") and dtype in non_numeric:
-            kernel = kernel + "_any"  # NaN impossible; plain coalesce
-        fn = mk.KERNELS[kernel]
-        if kernel == "get_value":
-            expr = fn(F.col(src["col"]))
-        else:
-            l, r = F.col(src["left"]), F.col(src["right"])
-            expr = fn(l, r)
-            if (src["left"], src["right"]) in (tuple(zip(left_on, right_on))):
-                key_exprs.append(expr.cast(dtype).alias(out))
-            if kernel == "mean_value" and tol is not None and audit:
-                conflict_cols[f"{out}_conflict"] = \
-                    mk.mean_value_warning(l, r, tol)
-        out_cols.append(expr.cast(dtype).alias(out))
-
-    merged = joined.select(*out_cols, indicator)
-    conflicts = None
-    if audit and conflict_cols:
-        flagged = joined.select(
-            *key_exprs,
-            *[c.alias(name) for name, c in conflict_cols.items()])
-        any_conflict = None
-        for name in conflict_cols:
-            col = F.col(name)
-            any_conflict = col if any_conflict is None else (any_conflict | col)
-        conflicts = flagged.where(any_conflict)
-    return merged, conflicts
+    outputs, flags = mk.compile_rule_table(rules)
+    merged = joined.select(*outputs.values(), indicator)
+    key_pairs = list(zip(left_on, right_on))
+    keys = [outputs[out] for out, (_, _, src, _) in rules.items()
+            if (src.get("left"), src.get("right")) in key_pairs]
+    return merged, mk.conflict_audit(joined, keys, flags) if audit else None
 
 
 def materialize_continuous_selection(spark, cd: DataFrame, path: str) -> DataFrame:
