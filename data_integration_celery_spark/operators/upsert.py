@@ -131,6 +131,31 @@ def _rename(spark, src: str, dst: str) -> None:
 _STAGING, _BACKUP = "__staging", "__backup"
 
 
+def _publish(spark, df: DataFrame, path: str) -> None:
+    """Whole-table publish: stage → ``path``→backup → staging→``path`` → drop
+    backup → refresh. The one plain-parquet commit protocol (see
+    ``write_upsert``); ``recover_table`` heals a crash at any step."""
+    staging, backup = path + _STAGING, path + _BACKUP
+    df.write.mode("overwrite").parquet(staging)
+    if _exists(spark, path):
+        _rename(spark, path, backup)
+    _rename(spark, staging, path)
+    _hadoop_rm(spark, backup)
+    # the publish replaced every file under `path`: drop any cached listing
+    # so readers in this session don't chase renamed-away part files
+    spark.catalog.refreshByPath(path)
+
+
+def _first_batch(updates: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+    """The first write's rows: the PK invariant must hold from the first
+    batch, so duplicate keys collapse by the same last-write-wins rule the
+    merge applies (the reference's INSERT..ON DUPLICATE KEY UPDATE collapses
+    them by arrival order)."""
+    first = dedup_last(updates, keys, [order_col]) \
+        if order_col in updates.columns else updates.dropDuplicates(keys)
+    return first.drop(order_col)
+
+
 def recover_table(spark, path: str) -> str:
     """Heal an interrupted ``write_upsert`` commit. Returns the action taken.
 
@@ -189,30 +214,13 @@ def write_upsert(spark, updates: DataFrame, path: str, keys: list[str],
     """
     path = path.rstrip("/")
     recover_table(spark, path)
-    staging, backup = path + _STAGING, path + _BACKUP
     # branch on existence, not on read failure: a transient read error on an
-    # EXISTING table must propagate, not silently rename staging onto it
-    if not _exists(spark, path):
-        # First write: publish via staging+rename too, so a crashed initial
-        # load can never leave a partial table at the target path. The PK
-        # invariant must hold from the first batch — an initial frame with
-        # duplicate keys is deduped by the same last-write-wins rule the
-        # merge applies (the reference's INSERT..ON DUPLICATE KEY UPDATE
-        # collapses them by arrival order).
-        first = dedup_last(updates, keys, [order_col]) \
-            if order_col in updates.columns else updates.dropDuplicates(keys)
-        first.drop(order_col).write.mode("overwrite").parquet(staging)
-        _rename(spark, staging, path)
-        return
-    base = spark.read.parquet(path)
-    merged = upsert_frames(base, updates, keys, order_col)
-    merged.write.mode("overwrite").parquet(staging)
-    _rename(spark, path, backup)
-    _rename(spark, staging, path)
-    _hadoop_rm(spark, backup)
-    # the publish replaced every file under `path`: drop any cached listing
-    # so readers in this session don't chase renamed-away part files
-    spark.catalog.refreshByPath(path)
+    # EXISTING table must propagate, not silently rename staging onto it.
+    # The first write is published via staging+rename too, so a crashed
+    # initial load can never leave a partial table at the target path.
+    out = (upsert_frames(spark.read.parquet(path), updates, keys, order_col)
+           if _exists(spark, path) else _first_batch(updates, keys, order_col))
+    _publish(spark, out, path)
 
 
 def write_upsert_partitioned(spark, updates: DataFrame, path: str,
@@ -229,11 +237,14 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     Steps: (1) distinct partition values in ``updates`` (one driver row per
     touched partition — thousands at most); (2) partition-pruned scan of just
     those target partitions; (3) per-PK last-write-wins merge (one shuffle on
-    the PK, bounded to the touched slice); (4) dynamic partition overwrite of
-    exactly those partitions, staged through a temp dir because Spark refuses
-    an overwrite that reads its own input. ``partition_cols`` must be a prefix
-    of the PK semantics (a key never moves between partitions), else rows in
-    untouched partitions cannot be superseded.
+    the PK, bounded to the touched slice); (4) ``overwrite_partitions`` of
+    the merged slice straight onto ``path`` — a dynamic overwrite may read
+    its own target, because Spark writes into ``.spark-staging-<job>`` and
+    swaps exactly the touched partition directories only at job commit, so
+    no staging copy is needed and a failed job leaves the table as it was.
+    ``partition_cols`` must be a prefix of the PK semantics (a key never
+    moves between partitions), else rows in untouched partitions cannot be
+    superseded.
     """
     # branch on existence, not on read failure (the write_upsert rule): a
     # transient read error on an EXISTING table must propagate — the old
@@ -241,12 +252,9 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     # every touched partition with ONLY the update rows and destroying the
     # base rows whose keys were not in the batch
     if not _exists(spark, path):
-        first = dedup_last(updates, keys, [order_col]) \
-            if order_col in updates.columns \
-            else updates.dropDuplicates(keys)
-        overwrite_partitions(first.drop(order_col), path, partition_cols)
+        overwrite_partitions(_first_batch(updates, keys, order_col), path,
+                             partition_cols)
         return
-    base = spark.read.parquet(path)
     touched = updates.select(*partition_cols).distinct().collect()
     pred = F.lit(False)
     for row in touched:
@@ -254,17 +262,9 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
         for c in partition_cols:
             match = match & F.col(c).eqNullSafe(F.lit(row[c]))
         pred = pred | match
-    base_slice = base.where(pred)
+    base_slice = spark.read.parquet(path).where(pred)
     merged = upsert_frames(base_slice, updates, keys, order_col)
-    tmp = path.rstrip("/") + "__stage"
-    merged.write.mode("overwrite").parquet(tmp)
-    staged = spark.read.parquet(tmp)
-    overwrite_partitions(staged, path, partition_cols)
-    _hadoop_rm(spark, tmp)
-    # same reason as write_upsert: the overwrite replaced the touched
-    # partitions' files — drop any cached listing so readers in this
-    # session don't chase renamed-away part files
-    spark.catalog.refreshByPath(path)
+    overwrite_partitions(merged, path, partition_cols)
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -290,6 +290,9 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     a second execution of the upstream pipeline the way an up-front
     ``isEmpty()`` probe would cost); an existing table is never at risk —
     an empty dynamic overwrite replaces nothing.
+
+    Refreshes the session's cached listing of ``path`` afterwards, so
+    readers don't chase the replaced partitions' part files.
     """
     spark = df.sparkSession
     fresh = not _exists(spark, path)
@@ -300,6 +303,7 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
        .parquet(path))
     if fresh and not _has_parquet_files(spark, path):
         _hadoop_rm(spark, path)
+    spark.catalog.refreshByPath(path)
 
 
 def dedup_last(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:

@@ -10,6 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.upsert import (_exists, _fs, _publish, overwrite_partitions,
+                                recover_table)
+
 
 def export_per_key(df: DataFrame, path: str, key_col: str,
                    column_map: dict[str, str] | None = None,
@@ -52,8 +55,6 @@ def replicate_incremental(spark: SparkSession, source: DataFrame,
     / export_bars_jdbc, exercised end-to-end against embedded Derby in
     tests/test_jdbc_replication.py.
     """
-    from ..operators.upsert import _exists
-
     df = transform(source) if transform else source
     # branch on existence, not on read failure (the upsert rule): a
     # transient read error on an EXISTING target must propagate —
@@ -67,12 +68,6 @@ def replicate_incremental(spark: SparkSession, source: DataFrame,
     if current_max is not None:
         df = df.where(F.col(watermark_col) > F.lit(current_max))
     df.write.mode("append").parquet(target_path)
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
@@ -102,57 +97,41 @@ def compact_table(spark: SparkSession, path: str,
     bin-packing rewrite:
 
     - unpartitioned: repartition to ceil(total_bytes / target) files and
-      overwrite (staged through a temp dir — Spark refuses to overwrite its
-      own input);
-    - partitioned: repartition on the partition columns so each partition's
-      rows land in one task → one file per partition, rewritten via dynamic
-      partition overwrite (only partitions present in the data are touched,
-      so callers can compact a partition subset by filtering first).
+      publish by the ``write_upsert`` staging+backup rename protocol
+      (``upsert._publish`` — Spark refuses to overwrite its own input in
+      place), so a crash at any instant leaves a complete table at ``path``
+      or ``path__backup`` and ``recover_table`` heals it;
+    - partitioned: ``upsert.overwrite_partitions`` of the table onto itself —
+      each partition's rows land in one task → one file per partition,
+      swapped in per partition at job commit (same per-partition atomicity
+      caveat as any plain-parquet dynamic overwrite; run in the maintenance
+      window).
 
-    Returns the data-file count after compaction. The unpartitioned publish
-    uses the ``write_upsert`` staging+backup rename protocol, so a crash at
-    any instant leaves a complete table at ``path`` or ``path__backup`` and
-    ``recover_table`` heals it (the old delete-then-rename left a window
-    with NO table at ``path`` and the data parked in a temp dir no recovery
-    routine knew about). The partitioned branch rewrites via dynamic
-    partition overwrite — same per-partition atomicity caveat as any plain-
-    parquet dynamic overwrite; run in the maintenance window.
+    ``partition_cols`` defaults to the table's own hive layout (rewriting a
+    partitioned table flat would hide its files from the next partitioned
+    write); a list that differs from the layout raises ``ValueError``.
+    Returns the data-file count after compaction.
     """
-    from ..operators.upsert import (_BACKUP, _STAGING, _hadoop_rm, _rename,
-                                    recover_table)
+    path = path.rstrip("/")
     recover_table(spark, path)  # heal any interrupted earlier commit first
     files = list_data_files(spark, path)
-    total = sum(sz for _, sz in files)
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact"
-    if partition_cols:
-        # stage a verbatim copy first (Spark refuses to overwrite its own
-        # input), then bin-pack on the FINAL write — packing on the staged
-        # write would be undone by the re-read splitting big files back
-        # into maxPartitionBytes-sized tasks
-        df.write.mode("overwrite").parquet(tmp)
-        (spark.read.parquet(tmp)
-         .repartition(*[F.col(c) for c in partition_cols])
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(*partition_cols).parquet(path))
-        fs, jtmp = _fs(spark, tmp)
-        fs.delete(jtmp, True)
+    df = spark.read.parquet(path)  # raises on a table without data files
+    # hive layout = the `col=value` directories between the root and a file
+    fs, jroot = _fs(spark, path)
+    rel = files[0][0][len(fs.makeQualified(jroot).toString()):]
+    layout = [d.split("=", 1)[0] for d in rel.split("/")[1:-1]]
+    if partition_cols is not None and list(partition_cols) != layout:
+        raise ValueError(f"partition_cols {partition_cols} differ from the "
+                         f"table layout {layout} at {path}")
+    if layout:
+        overwrite_partitions(df, path, layout)
     else:
         # publish the staged layout by RENAME, not by read-back: a second
         # spark.read would re-split the freshly packed files at
-        # maxPartitionBytes (128m), silently discarding the target size,
-        # and would copy all data a second time. Publish order is the
-        # write_upsert protocol: stage → path→backup → staging→path →
-        # drop backup, so the table is ALWAYS present at path or backup.
+        # maxPartitionBytes (128m), silently discarding the target size
+        total = sum(sz for _, sz in files)
         n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-        base = path.rstrip("/")
-        staging, backup = base + _STAGING, base + _BACKUP
-        df.repartition(n).write.mode("overwrite").parquet(staging)
-        _rename(spark, base, backup)
-        _rename(spark, staging, base)
-        _hadoop_rm(spark, backup)
-        spark.catalog.refreshByPath(path)
+        _publish(spark, df.repartition(n), path)
     return len(list_data_files(spark, path))
 
 

@@ -1,8 +1,11 @@
 """Driver-contract smoke tests."""
 
 import sys
+from pathlib import Path
 
 import __spark_entry__ as entrymod
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_entry_returns_rows(spark):
@@ -38,14 +41,14 @@ def test_registry_priority_order():
     assert names[:len(QUERY_PRIORITY)] == QUERY_PRIORITY
     # the gate-prefix size lives in ONE place (the stale tool) so the
     # report's IN-WINDOW annotation and this enforcement can never disagree
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     from check_correctness import WINDOW, stale_names
     first50 = set(names[:WINDOW])
 
     import __spark_entry__ as entry_mod
     osql = entry_mod.oracle_sql()
     banked = set()
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for f in glob.glob(str(ROOT / "CORRECTNESS_r*.json")):
         for name, row in json.load(open(f)).items():
             if row.get("hash_match"):
                 banked.add(name)

@@ -250,6 +250,33 @@ def test_compact_table_partitioned(spark, tmp_path):
     assert after == before
 
 
+def test_compact_table_keeps_partition_layout_by_default(spark, tmp_path):
+    """compact_table without partition_cols keeps a partitioned table's
+    hive layout. Rewriting it flat would put the next partitioned upsert's
+    ``dt=…`` directory beside the flat files, and reads would then see only
+    that directory. A partition_cols list that differs from the layout
+    raises."""
+    import pytest
+
+    from data_integration_celery_spark import sinks
+    from data_integration_celery_spark.operators import upsert
+
+    path = str(tmp_path / "bydt")
+    rows = (spark.range(20).withColumn("dt", F.col("id") % 2)
+            .withColumn("v", F.col("id") * 1.0))
+    upsert.write_upsert_partitioned(spark, rows, path, keys=["id"],
+                                    partition_cols=["dt"])
+    n_after = sinks.compact_table(spark, path)
+    upd = spark.createDataFrame([(0, 0, 99.0)], "id long, dt long, v double")
+    upsert.write_upsert_partitioned(spark, upd, path, keys=["id"],
+                                    partition_cols=["dt"])
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(got) == 20 and got[0] == 99.0
+    assert n_after == 2  # one file per date partition
+    with pytest.raises(ValueError, match="layout"):
+        sinks.compact_table(spark, path, partition_cols=["v"])
+
+
 def test_compact_table_honors_target_size(spark, tmp_path):
     """Bin-packing respects target_file_mb: a table larger than the target
     packs into ceil(total/target) files, each near the target size — not

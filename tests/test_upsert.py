@@ -5,6 +5,7 @@ insert N rows, upsert an overlapping batch, assert final values per PK."""
 import pytest
 from pyspark.sql import functions as F
 
+from data_integration_celery_spark import sinks
 from data_integration_celery_spark.operators import upsert
 
 
@@ -175,6 +176,42 @@ def test_partitioned_upsert_idempotent_replay(spark, tmp_path):
                                         keys=["code", "d"], partition_cols=["d"])
     got = {(r["code"], r["d"]): r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {("a", 1): 7.0, ("b", 2): 2.0}
+
+
+_PSCHEMA = "code string, dt int, v double"
+
+
+@pytest.mark.parametrize("publish", [
+    lambda spark, path: upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 9.0), ("c", 1, 3.0)], _PSCHEMA),
+        path, keys=["code"], partition_cols=["dt"]),
+    lambda spark, path: sinks.compact_table(spark, path, partition_cols=["dt"]),
+], ids=["write_upsert_partitioned", "compact_table"])
+def test_failed_partitioned_publish_leaves_nothing_behind(spark, tmp_path,
+                                                          monkeypatch,
+                                                          publish):
+    """A partitioned publish whose write onto the table fails leaves the
+    table's rows as they were and nothing beside it: the dynamic partition
+    overwrite is the only write, so no staging copy can be stranded."""
+    from pyspark.sql import DataFrameWriter
+
+    path = str(tmp_path / "t")
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 1.0), ("b", 2, 2.0)], _PSCHEMA),
+        path, keys=["code"], partition_cols=["dt"])
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    real = DataFrameWriter.parquet
+
+    def failing(self, target, *args, **kwargs):
+        if str(target).rstrip("/") == path:
+            raise RuntimeError("write onto the table failed")
+        return real(self, target, *args, **kwargs)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="onto the table failed"):
+        publish(spark, path)
+    monkeypatch.undo()
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert [p.name for p in tmp_path.iterdir()] == ["t"]
 
 
 def test_recover_noop_cleans_orphan_staging(spark, tmp_path):

@@ -18,13 +18,15 @@ query currently holds a top-50 (driver-checked) slot.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
 ONLY = [a for a in sys.argv[1:] if "/" not in a and not a.startswith("--")
@@ -49,7 +51,7 @@ def stale_names(n_rounds: int) -> list[tuple[int, str, int | None]]:
 
     last_green: dict[str, int] = {}
     rounds: list[int] = []
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", path).group(1))
         rounds.append(rnd)
         for name, res in json.load(open(path)).items():

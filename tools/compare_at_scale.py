@@ -22,14 +22,15 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 _args = sys.argv[1:]
 SCALED = _args.pop(0) if _args and "/" in _args[0] else "/tmp/scaled_sf1_x10"
 CAP = float(_args.pop(0)) if _args and _args[0].replace(".", "").isdigit() \
     else 120.0
 ONLY = list(_args)
-COMPARE_MD = "/root/repo/COMPARE.md"
+COMPARE_MD = os.path.join(ROOT, "COMPARE.md")
 BEGIN, END = "<!-- at-scale:begin -->", "<!-- at-scale:end -->"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()

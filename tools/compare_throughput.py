@@ -14,13 +14,15 @@ it) — capped rows report >420.
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 TABLES = ("region nation customer supplier part orders lineitem events "

@@ -17,7 +17,8 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from data_integration_celery_spark.queries import QUERIES  # noqa: E402
 from data_integration_celery_spark.session import get_spark  # noqa: E402

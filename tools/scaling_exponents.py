@@ -33,7 +33,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -145,7 +146,7 @@ def main() -> None:
                          "alpha_out — adjudicates alpha>1 as output growth "
                          "(alpha <= alpha_out: output-bound, fine) vs a "
                          "compute blowup (alpha >> alpha_out: investigate)")
-    ap.add_argument("--out", default="/root/repo/SCALE_EXPONENTS.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "SCALE_EXPONENTS.json"))
     args = ap.parse_args()
 
     from data_integration_celery_spark.queries import QUERIES
