@@ -3,10 +3,11 @@
 Reference: Celery chains ``a.s() | b.s()`` and groups ``group([...])``
 (/root/reference tasks/__init__.py:102-156, tasks/wind/__init__.py:33-66),
 beat cron for scheduling. Here a Job is a named callable taking the
-SparkSession; a Pipeline executes in topological waves — each wave's jobs are
-independent and run concurrently on their own Spark scheduler pools (Spark's
-scheduler is the parallelism layer; no process pools). A failed job skips its
-downstream subtree, matching Celery chain semantics.
+SparkSession; a Pipeline starts each job as soon as its own dependencies have
+succeeded, so independent jobs run concurrently on a driver thread pool and
+share Spark's FIFO scheduler (Spark is the parallelism layer; no process
+pools). A failed job skips its downstream subtree, matching Celery chain
+semantics.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from __future__ import annotations
 import time
 import traceback
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -36,7 +37,8 @@ class JobResult:
 
 
 class Pipeline:
-    """chain = dependency edge; group = jobs sharing a wave."""
+    """chain = dependency edge; group = jobs with no edge between them. A job
+    starts when its dependencies succeed and is skipped when one fails."""
 
     def __init__(self, jobs: list[Job], max_parallel: int = 4):
         self.jobs = {j.name: j for j in jobs}
@@ -50,48 +52,43 @@ class Pipeline:
 
     def run(self, spark: SparkSession) -> dict[str, JobResult]:
         results: dict[str, JobResult] = {}
-        done: set[str] = set()
-        failed: set[str] = set()
 
         def run_job(job: Job) -> JobResult:
-            t0 = time.time()
+            t0 = time.perf_counter()
             try:
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", job.name)
                 job.fn(spark)
-                return JobResult(job.name, True, time.time() - t0)
+                return JobResult(job.name, True, time.perf_counter() - t0)
             except Exception:
-                return JobResult(job.name, False, time.time() - t0,
+                return JobResult(job.name, False, time.perf_counter() - t0,
                                  traceback.format_exc())
 
-        pending = set(self.jobs)
+        waiting = list(self.jobs.values())
+        running = set()
         with ThreadPoolExecutor(max_workers=self.max_parallel) as pool:
-            while pending:
-                wave = [self.jobs[n] for n in pending
-                        if all(d in done for d in self.jobs[n].depends_on)]
-                if not wave:
-                    # distinguish TRANSITIVE downstream-of-failure from a
-                    # genuine dependency cycle — "some other job failed"
-                    # must not mask a cycle that would never run anyway
-                    def blocked_by_failure(name: str,
-                                           seen: frozenset = frozenset()
-                                           ) -> bool:
-                        for d in self.jobs[name].depends_on:
-                            if d in failed:
-                                return True
-                            if (d in pending and d not in seen
-                                    and blocked_by_failure(
-                                        d, seen | {name})):
-                                return True
-                        return False
-
-                    for n in sorted(pending):
-                        reason = ("skipped: upstream failed"
-                                  if blocked_by_failure(n)
-                                  else "dependency cycle")
-                        results[n] = JobResult(n, False, 0.0, reason)
+            while waiting or running:
+                still = []
+                for job in waiting:
+                    deps = [results.get(d) for d in job.depends_on]
+                    if any(r is not None and not r.ok for r in deps):
+                        # a skip is itself a failed result, so the skip
+                        # reaches the whole subtree over later passes
+                        results[job.name] = JobResult(
+                            job.name, False, 0.0, "skipped: upstream failed")
+                    elif all(r is not None for r in deps):
+                        running.add(pool.submit(run_job, job))
+                    else:
+                        still.append(job)
+                progressed, waiting = len(still) < len(waiting), still
+                if running:
+                    done, running = wait(running, return_when=FIRST_COMPLETED)
+                    for f in done:
+                        res = f.result()
+                        results[res.name] = res
+                elif not progressed:
+                    # nothing runs and nothing can start or be skipped:
+                    # every job left waits on a dependency cycle
+                    for job in waiting:
+                        results[job.name] = JobResult(
+                            job.name, False, 0.0, "dependency cycle")
                     break
-                for res in pool.map(run_job, wave):
-                    results[res.name] = res
-                    (done if res.ok else failed).add(res.name)
-                    pending.discard(res.name)
         return results

@@ -4,11 +4,11 @@ Reference: ``data_reorg_daily`` chains per-type continuous-contract rebuilds
 then the factor/adjusted exports (tasks/wind/future_reorg/reorg_md_2_db.py:
 405-408 drives the loop; tasks/wind/__init__.py:33-66 chains the jobs).
 Celery chain → Pipeline dependency edges; the fan-out of consumers after the
-stored selection → one wave of concurrent jobs.
+stored selection → concurrent jobs that all start when the selection lands.
 
 This is the materialized-intermediate shape end to end: the stateful
 selection (the only FlatMapGroupsInPandas in the whole DAG) runs in job 1
-and is published once, partitioned per instrument_type; every consumer wave
+and is published once, partitioned per instrument_type; every consumer job
 reads it back as a plain parquet scan.
 """
 
@@ -67,7 +67,7 @@ def selection_scoring_pipeline(sf_dir: str, workdir: str,
 
     Production layout = the model table bucketed by ``c1`` (the context
     gram — the key of BOTH scoring joins): ``write_bucketed`` pays the
-    model-side shuffle exactly once at publish time, so each scoring wave
+    model-side shuffle exactly once at publish time, so each scoring job
     joins the reloaded model with NO Exchange above the model scan — only
     the (corpus-proportional) document-bigram stream shuffles, the
     (model-proportional) side never does. Pinned executable:

@@ -1450,33 +1450,45 @@ class TxTable:
                 "DV row identity needs unique file basenames; duplicate "
                 "basenames found in the live set")
 
+    def _dv_counts(self, sidecar: str) -> dict[str, int]:
+        """Marked rows per file basename in one DV sidecar (bounded: one
+        row per affected file)."""
+        return {r["__file"]: int(r["n"]) for r in
+                self.spark.read.parquet(os.path.join(self.path, sidecar))
+                .groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
+                .collect()}
+
+    def _write_dv(self, matched: DataFrame, live: list[dict]
+                  ) -> tuple[str, int, list[dict]]:
+        """Write the matched (file, pos) rows as one DV sidecar. Returns the
+        sidecar path, the number of rows it marks, and the re-adds that
+        append it to each marked file's cumulative refs — none when nothing
+        matched (the orphan sidecar is vacuumable)."""
+        self._require_unique_basenames(live)
+        sidecar = f"{_DATA_DIR}/dv_{uuid.uuid4().hex}"
+        self._sized_for_write(matched, len(live)).write.parquet(
+            os.path.join(self.path, sidecar))
+        counts = self._dv_counts(sidecar)
+        readds = []
+        for a in live:
+            n = counts.get(os.path.basename(a["path"]))
+            if n:
+                old = a.get("dv") or {"refs": [], "rows": 0}
+                readds.append({**a, "dv": {"refs": old["refs"] + [sidecar],
+                                           "rows": old["rows"] + n}})
+        return sidecar, sum(counts.values()), readds
+
     def _commit_dv_delete(self, matched: DataFrame, st: TableState,
                           txn: dict | None) -> int:
         """Write the matched (file, pos) rows as a DV sidecar and commit the
         per-file cumulative refs. Returns the committed version, or the
         current one when nothing matched (no commit burned)."""
-        live = st.adds()
-        self._require_unique_basenames(live)
-        sidecar = f"{_DATA_DIR}/dv_{uuid.uuid4().hex}"
-        self._sized_for_write(matched, len(live)).write.parquet(
-            os.path.join(self.path, sidecar))
-        counts = {r["__file"]: r["n"] for r in
-                  self.spark.read.parquet(os.path.join(self.path, sidecar))
-                  .groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}  # bounded: one row per affected file
-        if not counts:
-            return st.version  # nothing matched; orphan sidecar is vacuumable
-        adds = []
-        for a in live:
-            n = counts.get(os.path.basename(a["path"]))
-            if n:
-                old = a.get("dv") or {"refs": [], "rows": 0}
-                adds.append({**a, "dv": {"refs": old["refs"] + [sidecar],
-                                         "rows": old["rows"] + int(n)}})
+        sidecar, n_rows, readds = self._write_dv(matched, st.adds())
+        if not n_rows:
+            return st.version
         return self._commit(
-            "delete", st, adds, [],
-            extra={"deleted_rows": int(sum(counts.values())),
-                   "dv_sidecars": [sidecar]},
+            "delete", st, readds, [],
+            extra={"deleted_rows": n_rows, "dv_sidecars": [sidecar]},
             txn=txn)
 
     @_idempotent
@@ -1510,27 +1522,22 @@ class TxTable:
             raise ValueError(f"update_where sets columns the table lacks: "
                              f"{unknown}")
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        self._require_unique_basenames(live)
         matched = (self._read_adds(live, schema, with_rowid=True)
                    .where(cond).select("__file", "__pos"))
-        sidecar = f"{_DATA_DIR}/dv_{uuid.uuid4().hex}"
-        self._sized_for_write(matched, len(live)).write.parquet(
-            os.path.join(self.path, sidecar))
-        dv = self.spark.read.parquet(os.path.join(self.path, sidecar))
-        counts = {r["__file"]: r["n"] for r in
-                  dv.groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}  # bounded: one row per affected file
-        if not counts:
-            return st.version  # nothing matched; orphan sidecar is vacuumable
+        sidecar, n_rows, dv_adds = self._write_dv(matched, live)
+        if not n_rows:
+            return st.version
         # rewritten rows come from the SAME sidecar (semi-join), so the
         # marked set and the re-inserted set cannot diverge; only the
         # files the sidecar actually references are re-scanned (the
         # matched-rows cost shape the docstring promises, not a second
-        # full table scan)
-        affected = [a for a in live
-                    if os.path.basename(a["path"]) in counts]
-        upd = (self._read_adds(affected, schema, with_rowid=True)
-               .join(dv.select("__file", "__pos"), ["__file", "__pos"],
+        # full table scan), read with their PRE-commit DV state from
+        # ``live`` — the re-adds already carry the new sidecar
+        marked = {a["path"] for a in dv_adds}
+        upd = (self._read_adds([a for a in live if a["path"] in marked],
+                               schema, with_rowid=True)
+               .join(self.spark.read.parquet(os.path.join(self.path, sidecar))
+                     .select("__file", "__pos"), ["__file", "__pos"],
                      "left_semi"))
         # simultaneous assignment (SQL UPDATE semantics): every set
         # expression evaluates against the ORIGINAL row, so
@@ -1548,17 +1555,9 @@ class TxTable:
         upd = upd.select(*out_cols)
         self._enforce(upd, st.constraints)
         new_adds = self._write_batch(upd, st.stats_cols, bloom=st.bloom)
-        dv_adds = []
-        for a in live:
-            n = counts.get(os.path.basename(a["path"]))
-            if n:
-                old = a.get("dv") or {"refs": [], "rows": 0}
-                dv_adds.append({**a, "dv": {"refs": old["refs"] + [sidecar],
-                                            "rows": old["rows"] + int(n)}})
         return self._commit(
             "update", st, new_adds + dv_adds, [],
-            extra={"updated_rows": int(sum(counts.values())),
-                   "dv_sidecars": [sidecar]},
+            extra={"updated_rows": n_rows, "dv_sidecars": [sidecar]},
             txn=txn)
 
     def changes(self, v_from: int, v_to: int | None = None,
@@ -1682,13 +1681,9 @@ class TxTable:
              .join(F.broadcast(names), "__file", "left_semi")
              .hint("rebalance")
              .write.parquet(os.path.join(self.path, sidecar)))
-        counts = {r["__file"]: r["n"] for r in
-                  self.spark.read.parquet(os.path.join(self.path, sidecar))
-                  .groupBy("__file").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}  # bounded: one row per DV-carrying file
-        adds = [{**a, "dv": {"refs": [sidecar],
-                             "rows": int(counts.get(
-                                 os.path.basename(a["path"]), 0))}}
+        counts = self._dv_counts(sidecar)
+        adds = [{**a, "dv": {"refs": [sidecar], "rows": counts.get(
+                    os.path.basename(a["path"]), 0)}}
                 for a in dv_files]
         return self._commit(
             "coalesce_dv", st, adds, [],

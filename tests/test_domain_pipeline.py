@@ -233,3 +233,48 @@ def test_pipeline_reports_dependency_cycle_distinctly(spark):
     assert results["d"].error == "skipped: upstream failed"
     assert results["b"].error == "dependency cycle"
     assert results["c"].error == "dependency cycle"
+
+
+def test_pipeline_job_starts_when_its_own_dependencies_finish(spark):
+    """``after_fast`` depends only on ``fast``: it must start while the
+    unrelated ``slow`` job still runs, not after it. ``slow`` waits for
+    ``after_fast`` to signal, so any barrier between unrelated jobs makes
+    it time out."""
+    import threading
+
+    signal = threading.Event()
+    seen = {}
+
+    def slow(s):
+        seen["slow"] = signal.wait(timeout=10)
+
+    results = Pipeline([
+        Job("slow", slow),
+        Job("fast", lambda s: None),
+        Job("after_fast", lambda s: signal.set(), depends_on=["fast"]),
+    ], max_parallel=3).run(spark)
+    assert all(r.ok for r in results.values()), results
+    assert seen["slow"]
+
+
+def test_pipeline_skip_is_transitive_and_spares_independent_jobs(spark):
+    """A failure skips its whole downstream chain — even when the chain is
+    listed before the failing job — while an unrelated job still runs."""
+    ran = []
+
+    def ok(name):
+        return lambda s: ran.append(name)
+
+    def boom(s):
+        raise RuntimeError("boom")
+
+    results = Pipeline([
+        Job("c", ok("c"), depends_on=["b"]),
+        Job("b", ok("b"), depends_on=["a"]),
+        Job("a", boom),
+        Job("x", ok("x")),
+    ], max_parallel=1).run(spark)
+    assert not results["a"].ok
+    assert results["b"].error == "skipped: upstream failed"
+    assert results["c"].error == "skipped: upstream failed"
+    assert results["x"].ok and ran == ["x"]
