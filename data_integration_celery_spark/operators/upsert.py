@@ -37,12 +37,20 @@ resolve conflicts with the same last-write-wins rule, tiebreaks included.
 
 from __future__ import annotations
 
+import json
+import os
+from datetime import date
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
+                               ShortType, StringType, StructField, StructType)
 
 
 def upsert_frames(base: DataFrame, updates: DataFrame, keys: list[str],
-                  order_col: str = "batch_id") -> DataFrame:
+                  order_col: str = "batch_id", *,
+                  _cluster_by: list[str] = ()) -> DataFrame:
     """UNION the snapshots and keep the newest row per PK.
 
     ``order_col`` must be comparable and present in both frames; the highest
@@ -59,16 +67,22 @@ def upsert_frames(base: DataFrame, updates: DataFrame, keys: list[str],
     wins. Replay-safe pipelines must either replay in order (the streaming
     sink's checkpoint guarantees this) or persist their own version column
     in the row payload.
+
+    ``_cluster_by`` (internal: ``write_upsert_partitioned``) hash-clusters
+    the union on these columns, which must be a function of ``keys``, and
+    ranks within them — the one exchange of a partition-scoped upsert.
     """
     return (
-        upsert_annotated(base, updates, keys, order_col)
+        upsert_annotated(base, updates, keys, order_col,
+                         _cluster_by=_cluster_by)
         .where(F.col("__rn") == 1)
         .drop("__rn", "__src", order_col)
     )
 
 
 def upsert_annotated(base: DataFrame, updates: DataFrame, keys: list[str],
-                     order_col: str = "batch_id") -> DataFrame:
+                     order_col: str = "batch_id", *,
+                     _cluster_by: list[str] = ()) -> DataFrame:
     """The merge kernel's ranked union, before the winners are filtered:
     ``base ∪ updates`` with ``__src`` (0 = base, 1 = updates) and ``__rn``
     (1 = the last-write-wins winner per PK, same tiebreak as
@@ -86,8 +100,12 @@ def upsert_annotated(base: DataFrame, updates: DataFrame, keys: list[str],
     base = base.withColumn("__src", F.lit(0))
     updates = updates.withColumn("__src", F.lit(1))
     unioned = base.unionByName(updates, allowMissingColumns=True)
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc(),
-                                          F.col("__src").desc())
+    if _cluster_by:
+        # a window over (cluster columns + keys) is satisfied by a hash
+        # partitioning on the cluster columns alone: no second exchange
+        unioned = unioned.repartition(*[F.col(c) for c in _cluster_by])
+    w = Window.partitionBy(*_cluster_by, *keys).orderBy(
+        F.col(order_col).desc(), F.col("__src").desc())
     return unioned.withColumn("__rn", F.row_number().over(w))
 
 
@@ -234,16 +252,29 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     reference's delete-then-insert per-slice refresh
     (tasks/wind/future_reorg/reorg_md_2_db.py:176-193).
 
-    Steps: (1) distinct partition values in ``updates`` (one driver row per
-    touched partition — thousands at most); (2) partition-pruned scan of just
-    those target partitions; (3) per-PK last-write-wins merge (one shuffle on
-    the PK, bounded to the touched slice); (4) ``overwrite_partitions`` of
-    the merged slice straight onto ``path`` — a dynamic overwrite may read
-    its own target, because Spark writes into ``.spark-staging-<job>`` and
-    swaps exactly the touched partition directories only at job commit, so
-    no staging copy is needed and a failed job leaves the table as it was.
-    ``partition_cols`` must be a prefix of the PK semantics (a key never
-    moves between partitions), else rows in untouched partitions cannot be
+    Steps:
+      1. distinct partition values in ``updates`` (one driver row per
+         touched partition — thousands at most);
+      2. the touched slice (``_touched_slice``): a listing of the table
+         root decides which touched partition directories exist, and only
+         those are read, with ``basePath`` and an explicit schema — data
+         columns from one file footer's Spark schema, partition columns
+         typed as in ``updates`` — so the table's other partitions are
+         never listed and nothing is inferred. Non-local tables, partition
+         types other than integral, string and date, and footers without
+         Spark's schema read the whole table and filter it, with the
+         partition columns still typed as in ``updates``;
+      3. per-PK last-write-wins merge over ONE exchange: the union is
+         hash-clustered on ``partition_cols`` and ranked by a window over
+         ``partition_cols + keys``;
+      4. the clustered merge is written with dynamic partition overwrite
+         straight onto ``path`` — no second repartition. A dynamic
+         overwrite may read its own target, because Spark writes into
+         ``.spark-staging-<job>`` and swaps exactly the touched partition
+         directories only at job commit, so no staging copy is needed and
+         a failed job leaves the table as it was.
+    ``partition_cols`` must be a function of the PK (a key never moves
+    between partitions), else rows in untouched partitions cannot be
     superseded.
     """
     # branch on existence, not on read failure (the write_upsert rule): a
@@ -255,16 +286,122 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
         overwrite_partitions(_first_batch(updates, keys, order_col), path,
                              partition_cols)
         return
+    parts = StructType([StructField(c, updates.schema[c].dataType, True)
+                        for c in partition_cols])
+    # Spark stores an empty string partition value as the default (null)
+    # partition and reads it back as null: merged as "", an update would
+    # not meet its base row there and the key would be stored twice
+    updates = updates.withColumns({
+        f.name: F.when(F.col(f.name) != "", F.col(f.name))
+        for f in parts.fields if f.dataType == StringType()})
     touched = updates.select(*partition_cols).distinct().collect()
-    pred = F.lit(False)
+    base_slice = _touched_slice(spark, path, parts, touched)
+    if base_slice is None:
+        # the partition columns take their types from `updates` here too:
+        # inferred, a string partition "001" would read back as int 1 and
+        # the merge would land in a new directory p=1/
+        data = [f for f in spark.read.parquet(path).schema.fields
+                if f.name not in partition_cols]
+        pred = F.lit(False)
+        for row in touched:
+            match = F.lit(True)
+            for c in partition_cols:
+                match = match & F.col(c).eqNullSafe(F.lit(row[c]))
+            pred = pred | match
+        base_slice = (spark.read.schema(StructType(data + parts.fields))
+                      .parquet(path).where(pred))
+    merged = upsert_frames(base_slice, updates, keys, order_col,
+                           _cluster_by=partition_cols)
+    _write_partitions(merged, path, partition_cols)
+
+
+# Spark's partition directory names (ExternalCatalogUtils): these characters
+# are written as %XX, and a null or empty value as the default partition
+_ESCAPED = frozenset([chr(c) for c in range(0x01, 0x20)]
+                     + list('"#%\'*/:=?\\\x7f{[]^'))
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in s)
+
+
+def _partition_dir(col: str, value) -> str:
+    """``col=value`` as Spark names the directory of an integral, string or
+    date partition value."""
+    text = "" if value is None else \
+        value.isoformat() if isinstance(value, date) else str(value)
+    return (f"{_escape_path_name(col)}="
+            f"{_escape_path_name(text) if text else _DEFAULT_PARTITION}")
+
+
+def _touched_slice(spark, path: str, parts: StructType,
+                   touched: list) -> DataFrame | None:
+    """The rows of the partitions ``touched`` names — exactly the
+    directories a dynamic overwrite of those values replaces — read with
+    no partition-discovery and no schema-inference job; None when the
+    table is not local, a partition type is not integral, string or date,
+    or the footer lacks Spark's schema (the caller then reads the whole
+    table).
+
+    Existence is decided from directory listings that RAISE on I/O error:
+    a touched partition wrongly taken as absent would be overwritten with
+    only the update rows."""
+    if urlparse(path).scheme not in ("", "file") or not all(
+            isinstance(f.dataType, (ByteType, ShortType, IntegerType,
+                                    LongType, DateType))
+            or f.dataType == StringType() for f in parts.fields):
+        return None
+    root = unquote(urlparse(path).path)
+    listings: dict[str, list[str]] = {}
+
+    def names(rel: str) -> list[str]:
+        if rel not in listings:
+            listings[rel] = sorted(os.listdir(os.path.join(root, rel)))
+        return listings[rel]
+
+    existing = []
     for row in touched:
-        match = F.lit(True)
-        for c in partition_cols:
-            match = match & F.col(c).eqNullSafe(F.lit(row[c]))
-        pred = pred | match
-    base_slice = spark.read.parquet(path).where(pred)
-    merged = upsert_frames(base_slice, updates, keys, order_col)
-    overwrite_partitions(merged, path, partition_cols)
+        rel = ""
+        for c in parts.names:
+            seg = _partition_dir(c, row[c])
+            if seg not in names(rel):
+                break
+            rel = os.path.join(rel, seg)
+        else:
+            existing.append(rel)
+    data = _footer_schema(root, existing[0] if existing else "",
+                          len(parts.names))
+    if data is None:
+        return None
+    schema = StructType([f for f in data.fields if f.name not in parts.names]
+                        + parts.fields)
+    if not existing:
+        return spark.createDataFrame([], schema)
+    return (spark.read.schema(schema).option("basePath", path)
+            .parquet(*[os.path.join(path, rel) for rel in existing]))
+
+
+def _footer_schema(root: str, rel: str, depth: int) -> StructType | None:
+    """The Spark schema recorded in the footer of the first data file under
+    ``root/rel`` (``depth`` directory levels below ``root``), or None."""
+    import pyarrow.parquet as pq
+
+    level = len(rel.split(os.sep)) if rel else 0
+    for name in sorted(os.listdir(os.path.join(root, rel))):
+        if name.startswith((".", "_")):
+            continue
+        if level < depth:
+            found = _footer_schema(root, os.path.join(rel, name), depth)
+            if found is not None:
+                return found
+            continue
+        meta = pq.read_metadata(os.path.join(root, rel, name)).metadata or {}
+        if _SPARK_SCHEMA_KEY not in meta:
+            return None
+        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -281,6 +418,16 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     update frame writes 32 small files into every touched date and the
     table needs ``sinks.compact_table`` immediately. Callers with a single
     huge partition value can pre-split by salting before the write.
+    """
+    _write_partitions(df.repartition(*[F.col(c) for c in partition_cols]),
+                      path, partition_cols)
+
+
+def _write_partitions(df: DataFrame, path: str,
+                      partition_cols: list[str]) -> None:
+    """The dynamic partition overwrite of ``df``, which must already be
+    hash-clustered on ``partition_cols`` (``overwrite_partitions``, or the
+    merge of ``write_upsert_partitioned``).
 
     A first-ever EMPTY write must not leave a ``_SUCCESS``-only directory:
     it passes ``_exists()`` but fails every later schema-inferring
@@ -296,8 +443,7 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     """
     spark = df.sparkSession
     fresh = not _exists(spark, path)
-    (df.repartition(*[F.col(c) for c in partition_cols])
-       .write.mode("overwrite")
+    (df.write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy(*partition_cols)
        .parquet(path))

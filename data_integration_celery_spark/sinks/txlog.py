@@ -68,11 +68,14 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import date
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ByteType, DateType, IntegerType, LongType, ShortType, StringType,
+    StructType)
 
 from data_integration_celery_spark.operators.upsert import (
     upsert_annotated, upsert_frames)
@@ -146,6 +149,67 @@ def _bloom_admits(entry: dict, positions: list[int]) -> bool:
     nwords = (entry["bits"] + 63) // 64
     dense = struct.unpack(f"<{nwords}q", base64.b64decode(entry["words"]))
     return all((dense[p >> 6] >> (p & 63)) & 1 for p in positions)
+
+
+# A write batch of at most this many rows (the footer row count of all its
+# files) gets its Bloom sidecars built on the driver; a larger one keeps the
+# Spark-job build. The driver reads one file's Bloom columns at a time and
+# hashes their distinct values serially (about 0.25 s per million hashes),
+# which beats a job launch only while the batch is small.
+_DRIVER_BLOOM_MAX_ROWS = 1 << 20
+# The date range over which the driver's "yyyy-MM-dd" text is Spark's cast
+# and a Spark-written date reads back without calendar rebasing.
+_DRIVER_BLOOM_DATES = (date(1582, 10, 15), date(9999, 12, 31))
+
+
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+
+
+def _kernel_kind(dtype) -> str | None:
+    """"str", "int" or "date" for a column type whose values the driver
+    stringifies exactly like Spark's ``cast(... as string)``; None for every
+    other type (the Bloom build and probe then take the Spark-job path)."""
+    if dtype == StringType():  # the default UTF8_BINARY collation only
+        return "str"
+    if type(dtype) in _INT_BITS:
+        return "int"
+    if isinstance(dtype, DateType):
+        return "date"
+    return None
+
+
+def _probe_text(value, dtype) -> str | None:
+    """The string Spark hashes for a Bloom probe of ``value`` against a
+    column of type ``dtype`` (``cast(try_cast(lit(value) as dtype) as
+    string)``), or None when the driver cannot prove it (the probe then
+    takes the Spark-job path)."""
+    if dtype is None:
+        kind = "str" if isinstance(value, str) else "int"
+    else:
+        kind = _kernel_kind(dtype)
+    if kind == "str":
+        return value if isinstance(value, str) else None
+    if kind == "int":
+        if type(value) is not int:  # a bool is an int to Python, not Spark
+            return None
+        half = 1 << (_INT_BITS[type(dtype)] - 1 if dtype else 63)
+        return str(value) if -half <= value < half else None
+    lo, hi = _DRIVER_BLOOM_DATES
+    if kind == "date" and type(value) is date and lo <= value <= hi:
+        return value.isoformat()  # (type check: a datetime is a date too)
+    return None
+
+
+def _kernel_positions(texts, bits: int, k: int):
+    """(k, n) Bloom positions of a pyarrow string array without nulls: the
+    driver form of ``_bloom_pos_exprs`` — ``xxhash64("__bf{i}:" + text)``
+    by the XXH64 kernel, ``pmod`` by ``bits`` on the signed hash."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from data_integration_celery_spark.functions.xxh64 import xxh64
+    return np.stack([xxh64(pc.binary_join_element_wise(f"__bf{i}:", texts, ""))
+                     % bits for i in range(k)])
 
 
 class LocalLogStore:
@@ -710,8 +774,9 @@ class TxTable:
             # false negatives); kept files may still miss it (bounded FPR),
             # so callers apply the real equality filter — same conservative
             # contract as the range prune. Files without a recorded filter
-            # for the column are kept. All probes across all columns and
-            # filter specs resolve through ONE local Spark job.
+            # for the column are kept. Probes of the column's own type hash
+            # on the driver; the rest, across all columns and filter specs,
+            # resolve through ONE local Spark job.
             dtypes = {f.name: f.dataType for f in schema.fields}
             probes: list[tuple] = []  # (col, value, dtype, bits, k)
             for col, value in prune_eq.items():
@@ -797,12 +862,20 @@ class TxTable:
                      layout_by: str | None = None,
                      bloom: dict | None = None) -> list[dict]:
         """Write ``df`` as immutable files under a fresh UUID dir and return
-        add-actions with per-file row counts + min/max stats.
+        add-actions with per-file row counts + min/max stats, plus per-file
+        Bloom sidecars when ``bloom`` declares columns.
 
         ``repartitionByRange`` on the stats columns clusters values so each
         file's [min,max] is tight — this is what makes merge-time file
         pruning effective (hash partitioning would smear every value range
         across every file and pruning would degenerate to full rewrite).
+
+        On the local path no Spark job follows the write: stats come from
+        the files' footers (``_footer_adds``) and sidecars from a driver read
+        of the Bloom columns hashed by the XXH64 kernel
+        (``_driver_blooms``). Each falls back to its Spark-job form where
+        the driver cannot reproduce Spark's answer exactly; both forms give
+        byte-identical add-actions.
         """
         batch = f"{_DATA_DIR}/{uuid.uuid4().hex}"
         batch_dir = os.path.join(self.path, batch)
@@ -847,8 +920,10 @@ class TxTable:
                 adds.append({"path": rel, "rows": row["__rows"],
                              "stats": stats})
         if bloom and bloom.get("cols"):
-            written = self.spark.read.schema(df.schema).parquet(batch_dir)
-            blooms = self._build_blooms(written, bloom)
+            blooms = self._driver_blooms(adds, df.schema, bloom)
+            if blooms is None:
+                written = self.spark.read.schema(df.schema).parquet(batch_dir)
+                blooms = self._build_blooms(written, bloom)
             for a in adds:
                 if a["path"] in blooms:
                     a["bloom"] = blooms[a["path"]]
@@ -875,8 +950,6 @@ class TxTable:
         The fallback produces byte-identical add-actions (pinned by
         tests), so this is a pure execution-path choice.
         """
-        from pyspark.sql.types import (
-            ByteType, DateType, IntegerType, LongType, ShortType)
         if urlparse(batch_dir).scheme not in ("", "file"):
             return None
         exact = (ByteType, ShortType, IntegerType, LongType, DateType)
@@ -927,12 +1000,72 @@ class TxTable:
                          "rows": md.num_rows, "stats": stats})
         return adds
 
+    def _driver_blooms(self, adds: list[dict], schema: StructType,
+                       bloom: dict) -> dict | None:
+        """``_build_blooms`` without a Spark job: pyarrow reads each written
+        file's Bloom columns, ``pc.unique`` drops duplicates and nulls, and
+        the XXH64 kernel hashes ``"__bf{i}:" + text`` exactly as Spark's
+        ``xxhash64`` does — the same sidecars, byte for byte.
+
+        Returns None — caller keeps the Spark-job build — when the table is
+        not on a locally-readable filesystem (the ``_footer_adds``
+        condition), when a Bloom column's type is not string, integral or
+        date (``_kernel_kind``), when a date lies outside
+        ``_DRIVER_BLOOM_DATES``, when the batch holds more than
+        ``_DRIVER_BLOOM_MAX_ROWS`` rows, or when a file cannot be read."""
+        import base64
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        fields = {f.name: f.dataType for f in schema.fields}
+        cols = bloom["cols"]
+        if (urlparse(self.path).scheme not in ("", "file")
+                or any(_kernel_kind(fields.get(c)) is None for c in cols)
+                or sum(a["rows"] for a in adds) > _DRIVER_BLOOM_MAX_ROWS):
+            return None
+        bits, k = int(bloom["bits"]), int(bloom["k"])
+        lo, hi = _DRIVER_BLOOM_DATES
+        root = _plain_path(self.path)
+        out: dict[str, dict] = {}
+        for a in adds:
+            try:
+                table = pq.read_table(os.path.join(root, a["path"]),
+                                      columns=cols)
+                values = [pc.unique(table.column(c)).drop_null() for c in cols]
+            except (OSError, KeyError, pa.ArrowException):
+                return None  # unreadable file or missing column
+            for c, vals in zip(cols, values):
+                if not len(vals):
+                    continue  # the Spark build lists no all-null file
+                if pa.types.is_date32(vals.type):
+                    span = pc.min_max(vals)
+                    if not (lo <= span["min"].as_py()
+                            and span["max"].as_py() <= hi):
+                        return None
+                pos = _kernel_positions(pc.cast(vals, pa.string()), bits,
+                                        k).ravel()
+                dense = np.zeros((bits + 63) // 64, np.uint64)
+                np.bitwise_or.at(dense, pos >> 6,
+                                 np.left_shift(np.uint64(1),
+                                               (pos & 63).astype(np.uint64)))
+                blob = base64.b64encode(dense.astype("<u8").tobytes())
+                out.setdefault(a["path"], {})[c] = {
+                    "bits": bits, "k": k, "words": blob.decode("ascii")}
+        return out
+
     def _build_blooms(self, written: DataFrame, bloom: dict) -> dict:
-        """Per-file Bloom sidecars for the declared columns: one sparse
-        explode → bit_or aggregation per column (rows x k hash positions
-        through ONE shuffle — linear in the batch for any filter size,
-        where a dense per-word aggregate would need bits/64 aggregate
-        expressions). Words are base64-packed little-endian int64."""
+        """Per-file Bloom sidecars for the declared columns, by Spark jobs:
+        one sparse explode → bit_or aggregation per column (rows x k hash
+        positions through ONE shuffle — linear in the batch for any filter
+        size, where a dense per-word aggregate would need bits/64 aggregate
+        expressions). Words are base64-packed little-endian int64.
+
+        The fallback of ``_driver_blooms``, which builds the same sidecars
+        on the driver for local tables of string, integral and date Bloom
+        columns up to ``_DRIVER_BLOOM_MAX_ROWS`` rows."""
         import base64
         import struct
 
@@ -972,36 +1105,54 @@ class TxTable:
 
     def _bloom_positions(self, value, bits: int, k: int,
                          dtype=None) -> list[int]:
-        """Probe positions for ``value`` — computed with the SAME Spark hash
-        expressions the build used, so build and probe can never disagree
-        on the hash function."""
+        """Probe positions for ``value`` — the positions Spark's hash
+        expressions give, so build and probe can never disagree on the hash
+        function."""
         return self._bloom_positions_batch([(None, value, dtype, bits, k)])[0]
 
     def _bloom_positions_batch(self, probes: list[tuple]) -> list[list[int]]:
-        """Positions for many ``(col, value, dtype, bits, k)`` probes in ONE
-        local Spark job (an N-point-lookup pays one job launch, not N).
+        """Positions for many ``(col, value, dtype, bits, k)`` probes.
 
-        ``dtype`` is the probed column's type from the table schema: the
-        Python literal is cast to it BEFORE the string cast the hash uses,
-        so a cross-typed probe (777 against a DOUBLE column) stringifies
-        exactly like the stored values ("777.0") and hashes to the bits the
-        build set — without the cast, a type-mismatched probe would hash to
-        different positions and reject files that DO contain the value (a
-        false negative, violating the pruning contract). A probe the type
-        cannot represent try_casts to NULL (an ANSI cast would throw),
-        which cannot match any built value — any prune outcome is then
-        safe, since the value cannot exist in the column either."""
-        if not probes:
-            return []
+        A probe whose value already has the column's type — a ``str``
+        against a string column, an in-range ``int`` against an integral
+        one, a ``date`` against a date one, or a ``str``/``int`` with
+        ``dtype=None`` — is hashed on the driver by the XXH64 kernel, with
+        no Spark job (``_probe_text``). Every other probe resolves through
+        ONE local Spark job for the whole batch (an N-point-lookup pays one
+        job launch, not N).
+
+        ``dtype`` is the probed column's type from the table schema: on the
+        Spark path the Python literal is cast to it BEFORE the string cast
+        the hash uses, so a cross-typed probe (777 against a DOUBLE column)
+        stringifies exactly like the stored values ("777.0") and hashes to
+        the bits the build set — without the cast, a type-mismatched probe
+        would hash to different positions and reject files that DO contain
+        the value (a false negative, violating the pruning contract). A
+        probe the type cannot represent try_casts to NULL (an ANSI cast
+        would throw), which cannot match any built value — any prune
+        outcome is then safe, since the value cannot exist in the column
+        either."""
+        import pyarrow as pa
+
+        out: list[list[int] | None] = []
         exprs = []
         for j, (_, value, dtype, bits, k) in enumerate(probes):
+            text = _probe_text(value, dtype)
+            if text is not None:
+                pos = _kernel_positions(pa.array([text], pa.string()), bits, k)
+                out.append([int(p) for p in pos[:, 0]])
+                continue
+            out.append(None)
             lit = (F.lit(value).try_cast(dtype) if dtype is not None
                    else F.lit(value))
             exprs.extend(e.alias(f"p{j}_{i}") for i, e
                          in enumerate(_bloom_pos_exprs(lit, bits, k)))
-        row = self.spark.range(1).select(*exprs).collect()[0]
-        return [[int(row[f"p{j}_{i}"]) for i in range(k)]
-                for j, (_, _, _, _, k) in enumerate(probes)]
+        if exprs:
+            row = self.spark.range(1).select(*exprs).collect()[0]
+            out = [pos if pos is not None
+                   else [int(row[f"p{j}_{i}"]) for i in range(k)]
+                   for j, (pos, (_, _, _, _, k)) in enumerate(zip(out, probes))]
+        return out
 
     def last_txn(self, app_id: str) -> int | None:
         """Highest committed writer batch id for ``app_id`` (None if never,
@@ -1119,7 +1270,14 @@ class TxTable:
         filter admits the value. Size ``bloom_bits`` at >= 8-10 bits per
         distinct value per file (the classic ~5% FPR point); a production
         port at 1M-row files would move the sidecars from the commit JSON
-        to index files — the add-action dict is the seam.
+        to index files — the add-action dict is the seam. Positions are
+        ``pmod(xxhash64("__bf{i}:" + cast(value as string)), bits)`` for
+        i < k. For string, integral and date columns of a local table the
+        driver computes them with the XXH64 kernel
+        (``functions/xxh64.py``) — sidecars after each write
+        (``_driver_blooms``) and probes of the column's own type — so
+        neither costs a Spark job; other cases run Spark's own
+        ``xxhash64``, with identical results.
 
         ``change_data_feed=True`` enables the CDF write-side (the
         published opt-in table property): copy-on-write merges then write

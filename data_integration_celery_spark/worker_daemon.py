@@ -6,7 +6,8 @@ PySpark's worker ends every task's set-up with ``importlib.invalidate_caches()``
 ``zipimport.zipimporter`` answers that by re-reading its archive's whole
 central directory, and a worker holds 16 of them over ``pyspark.zip`` and
 py4j's zip: 130–220 ms of CPU on every task (4-vCPU VM). This daemon is the
-stock ``pyspark.daemon`` with one method replaced; the session names it in
+stock ``pyspark.daemon`` with one method replaced, and with pandas and pyarrow
+imported before it forks its workers; the session names it in
 ``spark.python.daemon.module``.
 """
 
@@ -41,6 +42,14 @@ if __name__ == "__main__":
     import pyspark.daemon
 
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    # Arrow tasks (mapInPandas, applyInPandas, pandas UDFs) import pandas and
+    # pyarrow: ~300 ms of CPU on each forked worker's first such task when
+    # the worker imports them, ~17 ms when it inherits them copy-on-write
+    for name in ("pandas", "pyarrow"):
+        try:
+            importlib.import_module(name)
+        except ImportError:  # optional: plain-RDD and Python-UDF work runs on
+            pass
     # stamp the importers the daemon already holds, so forked workers inherit
     # them instead of each re-reading every archive on its first task
     importlib.invalidate_caches()

@@ -1201,14 +1201,17 @@ def test_bloom_cross_type_probe_no_false_negative(spark, tdir):
 
 
 def test_bloom_batched_probe_single_job(spark, tdir):
-    """N point-lookup probes resolve through ONE local Spark job (the
-    per-value spark.range(1) launch was O(N) jobs), and the batch agrees
-    with the single-probe path bit-for-bit."""
-    df = spark.createDataFrame([(i, i * 3) for i in range(100)],
-                               "id long, v long")
+    """N point-lookup probes that take the Spark path (cross-typed: int
+    literals against a DOUBLE column) resolve through ONE local Spark job
+    (the per-value spark.range(1) launch was O(N) jobs), and the batch
+    agrees with the single-probe path bit-for-bit."""
+    from pyspark.sql.types import DoubleType
+    df = spark.createDataFrame([(i, i * 3.0) for i in range(100)],
+                               "id long, v double")
     t = TxTable(spark, tdir)
     t.create(df, bloom_cols=["v"], bloom_bits=4096, bloom_k=5)
-    probes = [(None, val, None, 4096, 5) for val in (3, 33, 333, 12, 777)]
+    probes = [(None, val, DoubleType(), 4096, 5)
+              for val in (3, 33, 333, 12, 777)]
     sc = spark.sparkContext
     sc.setJobGroup("bloom-batch-probe", "one job for N probes")
     try:
@@ -1217,8 +1220,8 @@ def test_bloom_batched_probe_single_job(spark, tdir):
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("bloom-batch-probe")
     assert len(jobs) == 1, jobs
-    for (_, val, _, bits, k), pos in zip(probes, batch):
-        assert pos == t._bloom_positions(val, bits, k)
+    for (_, val, dtype, bits, k), pos in zip(probes, batch):
+        assert pos == t._bloom_positions(val, bits, k, dtype)
 
 
 def test_bloom_survives_merge_compact_and_checkpoint(spark, sf_dir, tdir):
@@ -1258,6 +1261,123 @@ def test_bloom_probe_matches_build_hashes(spark, tdir):
     # essentially impossible to collide on all five
     assert not any(_bloom_admits(entry, t._bloom_positions(x, 4096, 5))
                    for x in range(1000, 1020))
+
+
+def _bloom_table(spark, tdir):
+    """Four range-clustered files with string, long and date Bloom columns;
+    ``z`` is non-null only in the first file."""
+    import datetime
+    rows = [(i, f"c{i % 37}é" if i % 5 else None, -(i * 7919) ** 3,
+             datetime.date(1990, 1, 1) + datetime.timedelta(days=i * 31),
+             "z" if i < 10 else None) for i in range(200)]
+    df = spark.createDataFrame(
+        rows, "id long, s string, l long, d date, z string")
+    t = TxTable(spark, tdir, batch_partitions=4)
+    t.create(df, stats_cols=["id"], bloom_cols=["s", "l", "d", "z"],
+             bloom_bits=4099, bloom_k=3)
+    return t, df
+
+
+def test_driver_bloom_sidecars_match_spark_build(spark, tdir):
+    """The driver build (pyarrow read + XXH64 kernel) writes the sidecars
+    the Spark-job build writes, byte for byte — for string, long and date
+    columns, with ``bits`` not a power of two — and a file whose column is
+    all null gets no entry on either path."""
+    t, df = _bloom_table(spark, tdir)
+    adds = t.live_files()
+    st = t._state()
+    bare = [{k: v for k, v in a.items() if k != "bloom"} for a in adds]
+    driver = t._driver_blooms(bare, df.schema, st.bloom)
+    written = spark.read.schema(df.schema).parquet(
+        *[os.path.join(tdir, a["path"]) for a in adds])
+    assert driver == t._build_blooms(written, st.bloom)
+    assert driver == {a["path"]: a["bloom"] for a in adds}
+    assert len(adds) == 4
+    assert [sorted(e) for e in driver.values()].count(["d", "l", "s", "z"]) == 1
+    assert all(sorted(e) in (["d", "l", "s"], ["d", "l", "s", "z"])
+               for e in driver.values())
+
+
+def test_kernel_probe_positions_match_spark(spark, tdir):
+    """Probes hashed on the driver land on the positions Spark's hash
+    expressions give, for every kernel-typed case; each admits the files
+    that hold the value."""
+    import datetime
+
+    from pyspark.sql.types import (
+        ByteType, DateType, IntegerType, LongType, StringType)
+
+    from data_integration_celery_spark.sinks.txlog import (
+        _bloom_admits, _bloom_pos_exprs)
+    t, df = _bloom_table(spark, tdir)
+    d = datetime.date(1990, 1, 1) + datetime.timedelta(days=31 * 3)
+    cases = [("c3é", StringType()), ("", StringType()), ("c3é", None),
+             (-(21 * 7919) ** 3, LongType()), (-5, None), (2 ** 40, None),
+             (-128, ByteType()), (2 ** 31 - 1, IntegerType()),
+             (d, DateType())]
+    probes = [(None, v, dt, 4099, 3) for v, dt in cases]
+    got = t._bloom_positions_batch(probes)
+    for (v, dt), pos in zip(cases, got):
+        lit = F.lit(v).try_cast(dt) if dt is not None else F.lit(v)
+        want = spark.range(1).select(*_bloom_pos_exprs(lit, 4099, 3)) \
+            .collect()[0]
+        assert pos == [int(x) for x in want], (v, dt)
+    for col, val, pos in (("s", "c3é", got[0]),
+                          ("l", -(21 * 7919) ** 3, got[3]), ("d", d, got[8])):
+        holders = [a for a in t.live_files() if spark.read.parquet(
+            os.path.join(tdir, a["path"])).where(F.col(col) == val).count()]
+        assert holders
+        assert all(_bloom_admits(a["bloom"][col], pos) for a in holders)
+
+
+def test_bloom_kernel_typed_probes_run_no_job(spark, tdir):
+    """Probes whose value already has the column's type hash on the driver:
+    a point lookup's Bloom pruning starts no Spark job."""
+    import datetime
+    t, _ = _bloom_table(spark, tdir)
+    probes = [(None, "c3é", None, 4099, 3), (None, 12, None, 4099, 3)]
+    for col, value in (("s", "c3é"), ("l", -(21 * 7919) ** 3),
+                       ("d", datetime.date(1990, 4, 2))):
+        dtype = dict((f.name, f.dataType) for f in t._state().struct())[col]
+        probes.append((col, value, dtype, 4099, 3))
+    sc = spark.sparkContext
+    sc.setJobGroup("bloom-kernel-probe", "kernel-typed probes")
+    try:
+        batch = t._bloom_positions_batch(probes)
+        t.snapshot(prune_eq={"s": "c3é", "l": 5})
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("bloom-kernel-probe") == []
+    assert all(len(pos) == 3 for pos in batch)
+
+
+def test_merge_upsert_runs_no_job_after_its_write(spark, tdir, monkeypatch):
+    """A merge into a Bloom table builds the new file's sidecars on the
+    driver: no Spark job starts after the data write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    t, df = _bloom_table(spark, tdir)
+    sc = spark.sparkContext
+    group = "merge-after-write"
+    after_write = []
+    real = DataFrameWriter.parquet
+
+    def write(self, *a, **kw):
+        real(self, *a, **kw)
+        after_write.append(max(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    upd = df.where(F.col("id") < 20).withColumn("z", F.lit("new"))
+    sc.setJobGroup(group, "one merge_upsert")
+    try:
+        t.merge_upsert(upd, keys=["id"])
+    finally:
+        sc.setJobGroup(None, None)
+    monkeypatch.undo()
+    assert len(after_write) == 1
+    assert max(sc.statusTracker().getJobIdsForGroup(group)) == after_write[0]
+    assert all(set(a["bloom"]) >= {"s", "l", "d"} for a in t.live_files())
+    assert t.snapshot(prune_eq={"z": "new"}).where(
+        F.col("z") == "new").count() == 20
 
 
 def test_hadoop_store_uri_root_full_cycle(spark, sf_dir, tdir):

@@ -267,12 +267,10 @@ def test_write_upsert_schema_evolution(spark, tmp_path):
                    ("c", 1): (30.0, "X")}
 
 
-def test_partitioned_first_write_requires_existence_not_read_success(
-        spark, tmp_path, monkeypatch):
-    """A transient read error on an EXISTING partitioned table must
-    propagate — the old except-branch took the first-write path and
-    dynamically overwrote touched partitions with ONLY the update rows,
-    destroying base rows whose keys were not in the batch."""
+def _upsert_over_failing_table(spark, tmp_path, monkeypatch, patch):
+    """Write a two-row partitioned table, make ``patch(path)`` inject a
+    transient failure, and check that the next upsert raises it and the
+    base survives."""
     from data_integration_celery_spark.operators import upsert as U
 
     path = str(tmp_path / "t")
@@ -281,18 +279,7 @@ def test_partitioned_first_write_requires_existence_not_read_success(
         "k int, part string, v string")
     U.write_upsert_partitioned(spark, base.withColumn(
         "batch_id", F.lit(0).cast("long")), path, ["k"], ["part"])
-    # simulate a transient read failure on the existing table: patch at
-    # the CLASS level — spark.read constructs a fresh DataFrameReader per
-    # access, so patching one instance would never be seen by the writer
-    from pyspark.sql.readwriter import DataFrameReader
-    real_read = DataFrameReader.parquet
-
-    def flaky(self, p, *a, **kw):
-        if p == path:
-            raise RuntimeError("transient fs error")
-        return real_read(self, p, *a, **kw)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    patch(path)
     upd = spark.createDataFrame([(1, "d1", "new")],
                                 "k int, part string, v string") \
         .withColumn("batch_id", F.lit(1).cast("long"))
@@ -301,6 +288,49 @@ def test_partitioned_first_write_requires_existence_not_read_success(
     monkeypatch.undo()
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {1: "keep", 2: "keep2"}  # base survived the failure
+
+
+def test_partitioned_first_write_requires_existence_not_read_success(
+        spark, tmp_path, monkeypatch):
+    """A transient read error on an EXISTING partitioned table must
+    propagate — the old except-branch took the first-write path and
+    dynamically overwrote touched partitions with ONLY the update rows,
+    destroying base rows whose keys were not in the batch."""
+    from pyspark.sql.readwriter import DataFrameReader
+    real_read = DataFrameReader.parquet
+
+    def patch(path):
+        # a read failure of ANY path under the table (the upsert reads the
+        # touched partition directories, not the root): patch at the CLASS
+        # level — spark.read constructs a fresh DataFrameReader per access,
+        # so patching one instance would never be seen by the writer
+        def flaky(self, *paths, **kw):
+            if any(str(p).startswith(path) for p in paths):
+                raise RuntimeError("transient fs error")
+            return real_read(self, *paths, **kw)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+
+    _upsert_over_failing_table(spark, tmp_path, monkeypatch, patch)
+
+
+def test_partitioned_upsert_propagates_root_listing_failure(
+        spark, tmp_path, monkeypatch):
+    """The listing of the table root decides which touched partitions
+    exist; when it fails the upsert must raise, never take the partition
+    as absent and overwrite it with only the update rows."""
+    import os
+    real_listdir = os.listdir
+
+    def patch(path):
+        def flaky(p="."):
+            if os.path.normpath(os.fspath(p)) == path:
+                raise OSError("transient fs error")
+            return real_listdir(p)
+
+        monkeypatch.setattr(os, "listdir", flaky)
+
+    _upsert_over_failing_table(spark, tmp_path, monkeypatch, patch)
 
 
 def test_first_write_dedups_primary_keys(spark, tmp_path):
@@ -360,3 +390,149 @@ def test_overwrite_partitions_empty_frame_is_noop(spark, sf_dir, tmp_path):
     overwrite_partitions(src.limit(0).withColumn("batch_id", F.lit(2)),
                          target, ["batch_id"])
     assert spark.read.parquet(target).count() == 7
+
+
+def _partition_dirs(path):
+    import os
+    return {n for n in os.listdir(path) if not n.startswith((".", "_"))}
+
+
+def test_numeric_looking_string_partitions_stay_put(spark, tmp_path):
+    """A string partition value that looks numeric ("001") keeps its
+    directory: the upsert types partition columns as ``updates`` does, so
+    the merged row replaces the one in p=001/ instead of landing in a new
+    p=1/ next to the stale row."""
+    path = str(tmp_path / "t")
+    schema = "k string, p string, v string, batch_id long"
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [("a", "001", "old", 0), ("b", "001", "b0", 0),
+             ("c", "002", "c0", 0)], schema), path, ["k"], ["p"])
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", "001", "new", 1)], schema),
+        path, ["k"], ["p"])
+    assert _partition_dirs(path) == {"p=001", "p=002"}
+    rows = spark.read.schema("k string, v string, p string").parquet(path) \
+        .collect()
+    assert sorted(r["k"] for r in rows) == ["a", "b", "c"]  # one row per key
+    assert {r["k"]: (r["p"], r["v"]) for r in rows} == {
+        "a": ("001", "new"), "b": ("001", "b0"), "c": ("002", "c0")}
+
+
+def test_numeric_looking_string_partitions_stay_put_on_full_read(
+        spark, tmp_path, monkeypatch):
+    """The whole-table read that non-local tables and other partition types
+    take types the partition columns as ``updates`` does too."""
+    from data_integration_celery_spark.operators import upsert as U
+    monkeypatch.setattr(U, "_touched_slice", lambda *a: None)
+    path = str(tmp_path / "t")
+    schema = "k string, p string, v string, batch_id long"
+    U.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [("a", "001", "old", 0), ("c", "002", "c0", 0)], schema),
+        path, ["k"], ["p"])
+    U.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", "001", "new", 1)], schema),
+        path, ["k"], ["p"])
+    assert _partition_dirs(path) == {"p=001", "p=002"}
+    rows = spark.read.schema("k string, v string, p string").parquet(path) \
+        .collect()
+    assert sorted((r["k"], r["p"], r["v"]) for r in rows) == [
+        ("a", "001", "new"), ("c", "002", "c0")]
+
+
+def test_partitioned_upsert_roundtrips_adversarial_values(spark, tmp_path):
+    """Partition values that Spark escapes in directory names (or writes as
+    the default partition) are found again by the touched-partition read:
+    an upsert into each replaces its row and leaves the others."""
+    path = str(tmp_path / "t")
+    schema = "k string, p string, v string, batch_id long"
+    parts = ["a/b", "x=y", "50%", "é", None]
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [(f"k{i}", p, "old", 0) for i, p in enumerate(parts)]
+            + [(f"s{i}", p, "same", 0) for i, p in enumerate(parts)],
+            schema), path, ["k"], ["p"])
+    dirs = _partition_dirs(path)
+    assert len(dirs) == len(parts)
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [(f"k{i}", p, "new", 1) for i, p in enumerate(parts)], schema),
+        path, ["k"], ["p"])
+    assert _partition_dirs(path) == dirs
+    got = sorted((r["k"], r["p"], r["v"]) for r in spark.read.schema(
+        "k string, v string, p string").parquet(path).collect())
+    want = sorted([(f"k{i}", p, "new") for i, p in enumerate(parts)]
+                  + [(f"s{i}", p, "same") for i, p in enumerate(parts)],
+                  key=lambda t: (t[0], t[1] or "", t[2]))
+    assert got == sorted(want)
+
+
+def test_empty_string_partition_is_the_null_partition(spark, tmp_path):
+    """Spark stores "" and null partition values in the same default
+    partition and reads both back as null. An upsert with p="" must keep
+    the partition's other rows and store its key once."""
+    path = str(tmp_path / "t")
+    schema = "k string, p string, v string, batch_id long"
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [("a", None, "a0", 0), ("b", "", "b0", 0), ("c", "x", "c0", 0)],
+            schema), path, ["k"], ["p"])
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("b", "", "b1", 1)], schema),
+        path, ["k"], ["p"])
+    got = sorted((r["k"], r["p"], r["v"])
+                 for r in spark.read.parquet(path).collect())
+    assert got == [("a", None, "a0"), ("b", None, "b1"), ("c", "x", "c0")]
+
+
+def test_partitioned_upsert_one_exchange(spark, tmp_path, monkeypatch):
+    """The partition-scoped merge shuffles once: the union is clustered on
+    the partition columns and ranked by a window over partition columns +
+    keys, and the write adds no second repartition."""
+    from data_integration_celery_spark.operators import upsert as U
+    path = str(tmp_path / "t")
+    schema = "k long, p long, v string, batch_id long"
+    U.write_upsert_partitioned(spark, spark.createDataFrame(
+        [(i, i % 4, "v0", 0) for i in range(20)], schema), path, ["k"], ["p"])
+    written = []
+    real = U._write_partitions
+    monkeypatch.setattr(U, "_write_partitions",
+                        lambda df, *a: (written.append(df), real(df, *a)))
+    U.write_upsert_partitioned(spark, spark.createDataFrame(
+        [(1, 1, "new", 1), (100, 0, "ins", 1)], schema), path, ["k"], ["p"])
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Union" in plan.split("Exchange hashpartitioning")[1], plan
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(got) == 21 and got[1] == "new" and got[100] == "ins"
+
+
+def test_partitioned_upsert_runs_no_discovery_or_inference_job(
+        spark, tmp_path):
+    """On a table of 48 partitions, an upsert touching two of them lists
+    and reads only those two: no partition-discovery job (one task per
+    partition directory) and no schema-inference job — the jobs Spark
+    starts inside ``spark.read.parquet`` of the table root."""
+    path = str(tmp_path / "t")
+    base = spark.range(480).select(
+        F.col("id").alias("k"), (F.col("id") % 48).alias("p"),
+        F.lit("v0").alias("v"), F.lit(0).cast("long").alias("batch_id"))
+    upsert.write_upsert_partitioned(spark, base, path, ["k"], ["p"])
+    upd = spark.createDataFrame([(1, 1, "new", 1), (1000, 7, "ins", 1)],
+                                "k long, p long, v string, batch_id long")
+    sc = spark.sparkContext
+    sc.setJobGroup("partitioned-upsert", "touched partitions only")
+    try:
+        upsert.write_upsert_partitioned(spark, upd, path, ["k"], ["p"])
+    finally:
+        sc.setJobGroup(None, None)
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s)
+              for j in st.getJobIdsForGroup("partitioned-upsert")
+              for s in st.getJobInfo(j).stageIds]
+    assert stages and all(s is not None for s in stages)
+    assert not [s.name for s in stages if s.name.startswith("parquet at")]
+    assert max(s.numTasks for s in stages) < 40
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(got) == 481 and got[1] == "new" and got[1000] == "ins"

@@ -107,3 +107,30 @@ def test_python_workers_start_from_any_working_directory(tmp_path):
     out = subprocess.run([sys.executable, "-I", "-c", script], cwd=tmp_path,
                          env=env, capture_output=True, text=True, timeout=300)
     assert "COUNT 8" in out.stdout, out.stderr[-3000:]
+
+
+def test_workers_inherit_pandas_and_pyarrow_from_the_daemon(tmp_path):
+    # In a fresh session, a worker's first task — a plain-RDD one that
+    # imports nothing — already finds pandas and pyarrow imported: the
+    # daemon imported them before forking, so Arrow tasks do not pay for
+    # the imports on each worker.
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(ROOT)!r})
+        from data_integration_celery_spark.session import get_spark
+        spark = get_spark("preimport-check", master="local[1]",
+                          extra_conf={{"spark.ui.enabled": "false"}})
+        spark.sparkContext.setLogLevel("ERROR")
+        seen = (spark.sparkContext.parallelize([0], 1)
+                .map(lambda _: sorted(m for m in ("pandas", "pyarrow")
+                                      if m in sys.modules))
+                .collect())
+        spark.stop()
+        print("SEEN", seen)
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PYSPARK_PYTHON=sys.executable, SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_CPUS="1")
+    out = subprocess.run([sys.executable, "-I", "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=300)
+    assert "SEEN [['pandas', 'pyarrow']]" in out.stdout, out.stderr[-3000:]
