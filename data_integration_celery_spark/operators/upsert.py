@@ -315,6 +315,58 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     _write_partitions(merged, path, partition_cols)
 
 
+def _plain_path(path: str) -> str:
+    """The filesystem path of a path string as Hadoop's ``Path`` — and so
+    Spark — reads it: a scheme (a colon before the first slash) and an
+    authority are dropped, and the rest is taken literally. Hadoop decodes
+    no ``%XX`` and knows no query or fragment, so ``/lake/prices#v2`` names
+    the directory ``prices#v2``. A TxTable rooted at
+    ``hdfs://nn/warehouse/t`` records add-actions relative to this plain
+    path, while store I/O keeps the full string (so the right FileSystem
+    resolves). A URI Spark reports (``input_file_name()``) is
+    percent-encoded instead: see ``_uri_path``."""
+    head, sep, rest = path.partition(":")
+    if not sep or "/" in head:
+        return path
+    if rest.startswith("//") and len(rest) > 2:
+        end = rest.find("/", 2)
+        return rest[end:] if end >= 0 else ""
+    return rest
+
+
+def _local_path(path: str) -> str | None:
+    """``_plain_path`` of a path on the local filesystem (no scheme, or
+    ``file:``), which the driver can list and read itself; None for every
+    other scheme."""
+    head, sep, _ = path.partition(":")
+    if sep and "/" not in head and head != "file":
+        return None
+    return _plain_path(path)
+
+
+def _uri_path(uri: str) -> str:
+    """The filesystem path of a percent-encoded URI that Spark reports,
+    such as ``input_file_name()``."""
+    return unquote(urlparse(uri).path)
+
+
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+
+
+def _text_kind(dtype) -> str | None:
+    """"str", "int" or "date" for a column type whose values the driver
+    renders as text exactly as Spark does — its ``cast(... as string)`` and
+    its partition directory names; None for every other type (callers then
+    take a Spark-job path)."""
+    if dtype == StringType():  # the default UTF8_BINARY collation only
+        return "str"
+    if type(dtype) in _INT_BITS:
+        return "int"
+    if isinstance(dtype, DateType):
+        return "date"
+    return None
+
+
 # Spark's partition directory names (ExternalCatalogUtils): these characters
 # are written as %XX, and a null or empty value as the default partition
 _ESCAPED = frozenset([chr(c) for c in range(0x01, 0x20)]
@@ -348,12 +400,10 @@ def _touched_slice(spark, path: str, parts: StructType,
     Existence is decided from directory listings that RAISE on I/O error:
     a touched partition wrongly taken as absent would be overwritten with
     only the update rows."""
-    if urlparse(path).scheme not in ("", "file") or not all(
-            isinstance(f.dataType, (ByteType, ShortType, IntegerType,
-                                    LongType, DateType))
-            or f.dataType == StringType() for f in parts.fields):
+    root = _local_path(path)
+    if root is None or not all(_text_kind(f.dataType)
+                               for f in parts.fields):
         return None
-    root = unquote(urlparse(path).path)
     listings: dict[str, list[str]] = {}
 
     def names(rel: str) -> list[str]:

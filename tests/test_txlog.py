@@ -1298,6 +1298,51 @@ def test_driver_bloom_sidecars_match_spark_build(spark, tdir):
                for e in driver.values())
 
 
+def test_driver_bloom_build_stops_at_its_hash_cap(spark, tdir, monkeypatch):
+    """The driver build runs while the batch needs at most
+    ``_DRIVER_BLOOM_MAX_HASHES`` hashes (k times the distinct non-null
+    values of each file and column) and leaves larger batches to the
+    Spark-job build."""
+    import pyarrow.parquet as pq
+
+    from data_integration_celery_spark.sinks import txlog
+    t, df = _bloom_table(spark, tdir)
+    st = t._state()
+    bare = [{k: v for k, v in a.items() if k != "bloom"}
+            for a in t.live_files()]
+    need = st.bloom["k"] * sum(
+        len(pq.read_table(os.path.join(tdir, a["path"])).column(c)
+            .unique().drop_null())
+        for a in bare for c in st.bloom["cols"])
+    monkeypatch.setattr(txlog, "_DRIVER_BLOOM_MAX_HASHES", need)
+    assert t._driver_blooms(bare, df.schema, st.bloom) == {
+        a["path"]: a["bloom"] for a in t.live_files()}
+    monkeypatch.setattr(txlog, "_DRIVER_BLOOM_MAX_HASHES", need - 1)
+    assert t._driver_blooms(bare, df.schema, st.bloom) is None
+
+
+def test_bloom_date_past_year_9999_takes_the_spark_build(spark, tdir):
+    """A date after 9999-12-31 (which Spark stores, and Python has no date
+    for) sends the sidecar build to the Spark job instead of failing the
+    write; the commit carries that build's sidecar."""
+    import datetime
+    df = spark.range(3).select(
+        "id", F.date_add(F.lit(datetime.date(9999, 12, 31)),
+                         F.col("id").cast("int")).alias("d"))
+    t = TxTable(spark, tdir, batch_partitions=1)
+    t.create(df, stats_cols=["id"], bloom_cols=["d"], bloom_bits=4099,
+             bloom_k=3)
+    st = t._state()
+    adds = t.live_files()
+    bare = [{k: v for k, v in a.items() if k != "bloom"} for a in adds]
+    assert t._driver_blooms(bare, df.schema, st.bloom) is None
+    written = spark.read.schema(df.schema).parquet(
+        *[os.path.join(tdir, a["path"]) for a in adds])
+    assert {a["path"]: a["bloom"] for a in adds} == \
+        t._build_blooms(written, st.bloom)
+    assert t.snapshot().count() == 3
+
+
 def test_kernel_probe_positions_match_spark(spark, tdir):
     """Probes hashed on the driver land on the positions Spark's hash
     expressions give, for every kernel-typed case; each admits the files

@@ -2,6 +2,8 @@
 ``_test_bunch_insert_sqlite`` (/root/reference tasks/utils/to_sqlite.py:650-687):
 insert N rows, upsert an overlapping batch, assert final values per PK."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -439,6 +441,51 @@ def test_numeric_looking_string_partitions_stay_put_on_full_read(
         .collect()
     assert sorted((r["k"], r["p"], r["v"]) for r in rows) == [
         ("a", "001", "new"), ("c", "002", "c0")]
+
+
+def test_partitioned_upsert_reads_the_table_path_literally(spark, tmp_path):
+    """A table path is read as Spark reads it — ``#``, ``?`` and ``%XX`` are
+    part of the name — so a sibling directory at the name a URL parse would
+    give (``prices`` for ``prices#v2``) is never listed in its place: its
+    missing partition would pass for a missing touched partition, and the
+    upsert would overwrite that partition with only the update rows."""
+    schema = "k string, p string, v string, batch_id long"
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("z", "002", "z0", 0)], schema),
+        str(tmp_path / "prices"), ["k"], ["p"])
+    path = str(tmp_path / "prices#v2")
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame(
+            [("a", "001", "old", 0), ("b", "001", "b0", 0)], schema),
+        path, ["k"], ["p"])
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", "001", "new", 1)], schema),
+        path, ["k"], ["p"])
+    rows = spark.read.schema("k string, v string, p string").parquet(path) \
+        .collect()
+    assert sorted((r["k"], r["p"], r["v"]) for r in rows) == [
+        ("a", "001", "new"), ("b", "001", "b0")]
+
+
+def test_plain_and_local_paths_follow_hadoop(spark, tmp_path):
+    """``_plain_path`` takes a path as Hadoop's ``Path`` does: scheme and
+    authority dropped, nothing decoded; ``_local_path`` gives it only for
+    local paths; ``_uri_path`` decodes what Spark reports as a URI."""
+    from data_integration_celery_spark.operators.upsert import (
+        _local_path, _plain_path, _uri_path)
+    assert _plain_path("/lake/prices#v2") == "/lake/prices#v2"
+    assert _plain_path("file:///t/a%41b#c") == "/t/a%41b#c"
+    assert _plain_path("file:/t/x") == "/t/x"
+    assert _plain_path("hdfs://nn:8020/warehouse/t") == "/warehouse/t"
+    assert _local_path("hdfs://nn/warehouse/t") is None
+    assert _local_path("s3a://bucket/t") is None
+    assert _local_path("rel/dir:x") == "rel/dir:x"
+    uri = f"file://{tmp_path}/u%41v#w"
+    spark.range(1).write.parquet(uri)
+    assert os.listdir(tmp_path) == ["u%41v#w"]
+    assert _local_path(uri) == f"{tmp_path}/u%41v#w"
+    reported = spark.read.parquet(uri).select(F.input_file_name()).first()[0]
+    assert os.path.dirname(_uri_path(reported)) == _local_path(uri)
 
 
 def test_partitioned_upsert_roundtrips_adversarial_values(spark, tmp_path):
