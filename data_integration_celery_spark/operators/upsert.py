@@ -13,9 +13,11 @@ date and only rewriting touched partitions (``replaceWhere`` semantics —
 see ``overwrite_partitions``); per-key conflict resolution stays identical.
 
 One upsert story — the engine ships TWO durability contracts around ONE
-merge kernel (``upsert_frames``; single-code-path contract pinned by
-tests/test_txlog.py::test_single_upsert_kernel_contract, value equivalence
-by ``test_merge_upsert_matches_upsert_frames`` /
+last-write-wins rule with two kernels: ``upsert_frames`` in Spark and
+``upsert_arrow`` on the driver (single-rule contract pinned by
+tests/test_txlog.py::test_single_upsert_kernel_contract; kernel equality by
+tests/test_upsert.py::test_upsert_arrow_equals_upsert_frames; value
+equivalence by ``test_merge_upsert_matches_upsert_frames`` /
 ``test_write_upsert_and_txtable_agree_on_disk``):
 
 =====================  ==============================  =======================
@@ -25,11 +27,23 @@ writers                ONE per table (staging+rename)  many (optimistic log)
 crash safety           ``recover_table`` rollback      log is the truth
 readers during write   2-rename unreadable window      snapshot isolation
 history                latest only                     time travel, CDC, restore
-write amplification    whole table / touched parts     stat-pruned CoW files
+write amplification    whole table / touched parts     files holding a key
 metadata cost          none (bare parquet)             commit log + checkpoints
+small merges           partitioned: on the driver      on the driver
+large merges           Spark plan                      Spark plan
 choose it for          single-writer staging, simple   shared tables, streaming
                        exports, scratch outputs        exactly-once, audits
 =====================  ==============================  =======================
+
+Where a merge runs: a merge whose update rows plus touched base rows fit
+``_DRIVER_MERGE_MAX_ROWS`` runs on the driver — one capped Arrow collect of
+the updates (the only Spark job), a pyarrow read of the touched files,
+``upsert_arrow``, a pyarrow write — when the table is local, every key and
+column type is string, integral, date, boolean, float/double (not as a
+key) or timestamp, and, for ``TxTable``, no CHECK constraint, change-data
+feed or deletion vector on a touched file applies. Everything else, and
+every first write, keeps the Spark plan. ``write_upsert`` (whole-table
+republish) always takes the Spark plan.
 
 A pipeline can switch contracts without changing merge semantics: both sinks
 resolve conflicts with the same last-write-wins rule, tiebreaks included.
@@ -44,8 +58,10 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
-                               ShortType, StringType, StructField, StructType)
+from pyspark.sql.types import (BooleanType, ByteType, DateType, DoubleType,
+                               FloatType, IntegerType, LongType, ShortType,
+                               StringType, StructField, StructType,
+                               TimestampType)
 
 
 def upsert_frames(base: DataFrame, updates: DataFrame, keys: list[str],
@@ -109,6 +125,209 @@ def upsert_annotated(base: DataFrame, updates: DataFrame, keys: list[str],
     return unioned.withColumn("__rn", F.row_number().over(w))
 
 
+def upsert_arrow(base, updates, keys: list[str], order_col: str = "batch_id"):
+    """``upsert_frames`` over two ``pyarrow.Table``s on the driver — the
+    same last-write-wins rule, tiebreaks included: per PK the highest
+    ``order_col`` wins (DESC NULLS LAST), ``updates`` beat ``base`` on a
+    tie, a frame lacking the column counts as 0 (base) or 1 (updates), null
+    keys compare equal (an all-null key is one group, as in the window),
+    and ``order_col`` is dropped. Columns are ``base``'s, then those only
+    ``updates`` has (missing values null); rows come out sorted by
+    ``keys``, nulls last.
+
+    Shared columns must have one type on both sides (integral order
+    columns are widened to int64). Floating ``order_col`` or key columns
+    are rejected: Arrow orders NaN last where Spark orders it first, and
+    Spark groups NaN keys together."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def stamped(t, default: int, src: int):
+        if order_col not in t.column_names:
+            t = t.append_column(order_col, pa.array(
+                np.full(t.num_rows, default, np.int64)))
+        elif pa.types.is_integer(t.schema.field(order_col).type):
+            t = t.set_column(t.schema.get_field_index(order_col), order_col,
+                             t.column(order_col).cast(pa.int64()))
+        return t.append_column("__src", pa.array(
+            np.full(t.num_rows, src, np.int8)))
+
+    both = pa.concat_tables([stamped(base, 0, 0), stamped(updates, 1, 1)],
+                            promote_options="default")
+    for c in (*keys, order_col):
+        if pa.types.is_floating(both.schema.field(c).type):
+            raise TypeError(f"upsert_arrow: floating column {c!r} cannot be "
+                            f"a key or the order column")
+    order = pc.sort_indices(
+        both, sort_keys=[(k, "ascending") for k in keys]
+        + [(order_col, "descending"), ("__src", "descending")],
+        null_placement="at_end")
+    winners = order.filter(pa.array(
+        _group_starts(both.select(keys).take(order), keys)))
+    return both.take(winners).drop_columns([order_col, "__src"])
+
+
+# A merge whose update rows plus touched base rows number at most this runs
+# on the driver (``upsert_arrow`` between a pyarrow read and a pyarrow
+# write); a larger one keeps the Spark plan. Measured on a 4-vCPU VM, one
+# TxTable.merge_upsert of 100 update rows into a (string, date, int,
+# double, double) table whose every file it touches, median of 4 runs,
+# driver against Spark: 0.23 s against 1.04 s at 2^16 touched rows, 0.31
+# against 1.26 at 2^18, 0.78 against 2.70 at 2^20, 1.48 against 4.18 at
+# 2^21 and 2.40 against 5.77 at 2^22 — no crossover up to 2^22. The cap
+# therefore bounds the driver's memory instead: a merge at 2^20 rows took
+# the driver's peak RSS from 172 MB to 325 MB in a fresh process (a run
+# up to 2^22 rows peaked at 687 MB).
+_DRIVER_MERGE_MAX_ROWS = 1 << 20
+
+
+def _arrow_type(dtype, key: bool = False):
+    """The Arrow type the driver merge holds a Spark column of type
+    ``dtype`` in (timestamps as UTC instants), or None when the driver
+    cannot reproduce Spark's handling of it — then the merge keeps the
+    Spark plan. ``key`` also rules out floating types, which Spark groups
+    with NaN and -0.0 normalised."""
+    import pyarrow as pa
+
+    if dtype == StringType():  # the default UTF8_BINARY collation only
+        return pa.string()
+    types = {ByteType: pa.int8(), ShortType: pa.int16(),
+             IntegerType: pa.int32(), LongType: pa.int64(),
+             DateType: pa.date32(), BooleanType: pa.bool_(),
+             TimestampType: pa.timestamp("us", tz="UTC")}
+    if not key:
+        types.update({FloatType: pa.float32(), DoubleType: pa.float64()})
+    return types.get(type(dtype))
+
+
+def _arrow_schema(schema: StructType, keys: list[str], order_col: str):
+    """The pyarrow schema of a driver merge over ``schema`` (the order
+    column, when present, must be integral, date or timestamp), or None."""
+    import pyarrow as pa
+
+    fields = []
+    for f in schema.fields:
+        t = _arrow_type(f.dataType, key=f.name in keys or f.name == order_col)
+        if t is None or (f.name == order_col and pa.types.is_boolean(t)):
+            return None
+        fields.append(pa.field(f.name, t))
+    return pa.schema(fields)
+
+
+def _driver_rows(spark, path: str, df: DataFrame, keys: list[str],
+                 order_col: str):
+    """The update rows of a merge into the table at ``path`` that the
+    driver may run, as a pyarrow Table of ``_arrow_schema`` — one capped
+    collect, the merge's only Spark job — or None, and the merge takes the
+    Spark plan: the cap is 0, the table is not local, a key or column type
+    is outside ``_arrow_schema``, the session writes parquet the driver
+    cannot match (``_parquet_options``), or the batch alone is over
+    ``_DRIVER_MERGE_MAX_ROWS``."""
+    cap = _DRIVER_MERGE_MAX_ROWS
+    if not cap or _local_path(path) is None or _parquet_options(spark) is None:
+        return None
+    schema = _arrow_schema(df.schema, keys, order_col)
+    if schema is None:
+        return None
+    table = df.limit(cap + 1).toArrow()
+    return None if table.num_rows > cap else table.cast(schema)
+
+
+_WRITE_CODECS = {"snappy": "snappy", "gzip": "gzip", "zstd": "zstd",
+                 "none": "none", "uncompressed": "none"}
+
+
+def _parquet_options(spark) -> dict | None:
+    """pyarrow ``write_table`` options that write what the session's
+    parquet writer writes (codec, timestamp encoding), or None when the
+    driver cannot match it."""
+    codec = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+    codec = _WRITE_CODECS.get(codec.lower())
+    ts = spark.conf.get("spark.sql.parquet.outputTimestampType", "INT96")
+    if codec is None or ts not in ("INT96", "TIMESTAMP_MICROS"):
+        return None
+    return {"compression": codec,
+            "use_deprecated_int96_timestamps": ts == "INT96"}
+
+
+# parquet-mr decides dictionary encoding on a column's first page, which
+# holds at most this many rows
+_FIRST_PAGE_ROWS = 20_000
+# and it drops a dictionary that outgrows this
+_DICTIONARY_MAX_BYTES = 1 << 20
+
+
+def _dictionary_columns(table, int96: bool) -> list[str]:
+    """The columns parquet-mr writes dictionary-encoded: those whose first
+    page encodes smaller with the dictionary (ids at the bit width of the
+    distinct count, plus the dictionary itself) than plain — the others
+    fall back to plain encoding. pyarrow would keep every dictionary."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    page = table.slice(0, _FIRST_PAGE_ROWS)
+    out = []
+    for name, col in zip(page.column_names, page.columns):
+        if pa.types.is_boolean(col.type):
+            continue  # parquet-mr never dictionary-encodes booleans
+        values = col.drop_null()
+        distinct = pc.unique(values)
+        if pa.types.is_string(col.type):
+            plain = 4 * len(values) + (
+                pc.sum(pc.binary_length(values)).as_py() or 0)
+            dict_bytes = 4 * len(distinct) + (
+                pc.sum(pc.binary_length(distinct)).as_py() or 0)
+        else:
+            width = 12 if int96 and pa.types.is_timestamp(col.type) else \
+                col.type.bit_width // 8
+            plain, dict_bytes = width * len(values), width * len(distinct)
+        ids = (len(values) * max(len(distinct) - 1, 0).bit_length() + 7) // 8
+        if ids + dict_bytes < plain and dict_bytes <= _DICTIONARY_MAX_BYTES:
+            out.append(name)
+    return out
+
+
+def _write_parquet(table, path: str, options: dict) -> None:
+    """Write ``table`` as one parquet file with the session writer's codec,
+    timestamp encoding and dictionary choices (``_parquet_options``) and
+    no ``ARROW:schema`` footer key, so a driver-written file is no larger
+    than Spark's for the same rows."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, path, store_schema=False,
+                   use_dictionary=_dictionary_columns(
+                       table, options["use_deprecated_int96_timestamps"]),
+                   **options)
+
+
+def _read_arrow(paths: list[str], schema):
+    """The rows of these parquet files (written by Spark or by
+    ``_write_parquet``) as one pyarrow Table of ``schema`` — columns a
+    file lacks read as null, as in Spark's explicit-schema scan — or None
+    when a file cannot be read so, or was written with Spark's legacy
+    (rebased) calendar."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tables = []
+    for p in paths:
+        try:
+            f = pq.ParquetFile(p, coerce_int96_timestamp_unit="us")
+            if any(k.startswith(b"org.apache.spark.legacy")
+                   for k in f.metadata.metadata or {}):
+                return None
+            have = set(f.schema_arrow.names)
+            t = f.read(columns=[n for n in schema.names if n in have])
+            tables.append(pa.table(
+                [t.column(fld.name).cast(fld.type) if fld.name in have
+                 else pa.nulls(t.num_rows, fld.type) for fld in schema],
+                schema=schema))
+        except (OSError, pa.ArrowException):
+            return None
+    return pa.concat_tables(tables) if tables else schema.empty_table()
+
+
 def _fs(spark, path: str):
     """(FileSystem, Path) via the Hadoop FS API — works on any scheme the
     cluster can write (local, HDFS, S3A), unlike shutil."""
@@ -164,11 +383,20 @@ def _publish(spark, df: DataFrame, path: str) -> None:
     spark.catalog.refreshByPath(path)
 
 
-def _first_batch(updates: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+def _first_batch(updates: DataFrame, keys: list[str], order_col: str, *,
+                 _cluster_by: list[str] = ()) -> DataFrame:
     """The first write's rows: the PK invariant must hold from the first
     batch, so duplicate keys collapse by the same last-write-wins rule the
     merge applies (the reference's INSERT..ON DUPLICATE KEY UPDATE collapses
-    them by arrival order)."""
+    them by arrival order).
+
+    ``_cluster_by`` (``write_upsert_partitioned``: the partition columns,
+    a function of ``keys``) hash-clusters the rows on these columns and
+    dedups within them, so the partitioned write needs no second
+    exchange."""
+    if _cluster_by:
+        updates = updates.repartition(*[F.col(c) for c in _cluster_by])
+        keys = [*_cluster_by, *[k for k in keys if k not in _cluster_by]]
     first = dedup_last(updates, keys, [order_col]) \
         if order_col in updates.columns else updates.dropDuplicates(keys)
     return first.drop(order_col)
@@ -252,9 +480,17 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     reference's delete-then-insert per-slice refresh
     (tasks/wind/future_reorg/reorg_md_2_db.py:176-193).
 
-    Steps:
+    The first write dedups the batch within its partition columns + keys
+    after one hash clustering on the partition columns (one exchange).
+
+    A merge small enough for the driver (see the module docstring) starts
+    one Spark job, the capped collect of ``updates``, which also names the
+    touched partitions; ``_driver_upsert_partitions`` then reads, merges
+    and swaps them in. Otherwise the Spark plan:
       1. distinct partition values in ``updates`` (one driver row per
-         touched partition — thousands at most);
+         touched partition — thousands at most; from the collect when the
+         merge was too large for the driver only because of its touched
+         rows);
       2. the touched slice (``_touched_slice``): a listing of the table
          root decides which touched partition directories exist, and only
          those are read, with ``basePath`` and an explicit schema — data
@@ -283,8 +519,9 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     # every touched partition with ONLY the update rows and destroying the
     # base rows whose keys were not in the batch
     if not _exists(spark, path):
-        overwrite_partitions(_first_batch(updates, keys, order_col), path,
-                             partition_cols)
+        _write_partitions(_first_batch(updates, keys, order_col,
+                                       _cluster_by=partition_cols),
+                          path, partition_cols)
         return
     parts = StructType([StructField(c, updates.schema[c].dataType, True)
                         for c in partition_cols])
@@ -294,7 +531,16 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     updates = updates.withColumns({
         f.name: F.when(F.col(f.name) != "", F.col(f.name))
         for f in parts.fields if f.dataType == StringType()})
-    touched = updates.select(*partition_cols).distinct().collect()
+    rows = _driver_rows(spark, path, updates, [*partition_cols, *keys],
+                        order_col) \
+        if all(_text_kind(f.dataType) for f in parts.fields) else None
+    if rows is None:
+        touched = updates.select(*partition_cols).distinct().collect()
+    else:
+        touched = rows.group_by(partition_cols).aggregate([]).to_pylist()
+        if _driver_upsert_partitions(spark, path, parts, touched, rows,
+                                     keys, order_col):
+            return
     base_slice = _touched_slice(spark, path, parts, touched)
     if base_slice is None:
         # the partition columns take their types from `updates` here too:
@@ -313,6 +559,143 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     merged = upsert_frames(base_slice, updates, keys, order_col,
                            _cluster_by=partition_cols)
     _write_partitions(merged, path, partition_cols)
+
+
+def _driver_upsert_partitions(spark, path: str, parts: StructType,
+                              touched: list, updates, keys: list[str],
+                              order_col: str) -> bool:
+    """The merge of ``write_upsert_partitioned`` on the driver: pyarrow
+    reads the touched partitions, ``upsert_arrow`` merges them with the
+    collected ``updates``, and each touched partition's merged rows are
+    staged as one file and swapped in (``_swap_partitions``). False — the
+    caller keeps the Spark plan — when update plus touched rows exceed
+    ``_DRIVER_MERGE_MAX_ROWS``, no footer gives the table's schema, a data
+    column's type is outside ``_arrow_type`` or differs from the update's,
+    the updates bring a column the table lacks, or a file cannot be read."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    root = _local_path(path)
+    existing = _existing_partitions(root, parts.names, touched)
+    files = {rel: [os.path.join(root, rel, n)
+                   for n in sorted(os.listdir(os.path.join(root, rel)))
+                   if not n.startswith((".", "_"))]
+             for rel in existing.values()}
+    n_base = sum(pq.read_metadata(f).num_rows
+                 for fs in files.values() for f in fs)
+    if n_base + updates.num_rows > _DRIVER_MERGE_MAX_ROWS:
+        return False
+    footer = _footer_schema(root, next(iter(files), ""), len(parts.names))
+    if footer is None:
+        return False
+    data = [f for f in footer.fields if f.name not in parts.names]
+    names = {f.name for f in data}
+    if any(c not in names and c not in parts.names and c != order_col
+           for c in updates.column_names):
+        return False
+    fields = []
+    for f in data:
+        t = _arrow_type(f.dataType, key=f.name in keys)
+        if t is None or (f.name in updates.column_names
+                         and updates.schema.field(f.name).type != t):
+            return False
+        fields.append(pa.field(f.name, t))
+    schema = pa.schema(fields)
+    slices = []
+    for values, rel in existing.items():
+        base = _read_arrow(files[rel], schema)
+        if base is None:
+            return False
+        for c, v in zip(parts.names, values):
+            t = updates.schema.field(c).type
+            const = pa.nulls(base.num_rows, t)
+            base = base.append_column(c, const if v is None else
+                                      pc.fill_null(const, pa.scalar(v, t)))
+        slices.append(base)
+    base = pa.concat_tables(slices) if slices else pa.schema(
+        fields + [updates.schema.field(c) for c in parts.names]).empty_table()
+    merged = upsert_arrow(base, updates, [*parts.names, *[
+        k for k in keys if k not in parts.names]], order_col)
+    starts = list(np.flatnonzero(_group_starts(merged, parts.names)))
+    staged = {}
+    for lo, hi in zip(starts, starts[1:] + [merged.num_rows]):
+        rel = os.path.join(*[_partition_dir(c, merged.column(c)[lo].as_py())
+                             for c in parts.names])
+        staged[rel] = merged.slice(lo, hi - lo).select(schema.names)
+    _swap_partitions(root, staged, _parquet_options(spark))
+    spark.catalog.refreshByPath(path)
+    return True
+
+
+_DRIVER_STAGING = ".driver-staging-"
+
+
+def _swap_partitions(root: str, staged: dict, options: dict) -> None:
+    """Stage each partition's rows (``{rel dir: pyarrow Table}``) as one
+    file under a hidden directory in the table, then swap the partitions
+    in one by one: the old directory is renamed aside, the staged one into
+    its place, and the old one deleted. A failure while staging leaves the
+    table as it was and removes the staging directory; a failure in a swap
+    puts that partition's old directory back, so every partition holds its
+    old or its new rows, never neither or both, and again nothing is left
+    behind. A crash (no cleanup runs) between swaps leaves what Spark's
+    dynamic overwrite leaves: some partitions swapped, the rest old, and
+    the unswapped ones staged in a hidden directory inside the table."""
+    import shutil
+    import uuid
+
+    stage = os.path.join(root, f"{_DRIVER_STAGING}{uuid.uuid4().hex}")
+    name = f"part-00000-{uuid.uuid4()}.c000.parquet"
+    try:
+        for rel, rows in staged.items():
+            os.makedirs(os.path.join(stage, "new", rel))
+            _write_parquet(rows, os.path.join(stage, "new", rel, name),
+                           options)
+        for rel in staged:
+            _swap_partition(root, stage, rel)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _swap_partition(root: str, stage: str, rel: str) -> None:
+    import shutil
+
+    final, old = os.path.join(root, rel), os.path.join(stage, "old", rel)
+    had = os.path.isdir(final)
+    if had:
+        os.makedirs(os.path.dirname(old), exist_ok=True)
+        os.rename(final, old)
+    try:
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        os.rename(os.path.join(stage, "new", rel), final)
+    except BaseException:
+        if had:
+            os.rename(old, final)
+        raise
+    if had:
+        shutil.rmtree(old)
+
+
+def _group_starts(table, cols: list[str]):
+    """A bool per row of ``table``: True where the row's ``cols`` differ
+    from the previous row's (nulls equal to nulls) — the first row of each
+    group of a table sorted by ``cols``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = table.num_rows
+    first = np.ones(n, bool)
+    if n > 1:
+        first[1:] = False
+        for c in cols:
+            col = table.column(c)
+            prev, cur = col.slice(0, n - 1), col.slice(1)
+            same = pc.or_kleene(pc.fill_null(pc.equal(prev, cur), False),
+                                pc.and_(pc.is_null(prev), pc.is_null(cur)))
+            first[1:] |= ~same.to_numpy(zero_copy_only=False)
+    return first
 
 
 def _plain_path(path: str) -> str:
@@ -394,33 +777,13 @@ def _touched_slice(spark, path: str, parts: StructType,
     directories a dynamic overwrite of those values replaces — read with
     no partition-discovery and no schema-inference job; None when the
     table is not local, a partition type is not integral, string or date,
-    or the footer lacks Spark's schema (the caller then reads the whole
-    table).
-
-    Existence is decided from directory listings that RAISE on I/O error:
-    a touched partition wrongly taken as absent would be overwritten with
-    only the update rows."""
+    or no footer gives the table's schema (the caller then reads the whole
+    table). Existence is decided by ``_existing_partitions``."""
     root = _local_path(path)
     if root is None or not all(_text_kind(f.dataType)
                                for f in parts.fields):
         return None
-    listings: dict[str, list[str]] = {}
-
-    def names(rel: str) -> list[str]:
-        if rel not in listings:
-            listings[rel] = sorted(os.listdir(os.path.join(root, rel)))
-        return listings[rel]
-
-    existing = []
-    for row in touched:
-        rel = ""
-        for c in parts.names:
-            seg = _partition_dir(c, row[c])
-            if seg not in names(rel):
-                break
-            rel = os.path.join(rel, seg)
-        else:
-            existing.append(rel)
+    existing = list(_existing_partitions(root, parts.names, touched).values())
     data = _footer_schema(root, existing[0] if existing else "",
                           len(parts.names))
     if data is None:
@@ -433,9 +796,39 @@ def _touched_slice(spark, path: str, parts: StructType,
             .parquet(*[os.path.join(path, rel) for rel in existing]))
 
 
+def _existing_partitions(root: str, names: list[str], touched: list) -> dict:
+    """``{partition values: directory relative to root}`` for the rows of
+    ``touched`` (partition value tuples, or rows keyed by ``names``) whose
+    partition directory exists, from listings that RAISE on I/O error: a
+    touched partition wrongly taken as absent would be overwritten with
+    only the update rows."""
+    listings: dict[str, list[str]] = {}
+
+    def listed(rel: str) -> list[str]:
+        if rel not in listings:
+            listings[rel] = sorted(os.listdir(os.path.join(root, rel)))
+        return listings[rel]
+
+    existing = {}
+    for row in touched:
+        values = tuple(row[c] for c in names)
+        rel = ""
+        for c, v in zip(names, values):
+            seg = _partition_dir(c, v)
+            if seg not in listed(rel):
+                break
+            rel = os.path.join(rel, seg)
+        else:
+            existing[values] = rel
+    return existing
+
+
 def _footer_schema(root: str, rel: str, depth: int) -> StructType | None:
-    """The Spark schema recorded in the footer of the first data file under
-    ``root/rel`` (``depth`` directory levels below ``root``), or None."""
+    """The Spark schema of the first data file under ``root/rel`` (``depth``
+    directory levels below ``root``): the one Spark records in the footer,
+    else — a driver-written file, which carries no key-value metadata —
+    the one Spark reads from its parquet types (``_spark_type``); None
+    when there is no file or a type has no such reading."""
     import pyarrow.parquet as pq
 
     level = len(rel.split(os.sep)) if rel else 0
@@ -447,11 +840,28 @@ def _footer_schema(root: str, rel: str, depth: int) -> StructType | None:
             if found is not None:
                 return found
             continue
-        meta = pq.read_metadata(os.path.join(root, rel, name)).metadata or {}
-        if _SPARK_SCHEMA_KEY not in meta:
-            return None
-        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        md = pq.read_metadata(os.path.join(root, rel, name))
+        if _SPARK_SCHEMA_KEY in (md.metadata or {}):
+            return StructType.fromJson(
+                json.loads(md.metadata[_SPARK_SCHEMA_KEY]))
+        fields = [StructField(f.name, _spark_type(f.type), True)
+                  for f in md.schema.to_arrow_schema()]
+        return None if any(f.dataType is None for f in fields) \
+            else StructType(fields)
     return None
+
+
+def _spark_type(arrow_type):
+    """The Spark type of a column of a file the driver wrote — the inverse
+    of ``_arrow_type`` — or None."""
+    import pyarrow as pa
+
+    for spark_type in (ByteType(), ShortType(), IntegerType(), LongType(),
+                       FloatType(), DoubleType(), StringType(), DateType(),
+                       BooleanType()):
+        if _arrow_type(spark_type) == arrow_type:
+            return spark_type
+    return TimestampType() if pa.types.is_timestamp(arrow_type) else None
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:

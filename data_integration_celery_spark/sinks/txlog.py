@@ -74,9 +74,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_integration_celery_spark.operators import upsert as upsert_mod
 from data_integration_celery_spark.operators.upsert import (
-    _INT_BITS, _local_path, _plain_path, _text_kind, _uri_path,
-    upsert_annotated, upsert_frames)
+    _INT_BITS, _driver_rows, _local_path, _parquet_options, _plain_path,
+    _read_arrow, _text_kind, _uri_path, _write_parquet, upsert_annotated,
+    upsert_arrow, upsert_frames)
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "_data"
@@ -897,15 +899,23 @@ class TxTable:
                          for c in stats_cols}
                 adds.append({"path": rel, "rows": row["__rows"],
                              "stats": stats})
-        if bloom and bloom.get("cols"):
-            blooms = self._driver_blooms(adds, df.schema, bloom)
-            if blooms is None:
-                written = self.spark.read.schema(df.schema).parquet(batch_dir)
-                blooms = self._build_blooms(written, bloom)
-            for a in adds:
-                if a["path"] in blooms:
-                    a["bloom"] = blooms[a["path"]]
+        self._add_blooms(adds, df.schema, bloom, batch_dir)
         return adds
+
+    def _add_blooms(self, adds: list[dict], schema: StructType,
+                    bloom: dict | None, batch_dir: str) -> None:
+        """Attach the declared Bloom sidecars to the add-actions of the
+        files under ``batch_dir``: built on the driver (``_driver_blooms``)
+        where it can, else by the Spark-job build."""
+        if not (bloom and bloom.get("cols")):
+            return
+        blooms = self._driver_blooms(adds, schema, bloom)
+        if blooms is None:
+            written = self.spark.read.schema(schema).parquet(batch_dir)
+            blooms = self._build_blooms(written, bloom)
+        for a in adds:
+            if a["path"] in blooms:
+                a["bloom"] = blooms[a["path"]]
 
     def _footer_adds(self, batch_dir: str, batch_rel: str,
                      schema: StructType, stats_cols: list[str]
@@ -1418,41 +1428,102 @@ class TxTable:
         be one of ``keys``; otherwise the merge rewrites the whole table
         (still correct, documented degradation). An empty ``updates``
         writes nothing and burns no commit (returns the current version).
+
+        Where it runs: a batch the driver may merge (``_driver_rows``: one
+        capped collect of the conformed updates, in place of the bounds
+        job; not for tables with CHECK constraints, the change-data feed
+        or stats columns other than string, integral and date) prunes by
+        its exact prune values, and when its rows plus the touched files'
+        rows fit the cap, ``_driver_merge`` writes the merged file. Every
+        other merge runs the Spark plan (``upsert_frames``, pruned by the
+        batch's [min, max] when it was not collected).
         """
         stats_cols = st.stats_cols
         prune_col = stats_cols[0] if stats_cols and stats_cols[0] in keys else None
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if prune_col is not None:
-            aggs += [F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")]
-        bounds = updates.select(*aggs).collect()[0]  # bounded: one row
-        if not bounds["n"]:
-            return st.version
-        touched, kept = st.adds(), []
-        if prune_col is not None:
+        schema = st.struct()
+        conformed = _conform(updates, schema, keep=order_col)
+        # the driver's stats must be exact: string, integral or date columns
+        driver = not (st.cdf or st.constraints) and all(
+            _text_kind(f.dataType) for f in schema.fields
+            if f.name in stats_cols)
+        rows = _driver_rows(self.spark, self.path, conformed, keys,
+                            order_col) if driver else None
+        if rows is None:
+            aggs = [F.count(F.lit(1)).alias("n")]
+            if prune_col is not None:
+                aggs += [F.min(prune_col).alias("lo"),
+                         F.max(prune_col).alias("hi")]
+            bounds = updates.select(*aggs).collect()[0]  # bounded: one row
+            if not bounds["n"]:
+                return st.version
             # bounds normalized like the stored stats; Decimal bounds widen
             # OUTWARD so float rounding can only disable pruning, never
             # prune a file that holds an updated key
-            lo, hi = _widen(bounds["lo"], -1), _widen(bounds["hi"], +1)
-            touched, kept = [], []
-            for add in st.adds():
-                if _overlaps(add.get("stats", {}).get(prune_col), lo, hi):
-                    touched.append(add)
-                else:
-                    kept.append(add)
-        schema = st.struct()
-        # DV-aware read: rows deleted merge-on-read must not resurrect
-        # through the CoW rewrite of their file
-        base = self._read_adds(touched, schema)
-        conformed = _conform(updates, schema, keep=order_col)
-        merged = upsert_frames(base, conformed, keys, order_col)
-        self._enforce(merged, st.constraints)
-        adds = self._write_batch(merged, stats_cols, bloom=st.bloom)
+            values = None if prune_col is None else \
+                (_widen(bounds["lo"], -1), _widen(bounds["hi"], +1))
+        elif not rows.num_rows:
+            return st.version
+        else:
+            values = None if prune_col is None else \
+                rows.column(prune_col).to_pylist()
+        touched, kept = _prune(st.adds(), prune_col, values, rows is None)
         extra: dict = {"pruned_files": len(kept)}
-        if st.cdf:
-            extra.update(self._write_merge_cdf(base, conformed, keys,
-                                               schema, order_col))
+        adds = None if rows is None else \
+            self._driver_merge(st, touched, rows, keys, order_col)
+        if adds is None:
+            # DV-aware read: rows deleted merge-on-read must not resurrect
+            # through the CoW rewrite of their file
+            base = self._read_adds(touched, schema)
+            merged = upsert_frames(base, conformed, keys, order_col)
+            self._enforce(merged, st.constraints)
+            adds = self._write_batch(merged, stats_cols, bloom=st.bloom)
+            if st.cdf:
+                extra.update(self._write_merge_cdf(base, conformed, keys,
+                                                   schema, order_col))
         return self._commit("merge_upsert", st, adds,
                             [a["path"] for a in touched], extra=extra, txn=txn)
+
+    def _driver_merge(self, st: TableState, touched: list[dict], rows,
+                      keys: list[str], order_col: str) -> list[dict] | None:
+        """The copy-on-write merge on the driver: pyarrow reads the touched
+        files, ``upsert_arrow`` merges them with the collected ``rows``,
+        and pyarrow writes the result as one file. Its add-action carries
+        the row count and exact min/max from the Arrow data (strings in
+        byte order, as Spark's ``min``/``max``) and the sidecars of
+        ``_driver_blooms`` — what ``_write_batch`` records for the same
+        rows. None — the caller runs the Spark plan — when update plus
+        touched rows exceed ``_DRIVER_MERGE_MAX_ROWS``, a touched file has
+        a deletion vector, or a file cannot be read."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if (any("rows" not in a or a.get("dv", {}).get("refs")
+                for a in touched)
+                or rows.num_rows + sum(a["rows"] for a in touched)
+                > upsert_mod._DRIVER_MERGE_MAX_ROWS):
+            return None
+        root = _local_path(self.path)
+        schema = pa.schema([rows.schema.field(f.name)
+                            for f in st.struct().fields])
+        base = _read_arrow([os.path.join(root, a["path"]) for a in touched],
+                           schema)
+        if base is None:
+            return None
+        merged = upsert_arrow(base, rows, keys, order_col)
+        batch = f"{_DATA_DIR}/{uuid.uuid4().hex}"
+        rel = f"{batch}/part-00000-{uuid.uuid4()}-c000.parquet"
+        os.makedirs(os.path.join(root, batch))
+        _write_parquet(merged, os.path.join(root, rel),
+                       _parquet_options(self.spark))
+        stats = {}
+        for c in st.stats_cols:
+            lo, hi = pc.min_max(merged.column(c)).values()
+            stats[c] = {"min": _widen(lo.as_py(), -1),
+                        "max": _widen(hi.as_py(), +1)}
+        adds = [{"path": rel, "rows": merged.num_rows, "stats": stats}]
+        self._add_blooms(adds, st.struct(), st.bloom, os.path.join(
+            self.path, batch))
+        return adds
 
     def _write_merge_cdf(self, base: DataFrame, updates: DataFrame,
                          keys: list[str], schema: StructType,
@@ -2006,6 +2077,34 @@ def _widen(value, direction: int):
         f = float(value)
         return math.nextafter(f, -math.inf if direction < 0 else math.inf)
     return _json_safe(value)
+
+
+def _prune(adds: list[dict], col: str | None, values,
+           is_range: bool) -> tuple[list[dict], list[dict]]:
+    """Split ``adds`` into (touched, kept) for a merge keyed on ``col``:
+    a file is touched when its ``col`` stats may hold one of ``values`` —
+    the batch's exact prune values, or with ``is_range`` one ``(lo, hi)``
+    range. Without ``col`` every file is touched, and so with a null
+    among the exact values (stats ignore nulls, and the merge groups null
+    keys together)."""
+    import bisect
+
+    if col is None or (not is_range and None in values):
+        return list(adds), []
+    points = None if is_range else sorted({_widen(v, 0) for v in values})
+    touched, kept = [], []
+    for add in adds:
+        st = add.get("stats", {}).get(col)
+        if is_range:
+            hit = _overlaps(st, *values)
+        elif st is None or st.get("min") is None \
+                or type(st["min"]) is not type(points[0]):
+            hit = True  # the comparison cannot be made: keep the file
+        else:
+            i = bisect.bisect_left(points, st["min"])
+            hit = i < len(points) and points[i] <= st["max"]
+        (touched if hit else kept).append(add)
+    return touched, kept
 
 
 def _overlaps(st: dict | None, lo, hi) -> bool:

@@ -23,3 +23,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_merges(monkeypatch):
+    """Every merge takes the Spark plan (a driver-merge cap of 0): for tests
+    that count a merge's Spark jobs or check its plan."""
+    from data_integration_celery_spark.operators import upsert
+    monkeypatch.setattr(upsert, "_DRIVER_MERGE_MAX_ROWS", 0)

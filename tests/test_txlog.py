@@ -315,7 +315,7 @@ def test_commit_files_are_valid_json_with_schema(spark, sf_dir, tdir):
 # --------------------------------------------------------------------- plan
 
 
-def test_merge_plan_is_one_key_shuffle_no_python(spark, sf_dir):
+def test_merge_plan_is_one_key_shuffle_no_python(spark, sf_dir, spark_merges):
     """The CoW merge's data path: union → ONE hashpartitioning exchange on
     the PK (the window dedup) — no Python eval nodes, no cartesian shapes,
     no single-partition funnel of data rows. Same shuffle a Delta MERGE
@@ -653,7 +653,7 @@ def test_overwrite_narrower_schema_drops_stale_stats_col(spark, sf_dir, tdir):
     assert t.snapshot().count() == 10
 
 
-def test_zorder_key_is_pure_codegen(spark, sf_dir):
+def test_zorder_key_is_pure_codegen(spark, sf_dir, spark_merges):
     """The z-key is a when-chain + bit-interleave of Column expressions —
     whole-stage codegen, no Python eval nodes, no exchange of its own."""
     from data_integration_celery_spark.operators.zorder import with_zorder_key
@@ -1108,19 +1108,38 @@ def test_put_if_absent_cross_process_race(tdir):
 
 def test_single_upsert_kernel_contract():
     """Both durability contracts (write_upsert's staging+rename and
-    TxTable.merge_upsert's commit log) must resolve conflicts through the
-    ONE shared kernel — upsert_frames. A second inline merge implementation
-    is exactly the drift the decision matrix in operators/upsert.py exists
-    to prevent."""
+    TxTable.merge_upsert's commit log) resolve conflicts through the two
+    kernels of one rule — ``upsert_frames`` in Spark and ``upsert_arrow``
+    on the driver, held equal by
+    ``test_upsert_arrow_equals_upsert_frames`` — and nothing else ranks a
+    union of base and updates: a third inline merge is exactly the drift
+    the decision matrix in operators/upsert.py exists to prevent."""
     import inspect
 
     from data_integration_celery_spark.sinks import txlog
     from data_integration_celery_spark.operators import upsert as upsert_mod
     assert "upsert_frames(" in inspect.getsource(TxTable.merge_upsert)
+    assert "upsert_arrow(" in inspect.getsource(TxTable._driver_merge)
     assert txlog.upsert_frames is upsert_mod.upsert_frames
+    assert txlog.upsert_arrow is upsert_mod.upsert_arrow
     assert "upsert_frames(" in inspect.getsource(upsert_mod.write_upsert)
-    assert "upsert_frames(" in inspect.getsource(
-        upsert_mod.write_upsert_partitioned)
+    src = inspect.getsource(upsert_mod.write_upsert_partitioned)
+    assert "upsert_frames(" in src and "_driver_upsert_partitions(" in src
+    assert "upsert_arrow(" in inspect.getsource(
+        upsert_mod._driver_upsert_partitions)
+    # the ranking itself lives in the kernels alone
+    def ranks(fn):
+        src = inspect.getsource(fn)
+        return "sort_indices(" in src or (
+            "row_number()" in src and '"__src"' in src)
+    rankers = sorted(
+        f"{home.rsplit('.', 1)[-1]}.{name}"
+        for owner, home in ((txlog, txlog.__name__), (TxTable, "TxTable"),
+                            (upsert_mod, upsert_mod.__name__))
+        for name, fn in inspect.getmembers(owner, inspect.isfunction)
+        if fn.__module__ in (txlog.__name__, upsert_mod.__name__)
+        and (owner is TxTable or fn.__module__ == home) and ranks(fn))
+    assert rankers == ["upsert.upsert_annotated", "upsert.upsert_arrow"]
 
 
 def test_write_upsert_and_txtable_agree_on_disk(spark, sf_dir, tdir):
@@ -1200,7 +1219,7 @@ def test_bloom_cross_type_probe_no_false_negative(spark, tdir):
         .where(F.col("d").cast("string") == "not-a-number").count() == 0
 
 
-def test_bloom_batched_probe_single_job(spark, tdir):
+def test_bloom_batched_probe_single_job(spark, tdir, spark_merges):
     """N point-lookup probes that take the Spark path (cross-typed: int
     literals against a DOUBLE column) resolve through ONE local Spark job
     (the per-value spark.range(1) launch was O(N) jobs), and the batch
@@ -1375,7 +1394,7 @@ def test_kernel_probe_positions_match_spark(spark, tdir):
         assert all(_bloom_admits(a["bloom"][col], pos) for a in holders)
 
 
-def test_bloom_kernel_typed_probes_run_no_job(spark, tdir):
+def test_bloom_kernel_typed_probes_run_no_job(spark, tdir, spark_merges):
     """Probes whose value already has the column's type hash on the driver:
     a point lookup's Bloom pruning starts no Spark job."""
     import datetime
@@ -1396,7 +1415,8 @@ def test_bloom_kernel_typed_probes_run_no_job(spark, tdir):
     assert all(len(pos) == 3 for pos in batch)
 
 
-def test_merge_upsert_runs_no_job_after_its_write(spark, tdir, monkeypatch):
+def test_merge_upsert_runs_no_job_after_its_write(spark, tdir, monkeypatch,
+                                                spark_merges):
     """A merge into a Bloom table builds the new file's sidecars on the
     driver: no Spark job starts after the data write."""
     from pyspark.sql.readwriter import DataFrameWriter
@@ -2188,3 +2208,93 @@ def test_merge_cdf_base_wins_emits_identity_update(spark):
         assert _rows(feed) == sorted([(2, 20.0, "update_pre"),
                                       (2, 20.0, "update_post"),
                                       (3, 30.0, "insert")])
+
+
+# ------------------------------------------- driver-side merge (upsert_arrow)
+
+
+def _typed_rows(n, offset=0, tag="b"):
+    import datetime
+    return [(f"k{i:03d}" if i % 7 else f"ké{i}", i % 5, datetime.date(
+        2020, 1, 1) + datetime.timedelta(days=i),
+        datetime.datetime(2024, 3, 1, 1, 30) + datetime.timedelta(minutes=i),
+        i % 3 == 0, None if i % 11 == 0 else i * 1.5 + offset,
+        float(i) / 4, f"{tag}{i}日") for i in range(n)]
+
+
+_TYPED = ("code string, n int, d date, ts timestamp, flag boolean, "
+          "x double, f float, note string")
+
+
+@pytest.mark.parametrize("with_order", [True, False])
+def test_driver_merge_equals_spark_merge(spark, tdir, monkeypatch,
+                                         with_order):
+    """A merge run on the driver and the same merge run by the Spark plan
+    commit equal tables: equal snapshots and DuckDB reads of the live
+    files, and add-actions with the same rows, min/max stats (strings in
+    byte order) and Bloom sidecars — so the same probes admit the file."""
+    import duckdb
+
+    from data_integration_celery_spark.operators import upsert
+    from data_integration_celery_spark.sinks.txlog import _bloom_admits
+    base = spark.createDataFrame(_typed_rows(60), _TYPED)
+    upd_rows = [r for i, r in enumerate(_typed_rows(75, 100, "u"))
+                if i % 4 or i > 40]
+    upd = spark.createDataFrame(upd_rows, _TYPED)
+    if with_order:
+        upd = upd.withColumn("batch_id", F.lit(3).cast("long"))
+    got = {}
+    for name, cap in (("driver", upsert._DRIVER_MERGE_MAX_ROWS),
+                      ("spark", 0)):
+        t = TxTable(spark, os.path.join(tdir, name), batch_partitions=1)
+        t.create(base, stats_cols=["code", "d"], bloom_cols=["code", "d"],
+                 bloom_bits=4099, bloom_k=3)
+        monkeypatch.setattr(upsert, "_DRIVER_MERGE_MAX_ROWS", cap)
+        t.merge_upsert(upd, keys=["code", "n"])
+        monkeypatch.undo()
+        adds = t.live_files()
+        assert len(adds) == 1
+        paths = [os.path.join(t.path, a["path"]) for a in adds]
+        with duckdb.connect() as con:
+            duck = con.execute(
+                f"SELECT * FROM read_parquet({paths!r}) "
+                f"ORDER BY code, n").fetchall()
+        admits = [_bloom_admits(adds[0]["bloom"]["code"],
+                                t._bloom_positions(v, 4099, 3))
+                  for v in ("k001", "ké0", "zz", "u5日")]
+        got[name] = (_rows(t.snapshot()), duck,
+                     {k: v for k, v in adds[0].items() if k != "path"},
+                     admits, t.history()[-1]["pruned_files"],
+                     adds[0]["path"].endswith(".snappy.parquet"))
+    assert got["driver"][:-1] == got["spark"][:-1]
+    # the driver's file (no codec in its name) against Spark's
+    assert (got["driver"][-1], got["spark"][-1]) == (False, True)
+    assert got["driver"][3][:2] == [True, True]
+
+
+def test_driver_merge_prunes_by_exact_values_and_runs_one_job(spark, tdir):
+    """A small merge runs one Spark job (the capped collect of the updates,
+    in place of the bounds job) and rewrites only the files whose stats
+    hold one of its prune values: a file lying between two updated keys
+    stays live, where one [min, max] range over the batch would rewrite
+    it."""
+    df = spark.range(400).select(
+        "id", (F.col("id") % 7).cast("string").alias("v"))
+    t = TxTable(spark, tdir, batch_partitions=4)
+    t.create(df, stats_cols=["id"], bloom_cols=["v"])
+    before = {a["path"] for a in t.live_files()}
+    upd = spark.createDataFrame([(0, "lo"), (399, "hi")], "id long, v string")
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-merge", "one capped collect")
+    try:
+        t.merge_upsert(upd, keys=["id"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("driver-merge")) == 1
+    after = t.live_files()
+    assert len(before & {a["path"] for a in after}) == 2
+    assert t.history()[-1]["pruned_files"] == 2
+    got = {r["id"]: r["v"] for r in t.snapshot().collect()}
+    assert len(got) == 400 and got[0] == "lo" and got[399] == "hi"
+    assert t.snapshot(prune_eq={"v": "hi"}).where(F.col("v") == "hi") \
+        .count() == 1

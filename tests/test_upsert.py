@@ -191,6 +191,7 @@ _PSCHEMA = "code string, dt int, v double"
 ], ids=["write_upsert_partitioned", "compact_table"])
 def test_failed_partitioned_publish_leaves_nothing_behind(spark, tmp_path,
                                                           monkeypatch,
+                                                          spark_merges,
                                                           publish):
     """A partitioned publish whose write onto the table fails leaves the
     table's rows as they were and nothing beside it: the dynamic partition
@@ -293,7 +294,7 @@ def _upsert_over_failing_table(spark, tmp_path, monkeypatch, patch):
 
 
 def test_partitioned_first_write_requires_existence_not_read_success(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, spark_merges):
     """A transient read error on an EXISTING partitioned table must
     propagate — the old except-branch took the first-write path and
     dynamically overwrote touched partitions with ONLY the update rows,
@@ -533,30 +534,36 @@ def test_empty_string_partition_is_the_null_partition(spark, tmp_path):
     assert got == [("a", None, "a0"), ("b", None, "b1"), ("c", "x", "c0")]
 
 
-def test_partitioned_upsert_one_exchange(spark, tmp_path, monkeypatch):
-    """The partition-scoped merge shuffles once: the union is clustered on
-    the partition columns and ranked by a window over partition columns +
-    keys, and the write adds no second repartition."""
+def test_partitioned_upsert_one_exchange(spark, tmp_path, monkeypatch,
+                                         spark_merges):
+    """The partition-scoped upsert shuffles once, on its first write and on
+    a merge: the rows (the union, for a merge) are clustered on the
+    partition columns and ranked or deduplicated within partition columns
+    + keys, and the write adds no second repartition."""
     from data_integration_celery_spark.operators import upsert as U
     path = str(tmp_path / "t")
     schema = "k long, p long, v string, batch_id long"
-    U.write_upsert_partitioned(spark, spark.createDataFrame(
-        [(i, i % 4, "v0", 0) for i in range(20)], schema), path, ["k"], ["p"])
     written = []
     real = U._write_partitions
     monkeypatch.setattr(U, "_write_partitions",
                         lambda df, *a: (written.append(df), real(df, *a)))
     U.write_upsert_partitioned(spark, spark.createDataFrame(
-        [(1, 1, "new", 1), (100, 0, "ins", 1)], schema), path, ["k"], ["p"])
+        [(i, i % 4, "v0", 0) for i in range(20)] + [(3, 3, "v1", 1)],
+        schema), path, ["k"], ["p"])
     plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    U.write_upsert_partitioned(spark, spark.createDataFrame(
+        [(1, 1, "new", 1), (100, 0, "ins", 1)], schema), path, ["k"], ["p"])
+    plan = written[1]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Union" in plan.split("Exchange hashpartitioning")[1], plan
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert len(got) == 21 and got[1] == "new" and got[100] == "ins"
+    assert got[3] == "v1"
 
 
 def test_partitioned_upsert_runs_no_discovery_or_inference_job(
-        spark, tmp_path):
+        spark, tmp_path, spark_merges):
     """On a table of 48 partitions, an upsert touching two of them lists
     and reads only those two: no partition-discovery job (one task per
     partition directory) and no schema-inference job — the jobs Spark
@@ -583,3 +590,263 @@ def test_partitioned_upsert_runs_no_discovery_or_inference_job(
     assert max(s.numTasks for s in stages) < 40
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert len(got) == 481 and got[1] == "new" and got[1000] == "ins"
+
+
+# ------------------------------------------- driver-side merge (upsert_arrow)
+
+_KEY_DOMAINS = {
+    "string": ("string", ["a", "b", "é", "日本", "", "zÿ"]),
+    "long": ("long", [-(2 ** 40), -1, 0, 7, 2 ** 62]),
+    "int": ("int", [-5, 0, 3, 2 ** 31 - 1]),
+    "date": ("date", [__import__("datetime").date(1990, 1, 1),
+                      __import__("datetime").date(2024, 2, 29),
+                      __import__("datetime").date(9999, 12, 31)]),
+    "timestamp": ("timestamp", [
+        __import__("datetime").datetime(2024, 3, 1, 1, 30),
+        __import__("datetime").datetime(2024, 3, 1, 1, 30, 0, 1),
+        __import__("datetime").datetime(1999, 12, 31, 23, 59, 59)]),
+}
+
+
+def _random_frame(rng, kind, n, with_order, src):
+    import pyarrow as pa
+    _, domain = _KEY_DOMAINS[kind]
+    rows, seen = [], set()
+    for i in range(n):
+        k1 = None if rng.random() < 0.15 else domain[rng.integers(len(domain))]
+        k2 = None if rng.random() < 0.15 else int(rng.integers(3))
+        o = None if rng.random() < 0.2 else int(rng.integers(3))
+        if (k1, k2, o) in seen:  # (keys, order_col) unique within a frame
+            continue
+        seen.add((k1, k2, o))
+        row = {"k1": k1, "k2": k2, "v": f"{src}{i}é"}
+        if with_order:
+            row["o"] = o
+        rows.append(row)
+    ptype = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
+             "date": pa.date32(), "timestamp": pa.timestamp("us")}[kind]
+    fields = [("k1", ptype), ("k2", pa.int64()), ("v", pa.string())]
+    if with_order:
+        fields.append(("o", pa.int64()))
+    return rows, pa.Table.from_pylist(rows, pa.schema(fields))
+
+
+@pytest.mark.parametrize("kind", sorted(_KEY_DOMAINS))
+def test_upsert_arrow_equals_upsert_frames(spark, kind):
+    """The driver kernel and the Spark kernel keep the same rows on seeded
+    random frames: null keys (partly and wholly null), null and tied order
+    values, and the order column missing from either side."""
+    import numpy as np
+    rng = np.random.default_rng(sum(map(ord, kind)))
+    ddl_type = _KEY_DOMAINS[kind][0]
+    for trial, (base_order, upd_order) in enumerate(
+            [(True, True), (False, True), (True, False), (False, False),
+             (True, True), (True, True)]):
+        base_rows, base = _random_frame(rng, kind, 40, base_order, "b")
+        upd_rows, upd = _random_frame(rng, kind, 25, upd_order, "u")
+
+        def sdf(rows, with_order):
+            ddl = f"k1 {ddl_type}, k2 long, v string" + (
+                ", o long" if with_order else "")
+            return spark.createDataFrame(
+                [tuple(r.values()) for r in rows], ddl)
+
+        want = upsert.upsert_frames(sdf(base_rows, base_order),
+                                    sdf(upd_rows, upd_order),
+                                    ["k1", "k2"], "o")
+        got = upsert.upsert_arrow(base, upd, ["k1", "k2"], "o")
+        assert got.column_names == want.columns
+        key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
+        assert sorted(map(tuple, (r.values() for r in got.to_pylist())),
+                      key=key) == \
+            sorted(map(tuple, want.collect()), key=key), (kind, trial)
+
+
+def test_upsert_arrow_rejects_floating_order_and_keys():
+    import pyarrow as pa
+    t = pa.table({"k": [1.0], "o": [1]})
+    with pytest.raises(TypeError):
+        upsert.upsert_arrow(t, t, ["k"], "o")
+    t = pa.table({"k": [1], "o": [1.0]})
+    with pytest.raises(TypeError):
+        upsert.upsert_arrow(t, t, ["k"], "o")
+
+
+def _pparts(parts):
+    return [(f"k{i}", p, "old", 0) for i, p in enumerate(parts)] \
+        + [(f"s{i}", p, "same", 0) for i, p in enumerate(parts)]
+
+
+def test_partitioned_driver_merge_equals_spark_merge(spark, tmp_path,
+                                                     monkeypatch):
+    """A partition-scoped upsert merged on the driver leaves the table the
+    Spark plan leaves: the same rows through Spark and through DuckDB, the
+    same partition directories (escaped, default and numeric-looking
+    string values included) and one file per touched partition."""
+    import duckdb
+
+    schema = "k string, p string, v string, batch_id long"
+    parts = ["a/b", "x=y", "50%", "é", None, "001", ""]
+    upd = [(f"k{i}", p, "new", 1) for i, p in enumerate(parts)] \
+        + [("fresh", "001", "ins", 1), ("n0", "new/part", "ins", 1)]
+    tables = {}
+    for name, cap in (("driver", upsert._DRIVER_MERGE_MAX_ROWS),
+                      ("spark", 0)):
+        path = str(tmp_path / name)
+        upsert.write_upsert_partitioned(
+            spark, spark.createDataFrame(_pparts(parts), schema),
+            path, ["k"], ["p"])
+        monkeypatch.setattr(upsert, "_DRIVER_MERGE_MAX_ROWS", cap)
+        upsert.write_upsert_partitioned(
+            spark, spark.createDataFrame(upd, schema), path, ["k"], ["p"])
+        monkeypatch.undo()
+        files = sorted(os.path.relpath(os.path.join(r, f), path)
+                       for r, _, fs in os.walk(path) for f in fs
+                       if f.endswith(".parquet"))
+        with duckdb.connect() as con:
+            duck = sorted(con.execute(
+                f"SELECT k, v, p FROM read_parquet('{path}/**/*.parquet', "
+                f"hive_partitioning = true)").fetchall(),
+                key=lambda r: tuple(map(str, r)))
+        rows = sorted(map(tuple, spark.read.schema(
+            "k string, v string, p string").parquet(path).collect()),
+            key=lambda r: tuple(map(str, r)))
+        tables[name] = (rows, duck, [os.path.dirname(f) for f in files])
+    assert tables["driver"] == tables["spark"]
+    rows, _, dirs = tables["driver"]
+    assert len(dirs) == len(set(dirs)) == 7
+    assert ("fresh", "ins", "001") in rows and ("s5", "same", "001") in rows
+
+
+def test_partitioned_driver_merge_runs_one_job(spark, tmp_path):
+    """On the driver path a partition-scoped upsert starts one Spark job:
+    the capped collect of the updates."""
+    path = str(tmp_path / "t")
+    base = spark.range(480).select(
+        F.col("id").alias("k"), (F.col("id") % 48).alias("p"),
+        F.lit("v0").alias("v"), F.lit(0).cast("long").alias("batch_id"))
+    upsert.write_upsert_partitioned(spark, base, path, ["k"], ["p"])
+    upd = spark.createDataFrame([(1, 1, "new", 1), (1000, 7, "ins", 1)],
+                                "k long, p long, v string, batch_id long")
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-upsert", "one capped collect")
+    try:
+        upsert.write_upsert_partitioned(spark, upd, path, ["k"], ["p"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("driver-upsert")) == 1
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(got) == 481 and got[1] == "new" and got[1000] == "ins"
+    # a driver-written file carries no Spark schema key; the next upsert
+    # still reads only its touched partitions, with the footer's types
+    assert upsert._footer_schema(path, "p=1", 1).simpleString() == \
+        "struct<k:bigint,v:string>"
+
+
+def _staging_leftovers(tmp_path, name="t"):
+    beside = [p.name for p in tmp_path.iterdir() if p.name != name]
+    inside = [d for r, ds, _ in os.walk(tmp_path / name) for d in ds
+              if d.startswith(".")]
+    return beside + inside
+
+
+def test_failed_driver_staging_leaves_nothing_behind(spark, tmp_path,
+                                                     monkeypatch):
+    """A driver merge whose staging write fails leaves the table's rows as
+    they were and no staging directory inside or beside the table (a glob
+    over the table, as DuckDB reads it, would count its files)."""
+    path = str(tmp_path / "t")
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 1.0), ("b", 2, 2.0),
+                                      ("c", 3, 3.0)], _PSCHEMA),
+        path, keys=["code"], partition_cols=["dt"])
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    real, calls = upsert._write_parquet, []
+
+    def failing(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("disk full while staging")
+        return real(*a, **kw)
+    monkeypatch.setattr(upsert, "_write_parquet", failing)
+    with pytest.raises(OSError, match="while staging"):
+        upsert.write_upsert_partitioned(
+            spark, spark.createDataFrame(
+                [("a", 1, 9.0), ("b", 2, 9.0), ("c", 3, 9.0)], _PSCHEMA),
+            path, keys=["code"], partition_cols=["dt"])
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert _staging_leftovers(tmp_path) == []
+
+
+def test_driver_crash_between_partition_swaps(spark, tmp_path, monkeypatch):
+    """A driver merge that fails between two partition swaps leaves every
+    partition with either its old or its new rows — never neither or both,
+    as after a dynamic overwrite's partial commit — removes its staging
+    directory, and a replay of the batch converges."""
+    path = str(tmp_path / "t")
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 1.0), ("b", 2, 2.0),
+                                      ("c", 3, 3.0), ("d", 4, 4.0)],
+                                     _PSCHEMA),
+        path, keys=["code"], partition_cols=["dt"])
+    batch = spark.createDataFrame([("a", 1, 9.0), ("b", 2, 9.0),
+                                   ("c", 3, 9.0), ("e", 3, 5.0)], _PSCHEMA)
+    real, swaps = upsert._swap_partition, []
+
+    def dying(root, stage, rel):
+        swaps.append(rel)
+        if len(swaps) == 2:
+            raise RuntimeError("killed between swaps")
+        real(root, stage, rel)
+    monkeypatch.setattr(upsert, "_swap_partition", dying)
+    with pytest.raises(RuntimeError, match="between swaps"):
+        upsert.write_upsert_partitioned(spark, batch, path, keys=["code"],
+                                        partition_cols=["dt"])
+    monkeypatch.undo()
+    got = {}
+    for r in spark.read.parquet(path).collect():
+        got.setdefault(r["dt"], set()).add((r["code"], r["v"]))
+    old = {1: {("a", 1.0)}, 2: {("b", 2.0)}, 3: {("c", 3.0)}}
+    new = {1: {("a", 9.0)}, 2: {("b", 9.0)}, 3: {("c", 9.0), ("e", 5.0)}}
+    assert got[4] == {("d", 4.0)}
+    assert all(got[p] in (old[p], new[p]) for p in old)
+    assert sum(got[p] == new[p] for p in old) == 1
+    assert _staging_leftovers(tmp_path) == []
+    upsert.write_upsert_partitioned(spark, batch, path, keys=["code"],
+                                    partition_cols=["dt"])
+    got = {(r["code"], r["dt"]): r["v"]
+           for r in spark.read.parquet(path).collect()}
+    assert got == {("a", 1): 9.0, ("b", 2): 9.0, ("c", 3): 9.0,
+                   ("e", 3): 5.0, ("d", 4): 4.0}
+
+
+def test_driver_read_failure_falls_back_to_the_spark_plan(spark, tmp_path,
+                                                          monkeypatch):
+    """When the driver cannot read a touched partition's file, the merge
+    takes the Spark plan over the same partitions — never the first-write
+    path, which would overwrite them with only the update rows."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 1.0), ("b", 1, 2.0)],
+                                     _PSCHEMA),
+        path, keys=["code"], partition_cols=["dt"])
+    real = pq.ParquetFile
+
+    def flaky(source, *a, **kw):
+        if str(source).startswith(path):
+            raise OSError("transient fs error")
+        return real(source, *a, **kw)
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    upsert.write_upsert_partitioned(
+        spark, spark.createDataFrame([("a", 1, 9.0)], _PSCHEMA), path,
+        keys=["code"], partition_cols=["dt"])
+    monkeypatch.undo()
+    got = {r["code"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {"a": 9.0, "b": 2.0}
+    assert [f.endswith(".snappy.parquet")
+            for f in os.listdir(os.path.join(path, "dt=1"))
+            if not f.startswith((".", "_"))] == [True]
