@@ -37,13 +37,13 @@ choose it for          single-writer staging, simple   shared tables, streaming
 
 Where a merge runs: a merge whose update rows plus touched base rows fit
 ``_DRIVER_MERGE_MAX_ROWS`` runs on the driver — one capped Arrow collect of
-the updates (the only Spark job), a pyarrow read of the touched files,
-``upsert_arrow``, a pyarrow write — when the table is local, every key and
-column type is string, integral, date, boolean, float/double (not as a
-key) or timestamp, and, for ``TxTable``, no CHECK constraint, change-data
-feed or deletion vector on a touched file applies. Everything else, and
-every first write, keeps the Spark plan. ``write_upsert`` (whole-table
-republish) always takes the Spark plan.
+the updates (the only Spark job), a ``lake.read`` of the touched files,
+``upsert_arrow``, a ``lake.write`` — when the table is local, every key and
+column type is in ``lake.merge_type`` (string, integral, date, boolean,
+float/double but not as a key, timestamp), and, for ``TxTable``, no CHECK
+constraint, change-data feed or deletion vector on a touched file applies.
+Everything else, and every first write, keeps the Spark plan.
+``write_upsert`` (whole-table republish) always takes the Spark plan.
 
 A pipeline can switch contracts without changing merge semantics: both sinks
 resolve conflicts with the same last-write-wins rule, tiebreaks included.
@@ -51,17 +51,13 @@ resolve conflicts with the same last-write-wins rule, tiebreaks included.
 
 from __future__ import annotations
 
-import json
 import os
-from datetime import date
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, ByteType, DateType, DoubleType,
-                               FloatType, IntegerType, LongType, ShortType,
-                               StringType, StructField, StructType,
-                               TimestampType)
+from pyspark.sql.types import StringType, StructField, StructType
+
+from data_integration_celery_spark import lake
 
 
 def upsert_frames(base: DataFrame, updates: DataFrame, keys: list[str],
@@ -182,187 +178,24 @@ def upsert_arrow(base, updates, keys: list[str], order_col: str = "batch_id"):
 _DRIVER_MERGE_MAX_ROWS = 1 << 20
 
 
-def _arrow_type(dtype, key: bool = False):
-    """The Arrow type the driver merge holds a Spark column of type
-    ``dtype`` in (timestamps as UTC instants), or None when the driver
-    cannot reproduce Spark's handling of it — then the merge keeps the
-    Spark plan. ``key`` also rules out floating types, which Spark groups
-    with NaN and -0.0 normalised."""
-    import pyarrow as pa
-
-    if dtype == StringType():  # the default UTF8_BINARY collation only
-        return pa.string()
-    types = {ByteType: pa.int8(), ShortType: pa.int16(),
-             IntegerType: pa.int32(), LongType: pa.int64(),
-             DateType: pa.date32(), BooleanType: pa.bool_(),
-             TimestampType: pa.timestamp("us", tz="UTC")}
-    if not key:
-        types.update({FloatType: pa.float32(), DoubleType: pa.float64()})
-    return types.get(type(dtype))
-
-
-def _arrow_schema(schema: StructType, keys: list[str], order_col: str):
-    """The pyarrow schema of a driver merge over ``schema`` (the order
-    column, when present, must be integral, date or timestamp), or None."""
-    import pyarrow as pa
-
-    fields = []
-    for f in schema.fields:
-        t = _arrow_type(f.dataType, key=f.name in keys or f.name == order_col)
-        if t is None or (f.name == order_col and pa.types.is_boolean(t)):
-            return None
-        fields.append(pa.field(f.name, t))
-    return pa.schema(fields)
-
-
 def _driver_rows(spark, path: str, df: DataFrame, keys: list[str],
                  order_col: str):
     """The update rows of a merge into the table at ``path`` that the
-    driver may run, as a pyarrow Table of ``_arrow_schema`` — one capped
-    collect, the merge's only Spark job — or None, and the merge takes the
-    Spark plan: the cap is 0, the table is not local, a key or column type
-    is outside ``_arrow_schema``, the session writes parquet the driver
-    cannot match (``_parquet_options``), or the batch alone is over
-    ``_DRIVER_MERGE_MAX_ROWS``."""
+    driver may run, as a pyarrow Table of ``lake.merge_schema`` — one
+    capped collect, the merge's only Spark job — or None, and the merge
+    takes the Spark plan: the cap is 0, the table is not local, a key or
+    column type is outside ``lake.merge_schema``, the session writes
+    parquet the driver cannot match (``lake.parquet_options``), or the
+    batch alone is over ``_DRIVER_MERGE_MAX_ROWS``."""
     cap = _DRIVER_MERGE_MAX_ROWS
-    if not cap or _local_path(path) is None or _parquet_options(spark) is None:
+    if not cap or lake.local_path(path) is None \
+            or lake.parquet_options(spark) is None:
         return None
-    schema = _arrow_schema(df.schema, keys, order_col)
+    schema = lake.merge_schema(df.schema, keys, order_col)
     if schema is None:
         return None
     table = df.limit(cap + 1).toArrow()
     return None if table.num_rows > cap else table.cast(schema)
-
-
-_WRITE_CODECS = {"snappy": "snappy", "gzip": "gzip", "zstd": "zstd",
-                 "none": "none", "uncompressed": "none"}
-
-
-def _parquet_options(spark) -> dict | None:
-    """pyarrow ``write_table`` options that write what the session's
-    parquet writer writes (codec, timestamp encoding), or None when the
-    driver cannot match it."""
-    codec = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
-    codec = _WRITE_CODECS.get(codec.lower())
-    ts = spark.conf.get("spark.sql.parquet.outputTimestampType", "INT96")
-    if codec is None or ts not in ("INT96", "TIMESTAMP_MICROS"):
-        return None
-    return {"compression": codec,
-            "use_deprecated_int96_timestamps": ts == "INT96"}
-
-
-# parquet-mr decides dictionary encoding on a column's first page, which
-# holds at most this many rows
-_FIRST_PAGE_ROWS = 20_000
-# and it drops a dictionary that outgrows this
-_DICTIONARY_MAX_BYTES = 1 << 20
-
-
-def _dictionary_columns(table, int96: bool) -> list[str]:
-    """The columns parquet-mr writes dictionary-encoded: those whose first
-    page encodes smaller with the dictionary (ids at the bit width of the
-    distinct count, plus the dictionary itself) than plain — the others
-    fall back to plain encoding. pyarrow would keep every dictionary."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    page = table.slice(0, _FIRST_PAGE_ROWS)
-    out = []
-    for name, col in zip(page.column_names, page.columns):
-        if pa.types.is_boolean(col.type):
-            continue  # parquet-mr never dictionary-encodes booleans
-        values = col.drop_null()
-        distinct = pc.unique(values)
-        if pa.types.is_string(col.type):
-            plain = 4 * len(values) + (
-                pc.sum(pc.binary_length(values)).as_py() or 0)
-            dict_bytes = 4 * len(distinct) + (
-                pc.sum(pc.binary_length(distinct)).as_py() or 0)
-        else:
-            width = 12 if int96 and pa.types.is_timestamp(col.type) else \
-                col.type.bit_width // 8
-            plain, dict_bytes = width * len(values), width * len(distinct)
-        ids = (len(values) * max(len(distinct) - 1, 0).bit_length() + 7) // 8
-        if ids + dict_bytes < plain and dict_bytes <= _DICTIONARY_MAX_BYTES:
-            out.append(name)
-    return out
-
-
-def _write_parquet(table, path: str, options: dict) -> None:
-    """Write ``table`` as one parquet file with the session writer's codec,
-    timestamp encoding and dictionary choices (``_parquet_options``) and
-    no ``ARROW:schema`` footer key, so a driver-written file is no larger
-    than Spark's for the same rows."""
-    import pyarrow.parquet as pq
-
-    pq.write_table(table, path, store_schema=False,
-                   use_dictionary=_dictionary_columns(
-                       table, options["use_deprecated_int96_timestamps"]),
-                   **options)
-
-
-def _read_arrow(paths: list[str], schema):
-    """The rows of these parquet files (written by Spark or by
-    ``_write_parquet``) as one pyarrow Table of ``schema`` — columns a
-    file lacks read as null, as in Spark's explicit-schema scan — or None
-    when a file cannot be read so, or was written with Spark's legacy
-    (rebased) calendar."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tables = []
-    for p in paths:
-        try:
-            f = pq.ParquetFile(p, coerce_int96_timestamp_unit="us")
-            if any(k.startswith(b"org.apache.spark.legacy")
-                   for k in f.metadata.metadata or {}):
-                return None
-            have = set(f.schema_arrow.names)
-            t = f.read(columns=[n for n in schema.names if n in have])
-            tables.append(pa.table(
-                [t.column(fld.name).cast(fld.type) if fld.name in have
-                 else pa.nulls(t.num_rows, fld.type) for fld in schema],
-                schema=schema))
-        except (OSError, pa.ArrowException):
-            return None
-    return pa.concat_tables(tables) if tables else schema.empty_table()
-
-
-def _fs(spark, path: str):
-    """(FileSystem, Path) via the Hadoop FS API — works on any scheme the
-    cluster can write (local, HDFS, S3A), unlike shutil."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _hadoop_rm(spark, path: str) -> None:
-    fs, jpath = _fs(spark, path)
-    fs.delete(jpath, True)
-
-
-def _exists(spark, path: str) -> bool:
-    fs, jpath = _fs(spark, path)
-    return fs.exists(jpath)
-
-
-def _has_parquet_files(spark, path: str) -> bool:
-    """True if any non-hidden file under ``path`` (recursive — partitioned
-    layouts nest) looks like data. One FS listing, no Spark job."""
-    fs, jpath = _fs(spark, path)
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith((".", "_")):
-            return True
-    return False
-
-
-def _rename(spark, src: str, dst: str) -> None:
-    """Directory rename — a single atomic metadata operation on HDFS and
-    local filesystems (the commit primitive; on S3 use a manifest instead)."""
-    fs, jsrc = _fs(spark, src)
-    if not fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)):
-        raise IOError(f"rename failed: {src} -> {dst}")
 
 
 _STAGING, _BACKUP = "__staging", "__backup"
@@ -374,10 +207,10 @@ def _publish(spark, df: DataFrame, path: str) -> None:
     ``write_upsert``); ``recover_table`` heals a crash at any step."""
     staging, backup = path + _STAGING, path + _BACKUP
     df.write.mode("overwrite").parquet(staging)
-    if _exists(spark, path):
-        _rename(spark, path, backup)
-    _rename(spark, staging, path)
-    _hadoop_rm(spark, backup)
+    if lake.exists(spark, path):
+        lake.rename(spark, path, backup)
+    lake.rename(spark, staging, path)
+    lake.hadoop_rm(spark, backup)
     # the publish replaced every file under `path`: drop any cached listing
     # so readers in this session don't chase renamed-away part files
     spark.catalog.refreshByPath(path)
@@ -413,21 +246,22 @@ def recover_table(spark, path: str) -> str:
     """
     path = path.rstrip("/")
     staging, backup = path + _STAGING, path + _BACKUP
-    if _exists(spark, path):
+    if lake.exists(spark, path):
         # Commit completed (or never started): staging/backup are stale.
-        action = "clean" if (_exists(spark, staging) or _exists(spark, backup)) else "noop"
-        _hadoop_rm(spark, staging)
-        _hadoop_rm(spark, backup)
+        action = "clean" if (lake.exists(spark, staging)
+                             or lake.exists(spark, backup)) else "noop"
+        lake.hadoop_rm(spark, staging)
+        lake.hadoop_rm(spark, backup)
         return action
-    if _exists(spark, backup):
+    if lake.exists(spark, backup):
         # Crashed between the two publish renames: roll the backup forward.
-        _rename(spark, backup, path)
-        _hadoop_rm(spark, staging)
+        lake.rename(spark, backup, path)
+        lake.hadoop_rm(spark, staging)
         spark.catalog.refreshByPath(path)
         return "restored"
     # Neither target nor backup: crash during the very first staging write.
     # Clean the orphaned staging dir instead of leaving it for the next write.
-    _hadoop_rm(spark, staging)
+    lake.hadoop_rm(spark, staging)
     return "noop"
 
 
@@ -465,7 +299,8 @@ def write_upsert(spark, updates: DataFrame, path: str, keys: list[str],
     # The first write is published via staging+rename too, so a crashed
     # initial load can never leave a partial table at the target path.
     out = (upsert_frames(spark.read.parquet(path), updates, keys, order_col)
-           if _exists(spark, path) else _first_batch(updates, keys, order_col))
+           if lake.exists(spark, path)
+           else _first_batch(updates, keys, order_col))
     _publish(spark, out, path)
 
 
@@ -518,7 +353,7 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
     # except-branch took the first-write path, dynamically overwriting
     # every touched partition with ONLY the update rows and destroying the
     # base rows whose keys were not in the batch
-    if not _exists(spark, path):
+    if not lake.exists(spark, path):
         _write_partitions(_first_batch(updates, keys, order_col,
                                        _cluster_by=partition_cols),
                           path, partition_cols)
@@ -533,15 +368,16 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
         for f in parts.fields if f.dataType == StringType()})
     rows = _driver_rows(spark, path, updates, [*partition_cols, *keys],
                         order_col) \
-        if all(_text_kind(f.dataType) for f in parts.fields) else None
+        if all(lake.text_kind(f.dataType) for f in parts.fields) else None
     if rows is None:
         touched = updates.select(*partition_cols).distinct().collect()
     else:
         touched = rows.group_by(partition_cols).aggregate([]).to_pylist()
-        if _driver_upsert_partitions(spark, path, parts, touched, rows,
-                                     keys, order_col):
-            return
-    base_slice = _touched_slice(spark, path, parts, touched)
+    layout = _touched_layout(path, parts, touched)
+    if rows is not None and layout is not None and _driver_upsert_partitions(
+            spark, path, parts, layout, rows, keys, order_col):
+        return
+    base_slice = _touched_slice(spark, path, parts, layout)
     if base_slice is None:
         # the partition columns take their types from `updates` here too:
         # inferred, a string partition "001" would read back as int 1 and
@@ -562,51 +398,42 @@ def write_upsert_partitioned(spark, updates: DataFrame, path: str,
 
 
 def _driver_upsert_partitions(spark, path: str, parts: StructType,
-                              touched: list, updates, keys: list[str],
+                              layout: tuple, updates, keys: list[str],
                               order_col: str) -> bool:
-    """The merge of ``write_upsert_partitioned`` on the driver: pyarrow
+    """The merge of ``write_upsert_partitioned`` on the driver: ``lake``
     reads the touched partitions, ``upsert_arrow`` merges them with the
-    collected ``updates``, and each touched partition's merged rows are
-    staged as one file and swapped in (``_swap_partitions``). False — the
-    caller keeps the Spark plan — when update plus touched rows exceed
-    ``_DRIVER_MERGE_MAX_ROWS``, no footer gives the table's schema, a data
-    column's type is outside ``_arrow_type`` or differs from the update's,
-    the updates bring a column the table lacks, or a file cannot be read."""
+    collected ``updates``, and each one's merged rows are staged as one
+    file and swapped in (``lake.swap_partitions``). False — the caller
+    keeps the Spark plan — when update plus touched rows exceed
+    ``_DRIVER_MERGE_MAX_ROWS``, a data column's type is outside
+    ``lake.merge_type`` or differs from the update's, the updates bring a
+    column the table lacks, or a file cannot be read."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    root = _local_path(path)
-    existing = _existing_partitions(root, parts.names, touched)
+    root, (existing, footer) = lake.local_path(path), layout
     files = {rel: [os.path.join(root, rel, n)
-                   for n in sorted(os.listdir(os.path.join(root, rel)))
-                   if not n.startswith((".", "_"))]
+                   for n in lake.data_files(os.path.join(root, rel))]
              for rel in existing.values()}
-    n_base = sum(pq.read_metadata(f).num_rows
-                 for fs in files.values() for f in fs)
-    if n_base + updates.num_rows > _DRIVER_MERGE_MAX_ROWS:
-        return False
-    footer = _footer_schema(root, next(iter(files), ""), len(parts.names))
-    if footer is None:
+    if lake.num_rows([f for fs in files.values() for f in fs]) \
+            + updates.num_rows > _DRIVER_MERGE_MAX_ROWS:
         return False
     data = [f for f in footer.fields if f.name not in parts.names]
     names = {f.name for f in data}
     if any(c not in names and c not in parts.names and c != order_col
            for c in updates.column_names):
         return False
-    fields = []
-    for f in data:
-        t = _arrow_type(f.dataType, key=f.name in keys)
-        if t is None or (f.name in updates.column_names
-                         and updates.schema.field(f.name).type != t):
-            return False
-        fields.append(pa.field(f.name, t))
-    schema = pa.schema(fields)
+    schema = lake.merge_schema(StructType(data), keys, order_col)
+    given = dict(zip(updates.column_names, updates.schema.types))
+    if schema is None or any(given.get(f.name, f.type) != f.type
+                             for f in schema):
+        return False
     slices = []
     for values, rel in existing.items():
-        base = _read_arrow(files[rel], schema)
-        if base is None:
+        try:
+            base = lake.read(files[rel], schema)
+        except lake.Unreadable:
             return False
         for c, v in zip(parts.names, values):
             t = updates.schema.field(c).type
@@ -615,67 +442,19 @@ def _driver_upsert_partitions(spark, path: str, parts: StructType,
                                       pc.fill_null(const, pa.scalar(v, t)))
         slices.append(base)
     base = pa.concat_tables(slices) if slices else pa.schema(
-        fields + [updates.schema.field(c) for c in parts.names]).empty_table()
+        [*schema, *map(updates.schema.field, parts.names)]).empty_table()
     merged = upsert_arrow(base, updates, [*parts.names, *[
         k for k in keys if k not in parts.names]], order_col)
     starts = list(np.flatnonzero(_group_starts(merged, parts.names)))
     staged = {}
     for lo, hi in zip(starts, starts[1:] + [merged.num_rows]):
-        rel = os.path.join(*[_partition_dir(c, merged.column(c)[lo].as_py())
-                             for c in parts.names])
+        rel = os.path.join(*[
+            lake.partition_dir(c, merged.column(c)[lo].as_py())
+            for c in parts.names])
         staged[rel] = merged.slice(lo, hi - lo).select(schema.names)
-    _swap_partitions(root, staged, _parquet_options(spark))
+    lake.swap_partitions(root, staged, lake.parquet_options(spark))
     spark.catalog.refreshByPath(path)
     return True
-
-
-_DRIVER_STAGING = ".driver-staging-"
-
-
-def _swap_partitions(root: str, staged: dict, options: dict) -> None:
-    """Stage each partition's rows (``{rel dir: pyarrow Table}``) as one
-    file under a hidden directory in the table, then swap the partitions
-    in one by one: the old directory is renamed aside, the staged one into
-    its place, and the old one deleted. A failure while staging leaves the
-    table as it was and removes the staging directory; a failure in a swap
-    puts that partition's old directory back, so every partition holds its
-    old or its new rows, never neither or both, and again nothing is left
-    behind. A crash (no cleanup runs) between swaps leaves what Spark's
-    dynamic overwrite leaves: some partitions swapped, the rest old, and
-    the unswapped ones staged in a hidden directory inside the table."""
-    import shutil
-    import uuid
-
-    stage = os.path.join(root, f"{_DRIVER_STAGING}{uuid.uuid4().hex}")
-    name = f"part-00000-{uuid.uuid4()}.c000.parquet"
-    try:
-        for rel, rows in staged.items():
-            os.makedirs(os.path.join(stage, "new", rel))
-            _write_parquet(rows, os.path.join(stage, "new", rel, name),
-                           options)
-        for rel in staged:
-            _swap_partition(root, stage, rel)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _swap_partition(root: str, stage: str, rel: str) -> None:
-    import shutil
-
-    final, old = os.path.join(root, rel), os.path.join(stage, "old", rel)
-    had = os.path.isdir(final)
-    if had:
-        os.makedirs(os.path.dirname(old), exist_ok=True)
-        os.rename(final, old)
-    try:
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.rename(os.path.join(stage, "new", rel), final)
-    except BaseException:
-        if had:
-            os.rename(old, final)
-        raise
-    if had:
-        shutil.rmtree(old)
 
 
 def _group_starts(table, cols: list[str]):
@@ -698,170 +477,35 @@ def _group_starts(table, cols: list[str]):
     return first
 
 
-def _plain_path(path: str) -> str:
-    """The filesystem path of a path string as Hadoop's ``Path`` — and so
-    Spark — reads it: a scheme (a colon before the first slash) and an
-    authority are dropped, and the rest is taken literally. Hadoop decodes
-    no ``%XX`` and knows no query or fragment, so ``/lake/prices#v2`` names
-    the directory ``prices#v2``. A TxTable rooted at
-    ``hdfs://nn/warehouse/t`` records add-actions relative to this plain
-    path, while store I/O keeps the full string (so the right FileSystem
-    resolves). A URI Spark reports (``input_file_name()``) is
-    percent-encoded instead: see ``_uri_path``."""
-    head, sep, rest = path.partition(":")
-    if not sep or "/" in head:
-        return path
-    if rest.startswith("//") and len(rest) > 2:
-        end = rest.find("/", 2)
-        return rest[end:] if end >= 0 else ""
-    return rest
-
-
-def _local_path(path: str) -> str | None:
-    """``_plain_path`` of a path on the local filesystem (no scheme, or
-    ``file:``), which the driver can list and read itself; None for every
-    other scheme."""
-    head, sep, _ = path.partition(":")
-    if sep and "/" not in head and head != "file":
+def _touched_layout(path: str, parts: StructType, touched: list):
+    """``({values: rel dir} of the touched partitions that exist, the
+    table's Spark schema from a footer)``, or None when the table is not
+    local, a partition type is not integral, string or date, or no footer
+    gives the schema."""
+    root = lake.local_path(path)
+    if root is None or not all(lake.text_kind(f.dataType)
+                               for f in parts.fields):
         return None
-    return _plain_path(path)
-
-
-def _uri_path(uri: str) -> str:
-    """The filesystem path of a percent-encoded URI that Spark reports,
-    such as ``input_file_name()``."""
-    return unquote(urlparse(uri).path)
-
-
-_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
-
-
-def _text_kind(dtype) -> str | None:
-    """"str", "int" or "date" for a column type whose values the driver
-    renders as text exactly as Spark does — its ``cast(... as string)`` and
-    its partition directory names; None for every other type (callers then
-    take a Spark-job path)."""
-    if dtype == StringType():  # the default UTF8_BINARY collation only
-        return "str"
-    if type(dtype) in _INT_BITS:
-        return "int"
-    if isinstance(dtype, DateType):
-        return "date"
-    return None
-
-
-# Spark's partition directory names (ExternalCatalogUtils): these characters
-# are written as %XX, and a null or empty value as the default partition
-_ESCAPED = frozenset([chr(c) for c in range(0x01, 0x20)]
-                     + list('"#%\'*/:=?\\\x7f{[]^'))
-_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _escape_path_name(s: str) -> str:
-    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in s)
-
-
-def _partition_dir(col: str, value) -> str:
-    """``col=value`` as Spark names the directory of an integral, string or
-    date partition value."""
-    text = "" if value is None else \
-        value.isoformat() if isinstance(value, date) else str(value)
-    return (f"{_escape_path_name(col)}="
-            f"{_escape_path_name(text) if text else _DEFAULT_PARTITION}")
+    existing = lake.existing_partitions(root, parts.names, touched)
+    schema = lake.footer_schema(root, next(iter(existing.values()), ""),
+                                len(parts.names))
+    return None if schema is None else (existing, schema)
 
 
 def _touched_slice(spark, path: str, parts: StructType,
-                   touched: list) -> DataFrame | None:
-    """The rows of the partitions ``touched`` names — exactly the
-    directories a dynamic overwrite of those values replaces — read with
-    no partition-discovery and no schema-inference job; None when the
-    table is not local, a partition type is not integral, string or date,
-    or no footer gives the table's schema (the caller then reads the whole
-    table). Existence is decided by ``_existing_partitions``."""
-    root = _local_path(path)
-    if root is None or not all(_text_kind(f.dataType)
-                               for f in parts.fields):
+                   layout: tuple | None) -> DataFrame | None:
+    """The rows of ``layout``'s touched partitions (exactly what a dynamic
+    overwrite replaces), read with no discovery or inference job; None
+    without a layout (the caller then reads the whole table)."""
+    if layout is None:
         return None
-    existing = list(_existing_partitions(root, parts.names, touched).values())
-    data = _footer_schema(root, existing[0] if existing else "",
-                          len(parts.names))
-    if data is None:
-        return None
+    existing, data = layout
     schema = StructType([f for f in data.fields if f.name not in parts.names]
                         + parts.fields)
     if not existing:
         return spark.createDataFrame([], schema)
     return (spark.read.schema(schema).option("basePath", path)
-            .parquet(*[os.path.join(path, rel) for rel in existing]))
-
-
-def _existing_partitions(root: str, names: list[str], touched: list) -> dict:
-    """``{partition values: directory relative to root}`` for the rows of
-    ``touched`` (partition value tuples, or rows keyed by ``names``) whose
-    partition directory exists, from listings that RAISE on I/O error: a
-    touched partition wrongly taken as absent would be overwritten with
-    only the update rows."""
-    listings: dict[str, list[str]] = {}
-
-    def listed(rel: str) -> list[str]:
-        if rel not in listings:
-            listings[rel] = sorted(os.listdir(os.path.join(root, rel)))
-        return listings[rel]
-
-    existing = {}
-    for row in touched:
-        values = tuple(row[c] for c in names)
-        rel = ""
-        for c, v in zip(names, values):
-            seg = _partition_dir(c, v)
-            if seg not in listed(rel):
-                break
-            rel = os.path.join(rel, seg)
-        else:
-            existing[values] = rel
-    return existing
-
-
-def _footer_schema(root: str, rel: str, depth: int) -> StructType | None:
-    """The Spark schema of the first data file under ``root/rel`` (``depth``
-    directory levels below ``root``): the one Spark records in the footer,
-    else — a driver-written file, which carries no key-value metadata —
-    the one Spark reads from its parquet types (``_spark_type``); None
-    when there is no file or a type has no such reading."""
-    import pyarrow.parquet as pq
-
-    level = len(rel.split(os.sep)) if rel else 0
-    for name in sorted(os.listdir(os.path.join(root, rel))):
-        if name.startswith((".", "_")):
-            continue
-        if level < depth:
-            found = _footer_schema(root, os.path.join(rel, name), depth)
-            if found is not None:
-                return found
-            continue
-        md = pq.read_metadata(os.path.join(root, rel, name))
-        if _SPARK_SCHEMA_KEY in (md.metadata or {}):
-            return StructType.fromJson(
-                json.loads(md.metadata[_SPARK_SCHEMA_KEY]))
-        fields = [StructField(f.name, _spark_type(f.type), True)
-                  for f in md.schema.to_arrow_schema()]
-        return None if any(f.dataType is None for f in fields) \
-            else StructType(fields)
-    return None
-
-
-def _spark_type(arrow_type):
-    """The Spark type of a column of a file the driver wrote — the inverse
-    of ``_arrow_type`` — or None."""
-    import pyarrow as pa
-
-    for spark_type in (ByteType(), ShortType(), IntegerType(), LongType(),
-                       FloatType(), DoubleType(), StringType(), DateType(),
-                       BooleanType()):
-        if _arrow_type(spark_type) == arrow_type:
-            return spark_type
-    return TimestampType() if pa.types.is_timestamp(arrow_type) else None
+            .parquet(*[os.path.join(path, rel) for rel in existing.values()]))
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -890,7 +534,7 @@ def _write_partitions(df: DataFrame, path: str,
     merge of ``write_upsert_partitioned``).
 
     A first-ever EMPTY write must not leave a ``_SUCCESS``-only directory:
-    it passes ``_exists()`` but fails every later schema-inferring
+    it passes ``lake.exists()`` but fails every later schema-inferring
     ``spark.read.parquet`` — an all-filtered first micro-batch would brick
     a streaming index path until someone deletes the dir by hand. Checked
     AFTER the write by listing for data files (one metadata listing, never
@@ -902,13 +546,13 @@ def _write_partitions(df: DataFrame, path: str,
     readers don't chase the replaced partitions' part files.
     """
     spark = df.sparkSession
-    fresh = not _exists(spark, path)
+    fresh = not lake.exists(spark, path)
     (df.write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy(*partition_cols)
        .parquet(path))
-    if fresh and not _has_parquet_files(spark, path):
-        _hadoop_rm(spark, path)
+    if fresh and not any(lake.hadoop_data_files(spark, path)):
+        lake.hadoop_rm(spark, path)
     spark.catalog.refreshByPath(path)
 
 

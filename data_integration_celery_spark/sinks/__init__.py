@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.upsert import (_exists, _fs, _publish, overwrite_partitions,
-                                recover_table)
+from .. import lake
+from ..operators.upsert import _publish, overwrite_partitions, recover_table
 
 
 def export_per_key(df: DataFrame, path: str, key_col: str,
@@ -60,7 +60,7 @@ def replicate_incremental(spark: SparkSession, source: DataFrame,
     # transient read error on an EXISTING target must propagate —
     # swallowing it here would null the watermark and append the ENTIRE
     # source on top of existing rows (silent wholesale duplication)
-    if _exists(spark, target_path):
+    if lake.exists(spark, target_path):
         current_max = (spark.read.parquet(target_path)
                        .agg(F.max(watermark_col)).collect()[0][0])
     else:
@@ -73,15 +73,9 @@ def replicate_incremental(spark: SparkSession, source: DataFrame,
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(path, bytes) of every parquet data file under ``path`` (recursive),
     via the Hadoop FS API so it works on any scheme the cluster reads."""
-    fs, jpath = _fs(spark, path)
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith("_"):
-            out.append((st.getPath().toString(), st.getLen()))
-    return out
+    return [(st.getPath().toString(), st.getLen())
+            for st in lake.hadoop_data_files(spark, path)
+            if st.getPath().getName().endswith(".parquet")]
 
 
 def compact_table(spark: SparkSession, path: str,
@@ -117,7 +111,7 @@ def compact_table(spark: SparkSession, path: str,
     files = list_data_files(spark, path)
     df = spark.read.parquet(path)  # raises on a table without data files
     # hive layout = the `col=value` directories between the root and a file
-    fs, jroot = _fs(spark, path)
+    fs, jroot = lake.fs(spark, path)
     rel = files[0][0][len(fs.makeQualified(jroot).toString()):]
     layout = [d.split("=", 1)[0] for d in rel.split("/")[1:-1]]
     if partition_cols is not None and list(partition_cols) != layout:

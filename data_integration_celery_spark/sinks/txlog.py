@@ -74,11 +74,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_integration_celery_spark import lake
 from data_integration_celery_spark.operators import upsert as upsert_mod
 from data_integration_celery_spark.operators.upsert import (
-    _INT_BITS, _driver_rows, _local_path, _parquet_options, _plain_path,
-    _read_arrow, _text_kind, _uri_path, _write_parquet, upsert_annotated,
-    upsert_arrow, upsert_frames)
+    _driver_rows, upsert_annotated, upsert_arrow, upsert_frames)
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "_data"
@@ -166,13 +165,13 @@ def _probe_text(value, dtype) -> str | None:
     if dtype is None:
         kind = "str" if isinstance(value, str) else "int"
     else:
-        kind = _text_kind(dtype)
+        kind = lake.text_kind(dtype)
     if kind == "str":
         return value if isinstance(value, str) else None
     if kind == "int":
         if type(value) is not int:  # a bool is an int to Python, not Spark
             return None
-        half = 1 << (_INT_BITS[type(dtype)] - 1 if dtype else 63)
+        half = 1 << (lake.INT_BITS[type(dtype)] - 1 if dtype else 63)
         return str(value) if -half <= value < half else None
     lo, hi = _DRIVER_BLOOM_DATES
     if kind == "date" and type(value) is date and lo <= value <= hi:
@@ -263,7 +262,7 @@ class LocalLogStore:
         for dirpath, dirnames, filenames in list(
                 os.walk(root, topdown=False)):
             if (dirpath != root and not dirnames
-                    and not _has_data(filenames)
+                    and not any(map(lake.is_data_file, filenames))
                     and now - os.path.getmtime(dirpath) >= ttl_seconds):
                 _rm_dir_quiet(dirpath)
 
@@ -294,26 +293,20 @@ class HadoopLogStore:
     """
 
     def __init__(self, spark: SparkSession):
+        self._spark = spark
         self._jvm = spark._jvm
         self._gw = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
 
-    def _hpath(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
-
-    def _fs(self, hpath):
-        return hpath.getFileSystem(self._conf)
-
     def put_if_absent(self, path: str, payload: bytes) -> bool:
-        local = _local_path(path)
+        local = lake.local_path(path)
         if local is not None:
             # POSIX rename overwrites, and the local AbstractFileSystem's
             # no-overwrite check is check-then-act — two racers could both
             # "win". link(2) is the atomic primitive there.
             return LocalLogStore().put_if_absent(local, payload)
-        dst = self._hpath(path)
-        tmp = self._hpath(f"{path}.{uuid.uuid4().hex}.tmp")
-        fs = self._fs(dst)
+        fs, dst = lake.fs(self._spark, path)
+        _, tmp = lake.fs(self._spark, f"{path}.{uuid.uuid4().hex}.tmp")
         try:
             out = fs.create(tmp, True)
             try:
@@ -360,8 +353,8 @@ class HadoopLogStore:
             raise
 
     def read(self, path: str) -> dict:
-        p = self._hpath(path)
-        stream = self._fs(p).open(p)
+        fs, p = lake.fs(self._spark, path)
+        stream = fs.open(p)
         try:
             raw = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
         finally:
@@ -369,8 +362,7 @@ class HadoopLogStore:
         return json.loads(bytes(raw))
 
     def list_versions(self, log_dir: str, suffix: str = ".json") -> list[int]:
-        d = self._hpath(log_dir)
-        fs = self._fs(d)
+        fs, d = lake.fs(self._spark, log_dir)
         if not fs.exists(d):
             return []
         out = []
@@ -382,23 +374,22 @@ class HadoopLogStore:
         return sorted(out)
 
     def ensure_dir(self, path: str) -> None:
-        p = self._hpath(path)
-        self._fs(p).mkdirs(p)
+        fs, p = lake.fs(self._spark, path)
+        fs.mkdirs(p)
 
     # --- maintenance I/O — same contract as LocalLogStore, so vacuum/
     # restore/time-travel work against hdfs:// tables too ---
 
     def exists(self, path: str) -> bool:
-        p = self._hpath(path)
-        return self._fs(p).exists(p)
+        fs, p = lake.fs(self._spark, path)
+        return fs.exists(p)
 
     def delete(self, path: str) -> None:
-        p = self._hpath(path)
-        self._fs(p).delete(p, False)
+        fs, p = lake.fs(self._spark, path)
+        fs.delete(p, False)
 
     def list_files(self, root: str) -> list[tuple[str, float]]:
-        r = self._hpath(root)
-        fs = self._fs(r)
+        fs, r = lake.fs(self._spark, root)
         if not fs.exists(r):
             return []
         out: list[tuple[str, float]] = []
@@ -413,8 +404,7 @@ class HadoopLogStore:
 
     def prune_empty_dirs(self, root: str, ttl_seconds: float,
                          now: float) -> None:
-        r = self._hpath(root)
-        fs = self._fs(r)
+        fs, r = lake.fs(self._spark, root)
         if not fs.exists(r):
             return
         # bottom-up: collect dirs, deepest first
@@ -432,7 +422,7 @@ class HadoopLogStore:
                 kids = fs.listStatus(d)
                 names = [k.getPath().getName() for k in kids]
                 if (not any(k.isDirectory() for k in kids)
-                        and not _has_data(names)
+                        and not any(map(lake.is_data_file, names))
                         and now - st.getModificationTime() / 1000.0
                         >= ttl_seconds):
                     fs.delete(d, True)  # only markers remain
@@ -852,11 +842,11 @@ class TxTable:
         across every file and pruning would degenerate to full rewrite).
 
         On the local path no Spark job follows the write: stats come from
-        the files' footers (``_footer_adds``) and sidecars from a driver read
-        of the Bloom columns hashed by the XXH64 kernel
-        (``_driver_blooms``). Each falls back to its Spark-job form where
-        the driver cannot reproduce Spark's answer exactly; both forms give
-        byte-identical add-actions.
+        the files' footers (``_footer_adds``, through ``lake.footer_stats``)
+        and sidecars from a ``lake.read`` of the Bloom columns hashed by the
+        XXH64 kernel (``_driver_blooms``). Each falls back to its Spark-job
+        form where the driver cannot reproduce Spark's answer exactly; both
+        forms give byte-identical add-actions.
         """
         batch = f"{_DATA_DIR}/{uuid.uuid4().hex}"
         batch_dir = os.path.join(self.path, batch)
@@ -892,8 +882,8 @@ class TxTable:
                         .agg(*aggs).collect())  # bounded: one row per file
             adds = []
             for row in per_file:
-                rel = os.path.relpath(_uri_path(row["__file"]),
-                                      _plain_path(self.path))
+                rel = os.path.relpath(lake.uri_path(row["__file"]),
+                                      lake.plain_path(self.path))
                 stats = {c: {"min": _widen(row[f"__min_{c}"], -1),
                              "max": _widen(row[f"__max_{c}"], +1)}
                          for c in stats_cols}
@@ -903,13 +893,14 @@ class TxTable:
         return adds
 
     def _add_blooms(self, adds: list[dict], schema: StructType,
-                    bloom: dict | None, batch_dir: str) -> None:
+                    bloom: dict | None, batch_dir: str,
+                    tables: dict | None = None) -> None:
         """Attach the declared Bloom sidecars to the add-actions of the
         files under ``batch_dir``: built on the driver (``_driver_blooms``)
         where it can, else by the Spark-job build."""
         if not (bloom and bloom.get("cols")):
             return
-        blooms = self._driver_blooms(adds, schema, bloom)
+        blooms = self._driver_blooms(adds, schema, bloom, tables)
         if blooms is None:
             written = self.spark.read.schema(schema).parquet(batch_dir)
             blooms = self._build_blooms(written, bloom)
@@ -920,86 +911,51 @@ class TxTable:
     def _footer_adds(self, batch_dir: str, batch_rel: str,
                      schema: StructType, stats_cols: list[str]
                      ) -> list[dict] | None:
-        """Per-file add-actions (rows + min/max stats) from the parquet
-        FOOTERS of the just-written batch — no second read of the data.
-
-        The original stats collection re-scanned every written byte with an
-        ``input_file_name()`` aggregation (guide §1.2: an extra full pass
-        per write — at 100 TB each commit read back everything it wrote).
-        Parquet already persists exact per-row-group min/max for integer
-        and date physical types, so for those the footers ARE the
-        aggregation; reading them is O(files) driver-side metadata I/O,
-        the same cost class as writing the commit JSON itself.
-
-        Returns None — caller falls back to the Spark-job path — when the
-        table is not on a locally-readable filesystem, when a stats column
-        is not footer-exact (strings truncate, float/double NaN ordering
-        is writer-defined), or when any populated row group lacks stats.
-        The fallback produces byte-identical add-actions (pinned by
-        tests), so this is a pure execution-path choice.
-        """
-        plain = _local_path(batch_dir)
+        """Per-file add-actions (rows + min/max stats) from the FOOTERS of
+        the just-written batch (``lake.footer_stats``): O(files) metadata
+        I/O, no re-scan by an ``input_file_name()`` aggregation. None — the
+        caller takes that Spark-job path, whose add-actions are identical —
+        when the table is not local, a stats column is not integral or date
+        (parquet stores only those min/max exactly), or a footer is
+        unreadable or lacks stats."""
+        plain = lake.local_path(batch_dir)
         if plain is None:
             return None
         fields = {f.name: f.dataType for f in schema.fields}
         # integral and date columns: parquet stores their min/max exactly
-        if any(_text_kind(fields.get(c)) not in ("int", "date")
+        if any(lake.text_kind(fields.get(c)) not in ("int", "date")
                for c in stats_cols):
             return None
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-            return None
-        try:
-            names = sorted(n for n in os.listdir(plain)
-                           if n.endswith(".parquet"))
-        except OSError:
-            return None
         adds: list[dict] = []
-        for fname in names:
-            try:
-                md = pq.ParquetFile(os.path.join(plain, fname)).metadata
-            except Exception:
-                # not just OSError: pyarrow raises ArrowInvalid (and
-                # relatives) on an unreadable/corrupt footer — every
-                # failure here must take the Spark-job fallback, never
-                # crash the commit (ADVICE r12)
-                return None
-            if md.num_rows == 0:
-                continue  # the Spark-job path never lists rowless files
-            idx = {md.row_group(0).column(i).path_in_schema: i
-                   for i in range(md.num_columns)} if md.num_row_groups \
-                else {}
-            stats: dict = {}
-            for c in stats_cols:
-                i = idx.get(c)
-                if i is None:
-                    return None
-                mins, maxs = [], []
-                for r in range(md.num_row_groups):
-                    col = md.row_group(r).column(i)
-                    s = col.statistics
-                    if s is None or not s.has_min_max:
-                        return None  # can't prove exactness — fall back
-                    mins.append(s.min)
-                    maxs.append(s.max)
-                stats[c] = {"min": _widen(min(mins), -1),
-                            "max": _widen(max(maxs), +1)}
-            adds.append({"path": f"{batch_rel}/{fname}",
-                         "rows": md.num_rows, "stats": stats})
+        try:
+            for name in lake.data_files(plain):
+                facts = lake.footer_stats(os.path.join(plain, name),
+                                          stats_cols)
+                if facts is None:
+                    return None  # can't prove exactness — fall back
+                rows, stats = facts
+                if rows:  # the Spark-job path never lists rowless files
+                    adds.append({"path": f"{batch_rel}/{name}", "rows": rows,
+                                 "stats": {c: {"min": _widen(lo, -1),
+                                               "max": _widen(hi, +1)}
+                                           for c, (lo, hi) in stats.items()}})
+        except Exception:  # ArrowInvalid too, on a corrupt footer: every
+            return None  # failure takes the fallback, never fails the commit
         return adds
 
     def _driver_blooms(self, adds: list[dict], schema: StructType,
-                       bloom: dict) -> dict | None:
-        """``_build_blooms`` without a Spark job: pyarrow reads each written
-        file's Bloom columns, ``pc.unique`` drops duplicates and nulls, and
-        the XXH64 kernel hashes ``"__bf{i}:" + text`` exactly as Spark's
-        ``xxhash64`` does — the same sidecars, byte for byte.
+                       bloom: dict, tables: dict | None = None
+                       ) -> dict | None:
+        """``_build_blooms`` without a Spark job: each added file's Bloom
+        columns — from ``tables`` (``{rel path: pyarrow Table}`` the caller
+        holds), else a ``lake.read`` — lose duplicates and nulls to
+        ``pc.unique``, and the XXH64 kernel hashes ``"__bf{i}:" + text`` as
+        Spark's ``xxhash64`` does — the same sidecars, byte for byte.
 
         Returns None — caller keeps the Spark-job build — when the table is
         not on a locally-readable filesystem (the ``_footer_adds``
         condition), when a Bloom column's type is not string, integral or
-        date (``_text_kind``), when a date lies outside
+        date (``lake.text_kind``), when a date lies outside
         ``_DRIVER_BLOOM_DATES``, when the batch needs more than
         ``_DRIVER_BLOOM_MAX_HASHES`` hashes, or when a file cannot be
         read."""
@@ -1008,14 +964,14 @@ class TxTable:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         fields = {f.name: f.dataType for f in schema.fields}
         cols = bloom["cols"]
-        root = _local_path(self.path)
-        if root is None or any(_text_kind(fields.get(c)) is None
+        root = lake.local_path(self.path)
+        if root is None or any(lake.text_kind(fields.get(c)) is None
                                for c in cols):
             return None
+        read_as = lake.arrow_schema(schema[c] for c in cols)
         bits, k = int(bloom["bits"]), int(bloom["k"])
         # day numbers: a date after 9999-12-31, which Spark can store, has
         # no Python date
@@ -1023,13 +979,15 @@ class TxTable:
         budget = _DRIVER_BLOOM_MAX_HASHES // k
         distinct: list[tuple] = []
         for a in adds:
-            try:
-                table = pq.read_table(os.path.join(root, a["path"]),
-                                      columns=cols)
-                values = [pc.unique(table.column(c)).drop_null() for c in cols]
-            except (OSError, KeyError, pa.ArrowException):
-                return None  # unreadable file or missing column
-            for c, vals in zip(cols, values):
+            table = (tables or {}).get(a["path"])
+            if table is None:
+                try:
+                    table = lake.read([os.path.join(root, a["path"])],
+                                      read_as)
+                except lake.Unreadable:
+                    return None
+            for c in cols:
+                vals = pc.unique(table.column(c)).drop_null()
                 if not len(vals):
                     continue  # the Spark build lists no all-null file
                 budget -= len(vals)
@@ -1090,8 +1048,8 @@ class TxTable:
                      .agg(F.collect_list(F.struct("w", "bits")).alias("wb"))
                      .collect())  # bounded: files x min(rows*k, bits/64)
             for row in words:
-                rel = os.path.relpath(_uri_path(row["__file"]),
-                                      _plain_path(self.path))
+                rel = os.path.relpath(lake.uri_path(row["__file"]),
+                                      lake.plain_path(self.path))
                 dense = [0] * nwords
                 for e in row["wb"]:
                     dense[e["w"]] = e["bits"]
@@ -1444,7 +1402,7 @@ class TxTable:
         conformed = _conform(updates, schema, keep=order_col)
         # the driver's stats must be exact: string, integral or date columns
         driver = not (st.cdf or st.constraints) and all(
-            _text_kind(f.dataType) for f in schema.fields
+            lake.text_kind(f.dataType) for f in schema.fields
             if f.name in stats_cols)
         rows = _driver_rows(self.spark, self.path, conformed, keys,
                             order_col) if driver else None
@@ -1485,15 +1443,15 @@ class TxTable:
 
     def _driver_merge(self, st: TableState, touched: list[dict], rows,
                       keys: list[str], order_col: str) -> list[dict] | None:
-        """The copy-on-write merge on the driver: pyarrow reads the touched
-        files, ``upsert_arrow`` merges them with the collected ``rows``,
-        and pyarrow writes the result as one file. Its add-action carries
-        the row count and exact min/max from the Arrow data (strings in
-        byte order, as Spark's ``min``/``max``) and the sidecars of
-        ``_driver_blooms`` — what ``_write_batch`` records for the same
-        rows. None — the caller runs the Spark plan — when update plus
-        touched rows exceed ``_DRIVER_MERGE_MAX_ROWS``, a touched file has
-        a deletion vector, or a file cannot be read."""
+        """The copy-on-write merge on the driver: ``lake.read`` of the
+        touched files, ``upsert_arrow`` with the collected ``rows``, and a
+        ``lake.write`` of one file. Its add-action carries the row count,
+        exact min/max from the Arrow data (strings in byte order, as
+        Spark's ``min``/``max``) and sidecars built from the merged table —
+        what ``_write_batch`` records for the same rows. None — the caller
+        runs the Spark plan — when update plus touched rows exceed
+        ``_DRIVER_MERGE_MAX_ROWS``, a touched file has a deletion vector,
+        or a file cannot be read."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -1502,27 +1460,27 @@ class TxTable:
                 or rows.num_rows + sum(a["rows"] for a in touched)
                 > upsert_mod._DRIVER_MERGE_MAX_ROWS):
             return None
-        root = _local_path(self.path)
+        root = lake.local_path(self.path)
         schema = pa.schema([rows.schema.field(f.name)
                             for f in st.struct().fields])
-        base = _read_arrow([os.path.join(root, a["path"]) for a in touched],
-                           schema)
-        if base is None:
+        try:
+            base = lake.read([os.path.join(root, a["path"])
+                              for a in touched], schema)
+        except lake.Unreadable:
             return None
         merged = upsert_arrow(base, rows, keys, order_col)
         batch = f"{_DATA_DIR}/{uuid.uuid4().hex}"
-        rel = f"{batch}/part-00000-{uuid.uuid4()}-c000.parquet"
-        os.makedirs(os.path.join(root, batch))
-        _write_parquet(merged, os.path.join(root, rel),
-                       _parquet_options(self.spark))
+        rel = f"{batch}/" + os.path.basename(lake.write(
+            merged, os.path.join(root, batch),
+            lake.parquet_options(self.spark)))
         stats = {}
         for c in st.stats_cols:
             lo, hi = pc.min_max(merged.column(c)).values()
             stats[c] = {"min": _widen(lo.as_py(), -1),
                         "max": _widen(hi.as_py(), +1)}
         adds = [{"path": rel, "rows": merged.num_rows, "stats": stats}]
-        self._add_blooms(adds, st.struct(), st.bloom, os.path.join(
-            self.path, batch))
+        self._add_blooms(adds, st.struct(), st.bloom,
+                         os.path.join(self.path, batch), {rel: merged})
         return adds
 
     def _write_merge_cdf(self, base: DataFrame, updates: DataFrame,
@@ -2020,9 +1978,9 @@ class TxTable:
         # HadoopLogStore, not just a driver-local filesystem
         for abs_path, mtime in self.store.list_files(data_root):
             name = os.path.basename(abs_path)
-            rel = os.path.relpath(_plain_path(abs_path),
-                                  _plain_path(self.path))
-            if rel in referenced or name.startswith((".", "_")) \
+            rel = os.path.relpath(lake.plain_path(abs_path),
+                                  lake.plain_path(self.path))
+            if rel in referenced or not lake.is_data_file(name) \
                     or any(rel.startswith(d + "/") for d in dv_dirs):
                 continue  # live file, marker, or referenced DV sidecar
             if now - mtime >= ttl_seconds:
@@ -2032,10 +1990,6 @@ class TxTable:
         # empty dir is an in-flight writer's staging area, not garbage
         self.store.prune_empty_dirs(data_root, ttl_seconds, now)
         return removed
-
-
-def _has_data(filenames: list[str]) -> bool:
-    return any(not n.startswith((".", "_")) for n in filenames)
 
 
 def _rm_dir_quiet(path: str) -> None:

@@ -62,8 +62,8 @@ def ingest_series_catalog(spark: SparkSession, catalog: dict[str, dict],
     # transient read error on an EXISTING table must propagate — swallowing
     # it would null every watermark and re-plan a full-history refetch of
     # every series against the vendor API
-    from ..operators.upsert import _exists
-    if _exists(spark, path):
+    from .. import lake
+    if lake.exists(spark, path):
         existing = spark.read.parquet(path).select("series_id", "obs_date")
     else:
         existing = spark.createDataFrame([], "series_id string, obs_date date")

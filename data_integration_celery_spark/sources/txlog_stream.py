@@ -23,11 +23,12 @@ snapshot-start stream, the pre-overwrite rows of the CDC feed — come
 from ``sinks.txlog.replay``, the same checkpointed fold ``TxTable``
 reads, so the source and the table can never disagree on what is live;
 tailing classifies each new commit on its own. ``read()`` executes ON
-EXECUTORS, one partition per added file, and yields Arrow RecordBatches
-straight from the parquet footer — the vectorized path, never
-row-at-a-time Python. Scale shape: driver work is one JSON read per new
-version per trigger (plus one replay for a snapshot); data movement is
-executor-side and proportional to the NEW files only.
+EXECUTORS, one partition per added file, and yields the Arrow
+RecordBatches of ``lake.read`` (the driver merge's reader too) — the
+vectorized path, never row-at-a-time Python. Scale shape: driver work is
+one JSON read per new version per trigger (plus one replay for a
+snapshot); data movement is executor-side and proportional to the NEW
+files only.
 
 Options:
 - ``startingVersion`` (default 0): first batch covers versions
@@ -99,11 +100,9 @@ import os
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceStreamReader, InputPartition)
-from pyspark.sql.types import (
-    ArrayType, BooleanType, ByteType, DateType, DecimalType, DoubleType,
-    FloatType, IntegerType, LongType, ShortType, StringType, StructField,
-    StructType, TimestampType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .. import lake
 from ..sinks.txlog import LocalLogStore, log_path, replay
 
 _LOG_DIR = "_txlog"
@@ -131,26 +130,6 @@ def _list_versions(log_dir: str) -> list[int]:
 
 def _read_commit(log_dir: str, version: int) -> dict:
     return LocalLogStore().read(log_path(log_dir, version))
-
-
-def _arrow_type(dt):
-    """Arrow type for a Spark type — needed only to build NULL columns for
-    files written before a column was added (schema evolution)."""
-    import pyarrow as pa
-    mapping = {
-        LongType: pa.int64(), IntegerType: pa.int32(),
-        ShortType: pa.int16(), ByteType: pa.int8(),
-        DoubleType: pa.float64(), FloatType: pa.float32(),
-        StringType: pa.string(), BooleanType: pa.bool_(),
-        DateType: pa.date32(), TimestampType: pa.timestamp("us", tz="UTC"),
-    }
-    if type(dt) in mapping:
-        return mapping[type(dt)]
-    if isinstance(dt, DecimalType):
-        return pa.decimal128(dt.precision, dt.scale)
-    if isinstance(dt, ArrayType):
-        return pa.list_(_arrow_type(dt.elementType))
-    raise TypeError(f"txlog stream source: unsupported column type {dt}")
 
 
 _CDC_COLS = ("_change", "_commit_version")
@@ -246,10 +225,8 @@ class _TxLogReaderCore:
             parts = []
             for d in commit["cdf_files"]:
                 full = os.path.join(self.table_path, d)
-                for fn in sorted(os.listdir(full)):
-                    if not fn.startswith((".", "_")):
-                        parts.append(_FilePartition(
-                            os.path.join(full, fn), "cdf", v))
+                parts.extend(_FilePartition(os.path.join(full, fn), "cdf", v)
+                             for fn in lake.data_files(full))
             return parts
         if op in _APPEND_OPS and not commit.get("remove") \
                 and not any(a.get("dv", {}).get("refs") for a in adds):
@@ -289,57 +266,30 @@ class _TxLogReaderCore:
 
     # --------------------------------------------------------------- read --
     def read(self, partition: _FilePartition):
+        """The partition's rows by ``lake.read``: a pre-image keeps the rows
+        this commit's sidecar names, a DV-carrying snapshot file drops the
+        rows its sidecars retract, a column added later reads as NULL."""
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        tbl = pq.read_table(partition.path)
-        base = os.path.basename(partition.path)
-        if partition.sidecar is not None:
-            # pre-image rows: the commit's sidecar names this file's
-            # newly-retracted positions as (file basename, row index) —
-            # row index IS the file's physical row order, so take()
-            # extracts exactly those rows with no diffing. The basename
-            # filter pushes into the parquet scan (row-group pruning), so
-            # an N-file commit does not read the full sidecar N times.
-            mine = pq.read_table(partition.sidecar,
-                                 columns=["__file", "__pos"],
-                                 filters=[("__file", "==", base)])
-            tbl = tbl.take(mine.column("__pos"))
-        elif partition.drop_refs:
-            # initial-snapshot read of a DV-carrying live file: serve the
-            # file MINUS the positions its referenced sidecars retract
-            # (merge-on-read applied executor-side, no Spark join needed)
-            drops = pa.concat_tables([
-                pq.read_table(r, columns=["__file", "__pos"],
-                              filters=[("__file", "==", base)])
-                for r in partition.drop_refs]).column("__pos")
-            keep = pc.invert(pc.is_in(
-                pa.array(range(tbl.num_rows), pa.int64()),
-                value_set=drops.combine_chunks()))
-            tbl = tbl.filter(keep)
-        cols, names = [], []
-        for field in self.result_schema.fields:
-            if field.name in _CDC_COLS and self.mode == "cdc":
-                continue  # synthesized below
-            at = _arrow_type(field.dataType)
-            if field.name in tbl.column_names:
-                cols.append(tbl.column(field.name).cast(at))
-            else:  # written before the column existed: NULL (evolution)
-                cols.append(pa.nulls(tbl.num_rows, at))
-            names.append(field.name)
-        if self.mode == "cdc":
+        cdc = self.mode == "cdc"
+        fields = [f for f in self.result_schema.fields
+                  if not (cdc and f.name in _CDC_COLS)]
+        if partition.kind == "cdf":
+            # change-data file: _change is a real column written at commit
+            # time, not a per-partition constant
+            fields.append(StructField("_change", StringType()))
+        tbl = lake.read([partition.path], lake.arrow_schema(fields),
+                        keep=partition.sidecar,
+                        drop=partition.drop_refs or ())
+        if cdc:
             n = tbl.num_rows
-            if partition.kind == "cdf":
-                # change-data file: _change is a real column written at
-                # commit time, not a per-partition constant
-                cols.append(tbl.column("_change").cast(pa.string()))
-            else:
-                cols.append(pa.array([partition.kind] * n, pa.string()))
-            names.append("_change")
-            cols.append(pa.array([partition.version] * n, pa.int64()))
-            names.append("_commit_version")
-        yield from pa.table(dict(zip(names, cols))).to_batches()
+            if partition.kind != "cdf":
+                tbl = tbl.append_column(
+                    "_change", pa.array([partition.kind] * n, pa.string()))
+            tbl = tbl.append_column(
+                "_commit_version", pa.array([partition.version] * n,
+                                            pa.int64()))
+        yield from tbl.to_batches()
 
 
 class TxLogStreamReader(_TxLogReaderCore, DataSourceStreamReader):

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from .. import lake
 from ..functions.numeric import DEC
 
 
@@ -301,7 +302,7 @@ def stream_incremental_dedup(docs: DataFrame, index_path: str,
                                    incremental_pairs_from_banded,
                                    _perm_hash_md5, _perm_hash_xxhash64,
                                    _bucket_hash_md5, _bucket_hash_xxhash64)
-    from ..operators.upsert import _exists, overwrite_partitions
+    from ..operators.upsert import overwrite_partitions
 
     # 'md5' is the engine-portable twin form (exact-oracle evidence for the
     # streaming probe, see queries.stream_dedup_incremental_md5); production
@@ -318,7 +319,7 @@ def stream_incremental_dedup(docs: DataFrame, index_path: str,
             # existence-branch, not read-exception branch: a transient read
             # error on a real index must propagate, never silently restart
             # the index from empty (same rule as operators.upsert)
-            if _exists(spark, index_path):
+            if lake.exists(spark, index_path):
                 index = spark.read.parquet(index_path) \
                     .select(id_col, "sig", "band", "bucket")
             else:
@@ -373,7 +374,7 @@ def stream_incremental_semdedup(emb: DataFrame, member_path: str,
     from ..operators.similarity import (_assign_to_centroids,
                                         _incremental_pairs_from_members,
                                         _normalized_vecs)
-    from ..operators.upsert import _exists, overwrite_partitions
+    from ..operators.upsert import overwrite_partitions
 
     if getattr(centroids, "size", 0) == 0:
         raise ValueError(
@@ -390,7 +391,7 @@ def stream_incremental_semdedup(emb: DataFrame, member_path: str,
             # existence-branch, not read-exception branch (upsert rule):
             # transient index read errors must propagate, never silently
             # restart the member table from empty
-            if _exists(spark, member_path):
+            if lake.exists(spark, member_path):
                 # probe STRICTLY earlier batches: a replayed batch N whose
                 # member partition was already written must not see its
                 # own rows as "old" (self-pairs + duplicated in-batch

@@ -202,8 +202,7 @@ def test_compact_table_publish_is_crash_recoverable(spark, tmp_path):
     protocol directories behind."""
     import os
 
-    from data_integration_celery_spark import sinks
-    from data_integration_celery_spark.operators import upsert as U
+    from data_integration_celery_spark import lake, sinks
 
     path = str(tmp_path / "crashy")
     for i in range(4):
@@ -218,7 +217,7 @@ def test_compact_table_publish_is_crash_recoverable(spark, tmp_path):
     assert set(r["id"] for r in spark.read.parquet(path).collect()) == before
 
     # crash window: path renamed away, staging not yet promoted
-    U._rename(spark, path, path + "__backup")
+    lake.rename(spark, path, path + "__backup")
     assert not os.path.exists(path)
     n = sinks.compact_table(spark, path, target_file_mb=128)  # self-heals
     assert n >= 1

@@ -499,6 +499,31 @@ def test_batch_snapshot_read_matches_txtable(spark, sf_dir, tdir):
             sorted(map(tuple, want.collect())), f"version {v}"
 
 
+def test_source_reads_timestamps_outside_the_nanosecond_range(spark, tdir):
+    """Spark writes timestamps as INT96 by default, and an instant after
+    2262-04-11 or before 1677-09-21 overflows nanoseconds: the batch
+    snapshot and the stream must read such rows as microseconds, exactly
+    as ``TxTable.snapshot()`` does, instead of failing the read."""
+    import datetime
+
+    from data_integration_celery_spark.sources.txlog_stream import (
+        read_txlog_snapshot)
+
+    table = f"{tdir}/t"
+    t = TxTable(spark, table, batch_partitions=1)
+    t.create(spark.createDataFrame(
+        [(1, datetime.datetime(2500, 1, 1)),
+         (2, datetime.datetime(1650, 6, 1, 12, 30)),
+         (3, datetime.datetime(2024, 5, 6, 7, 8, 9, 123456)),
+         (4, None)], "id long, ts timestamp"))
+    want = sorted(map(tuple, t.snapshot().collect()))
+    assert [r[1].year for r in want[:3]] == [2500, 1650, 2024]
+    assert sorted(map(tuple, read_txlog_snapshot(spark, table).collect())) \
+        == want
+    got = _drain(spark, table, tdir, "ts_range")
+    assert sorted(map(tuple, got.collect())) == want
+
+
 def test_batch_table_changes_matches_stream_cdc(spark, sf_dir, tdir):
     """TxTable.table_changes — the batch per-commit CDC feed — must emit
     exactly the rows the streaming CDC source emits over the same version

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_celery_spark import sinks
+from data_integration_celery_spark import lake, sinks
 from data_integration_celery_spark.operators import upsert
 
 
@@ -56,17 +56,16 @@ def test_write_upsert_cleans_staging_dir(spark, tmp_path):
 
 
 def _crash_rename_on_call(monkeypatch, n):
-    """Make the n-th _rename call raise — simulates a process kill at the
-    corresponding point of the commit protocol."""
-    from data_integration_celery_spark.operators import upsert as U
-    real, calls = U._rename, [0]
+    """Make the n-th ``lake.rename`` call raise — simulates a process kill
+    at the corresponding point of the commit protocol."""
+    real, calls = lake.rename, [0]
 
     def dying(spark, src, dst):
         calls[0] += 1
         if calls[0] == n:
             raise RuntimeError("killed mid-commit")
         real(spark, src, dst)
-    monkeypatch.setattr(U, "_rename", dying)
+    monkeypatch.setattr(lake, "rename", dying)
 
 
 def test_crash_before_publish_leaves_target_intact(spark, tmp_path, monkeypatch):
@@ -372,19 +371,19 @@ def test_upsert_frames_equal_order_prefers_updates(spark):
 
 def test_overwrite_partitions_empty_frame_is_noop(spark, sf_dir, tmp_path):
     """A first-ever EMPTY dynamic overwrite must not create the target dir:
-    the _SUCCESS-only directory it used to leave passes _exists() but fails
+    the _SUCCESS-only directory it used to leave passes exists() but fails
     every schema-inferring read — an all-filtered first micro-batch would
     brick the incremental-dedup index path until manual deletion."""
     from pyspark.sql import functions as F
 
     from data_integration_celery_spark.operators.upsert import (
-        _exists, overwrite_partitions)
+        overwrite_partitions)
     target = str(tmp_path / "idx")
     src = (spark.read.parquet(f"{sf_dir}/orders.parquet")
            .select("o_orderkey", "o_orderstatus"))
     overwrite_partitions(src.limit(0).withColumn("batch_id", F.lit(0)),
                          target, ["batch_id"])
-    assert not _exists(spark, target)  # no brick directory
+    assert not lake.exists(spark, target)  # no brick directory
     # a later real batch initializes the table normally
     overwrite_partitions(src.limit(7).withColumn("batch_id", F.lit(1)),
                          target, ["batch_id"])
@@ -469,24 +468,23 @@ def test_partitioned_upsert_reads_the_table_path_literally(spark, tmp_path):
 
 
 def test_plain_and_local_paths_follow_hadoop(spark, tmp_path):
-    """``_plain_path`` takes a path as Hadoop's ``Path`` does: scheme and
-    authority dropped, nothing decoded; ``_local_path`` gives it only for
-    local paths; ``_uri_path`` decodes what Spark reports as a URI."""
-    from data_integration_celery_spark.operators.upsert import (
-        _local_path, _plain_path, _uri_path)
-    assert _plain_path("/lake/prices#v2") == "/lake/prices#v2"
-    assert _plain_path("file:///t/a%41b#c") == "/t/a%41b#c"
-    assert _plain_path("file:/t/x") == "/t/x"
-    assert _plain_path("hdfs://nn:8020/warehouse/t") == "/warehouse/t"
-    assert _local_path("hdfs://nn/warehouse/t") is None
-    assert _local_path("s3a://bucket/t") is None
-    assert _local_path("rel/dir:x") == "rel/dir:x"
+    """``lake.plain_path`` takes a path as Hadoop's ``Path`` does: scheme
+    and authority dropped, nothing decoded; ``lake.local_path`` gives it
+    only for local paths; ``lake.uri_path`` decodes what Spark reports as
+    a URI."""
+    assert lake.plain_path("/lake/prices#v2") == "/lake/prices#v2"
+    assert lake.plain_path("file:///t/a%41b#c") == "/t/a%41b#c"
+    assert lake.plain_path("file:/t/x") == "/t/x"
+    assert lake.plain_path("hdfs://nn:8020/warehouse/t") == "/warehouse/t"
+    assert lake.local_path("hdfs://nn/warehouse/t") is None
+    assert lake.local_path("s3a://bucket/t") is None
+    assert lake.local_path("rel/dir:x") == "rel/dir:x"
     uri = f"file://{tmp_path}/u%41v#w"
     spark.range(1).write.parquet(uri)
     assert os.listdir(tmp_path) == ["u%41v#w"]
-    assert _local_path(uri) == f"{tmp_path}/u%41v#w"
+    assert lake.local_path(uri) == f"{tmp_path}/u%41v#w"
     reported = spark.read.parquet(uri).select(F.input_file_name()).first()[0]
-    assert os.path.dirname(_uri_path(reported)) == _local_path(uri)
+    assert os.path.dirname(lake.uri_path(reported)) == lake.local_path(uri)
 
 
 def test_partitioned_upsert_roundtrips_adversarial_values(spark, tmp_path):
@@ -739,7 +737,7 @@ def test_partitioned_driver_merge_runs_one_job(spark, tmp_path):
     assert len(got) == 481 and got[1] == "new" and got[1000] == "ins"
     # a driver-written file carries no Spark schema key; the next upsert
     # still reads only its touched partitions, with the footer's types
-    assert upsert._footer_schema(path, "p=1", 1).simpleString() == \
+    assert lake.footer_schema(path, "p=1", 1).simpleString() == \
         "struct<k:bigint,v:string>"
 
 
@@ -761,14 +759,14 @@ def test_failed_driver_staging_leaves_nothing_behind(spark, tmp_path,
                                       ("c", 3, 3.0)], _PSCHEMA),
         path, keys=["code"], partition_cols=["dt"])
     before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    real, calls = upsert._write_parquet, []
+    real, calls = lake.write, []
 
     def failing(*a, **kw):
         calls.append(1)
         if len(calls) == 2:
             raise OSError("disk full while staging")
         return real(*a, **kw)
-    monkeypatch.setattr(upsert, "_write_parquet", failing)
+    monkeypatch.setattr(lake, "write", failing)
     with pytest.raises(OSError, match="while staging"):
         upsert.write_upsert_partitioned(
             spark, spark.createDataFrame(
@@ -793,14 +791,14 @@ def test_driver_crash_between_partition_swaps(spark, tmp_path, monkeypatch):
         path, keys=["code"], partition_cols=["dt"])
     batch = spark.createDataFrame([("a", 1, 9.0), ("b", 2, 9.0),
                                    ("c", 3, 9.0), ("e", 3, 5.0)], _PSCHEMA)
-    real, swaps = upsert._swap_partition, []
+    real, swaps = lake._swap_partition, []
 
     def dying(root, stage, rel):
         swaps.append(rel)
         if len(swaps) == 2:
             raise RuntimeError("killed between swaps")
         real(root, stage, rel)
-    monkeypatch.setattr(upsert, "_swap_partition", dying)
+    monkeypatch.setattr(lake, "_swap_partition", dying)
     with pytest.raises(RuntimeError, match="between swaps"):
         upsert.write_upsert_partitioned(spark, batch, path, keys=["code"],
                                         partition_cols=["dt"])
@@ -850,3 +848,43 @@ def test_driver_read_failure_falls_back_to_the_spark_plan(spark, tmp_path,
     assert [f.endswith(".snappy.parquet")
             for f in os.listdir(os.path.join(path, "dt=1"))
             if not f.startswith((".", "_"))] == [True]
+
+
+def test_one_driver_parquet_layer_contract():
+    """Driver-side parquet files are ``lake``'s alone: no other module of
+    the package imports ``pyarrow.parquet``, the modules that touch table
+    files import no leading-underscore helper from ``operators.upsert``
+    but its merge and publish decisions, and the helpers ``lake`` took
+    over have no second copy there or in the txlog source."""
+    import ast
+    import pathlib
+
+    from data_integration_celery_spark.sources import txlog_stream
+
+    pkg = pathlib.Path(lake.__file__).parent
+
+    def imports(rel):
+        for n in ast.walk(ast.parse((pkg / rel).read_text())):
+            if isinstance(n, ast.Import):
+                yield from ((a.name, None) for a in n.names)
+            elif isinstance(n, ast.ImportFrom):
+                yield from ((n.module or "", a.name) for a in n.names)
+
+    readers = sorted(
+        f.relative_to(pkg).as_posix() for f in pkg.rglob("*.py")
+        if any(m.startswith("pyarrow.parquet")
+               or (m == "pyarrow" and name == "parquet")
+               for m, name in imports(f.relative_to(pkg))))
+    assert readers == ["lake.py"]
+    for rel in ("sinks/txlog.py", "sinks/__init__.py", "streaming/jobs.py",
+                "sources/catalog_ingest.py"):
+        private = {name for m, name in imports(rel)
+                   if m.endswith("operators.upsert") and name
+                   and name.startswith("_")}
+        assert private <= {"_driver_rows", "_publish"}, (rel, private)
+    for name in ("_read_arrow", "_write_parquet", "_footer_schema",
+                 "_arrow_type", "_arrow_schema", "_spark_type",
+                 "_parquet_options", "_swap_partitions", "_text_kind",
+                 "_fs", "_exists", "_rename", "_hadoop_rm", "_local_path"):
+        assert not hasattr(upsert, name), name
+    assert not hasattr(txlog_stream, "_arrow_type")
