@@ -1133,10 +1133,10 @@ _BARS_SQL = """
 
 
 @q("a3_tick_to_bars", sql=_BARS_SQL,
-   doc="A3/J12: tick→1-min OHLCV bars in ONE groupBy — min_by/max_by replace "
-       "the reference's join-back-to-tick for open/close "
-       "(stock_tick_2_bar.py:39-55). Vol parsed from the JSON props column. "
-       "Same aggregation body runs under Structured Streaming.")
+   doc="A3/J12: tick→1-min OHLCV bars in ONE groupBy — open/close are the "
+       "price of the min/max struct(ts, event_id, price), which replaces the "
+       "reference's join-back-to-tick (stock_tick_2_bar.py:39-55). Vol parsed "
+       "from the JSON props column. The stream runs the same ohlc_bars.")
 def a3_bars(spark, sf_dir):
     ev = (_t(spark, sf_dir, "events")
           .withColumn("vol", F.get_json_object("props", "$.k").cast("double")))

@@ -36,13 +36,9 @@ _ENGINE_CONFS: dict[str, str] = {
     # Broadcast threshold: dimension tables (instrument info, calendars,
     # code_mapping) are ≤ a few hundred MB even at full scale — broadcast them.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Files: 128m split size keeps scan parallelism aligned with HDFS/S3
-    # blocks. Env-overridable for cluster runs: guide §6 recommends 512m-1g
-    # splits for large sequential scans on fast storage (fewer map tasks
-    # feeding each shuffle, §2.2); the local default stays 128m so bench
-    # numbers remain comparable across rounds.
-    "spark.sql.files.maxPartitionBytes":
-        os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
+    # Files: 128m split size (Spark's default) keeps scan parallelism aligned
+    # with HDFS/S3 blocks.
+    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -1059,13 +1059,6 @@ class TxTable:
                     "bits": bits, "k": k, "words": blob}
         return out
 
-    def _bloom_positions(self, value, bits: int, k: int,
-                         dtype=None) -> list[int]:
-        """Probe positions for ``value`` — the positions Spark's hash
-        expressions give, so build and probe can never disagree on the hash
-        function."""
-        return self._bloom_positions_batch([(None, value, dtype, bits, k)])[0]
-
     def _bloom_positions_batch(self, probes: list[tuple]) -> list[list[int]]:
         """Positions for many ``(col, value, dtype, bits, k)`` probes.
 

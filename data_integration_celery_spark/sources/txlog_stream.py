@@ -103,9 +103,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .. import lake
-from ..sinks.txlog import LocalLogStore, log_path, replay
-
-_LOG_DIR = "_txlog"
+from ..sinks.txlog import _LOG_DIR, LocalLogStore, log_path, replay
 
 # ops whose adds are guaranteed NEW rows (no existing row modified):
 # create is the initial snapshot; append is blind; a merge with an empty
@@ -117,7 +115,7 @@ _APPEND_OPS = ("create", "append", "merge_upsert")
 # metadata-only commits (constraints, table properties). Both modes emit
 # nothing for them — the same cancellation contract the batch changes()
 # feed gets from its (path, dv refs) identity key.
-_SILENT_OPS = ("compact", "compact_dv", "coalesce_dv", "zorder",
+_SILENT_OPS = ("compact", "compact_dv", "coalesce_dv",
                "set_constraint", "drop_constraint", "set_cdf")
 
 

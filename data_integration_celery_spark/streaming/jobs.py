@@ -4,7 +4,7 @@ The reference is batch-only (Celery beat micro-batches); these are the
 streaming-native forms of its tick pipeline:
 
 - tick stream → 1-minute OHLCV bars with a watermark for late ticks
-  (batch twin: operators.bars.ohlc_bars — same aggregation body);
+  (operators.bars.ohlc_bars on the watermarked stream);
 - stateful tick dedup within the watermark horizon
   (the reference rebuilds the PK and `replace into`s a new table,
   tasks/merge/delete_duplicate_ticks.py:15-67);
@@ -22,40 +22,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from .. import lake
-from ..functions.numeric import DEC
+from ..operators.bars import ohlc_bars
 
 
 def stream_ohlc_bars(ticks: DataFrame, key_cols: list[str], ts_col: str,
                      price_col: str, vol_col: str | None = None,
                      duration: str = "1 minute",
                      watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-window OHLCV bars over a streaming DataFrame.
-
-    open/close via min/max over a (ts, price) struct — struct min/max ARE
-    supported in streaming aggregations and are order-independent, unlike
-    first/last whose result depends on partial-aggregation arrival order
-    across partitions and micro-batch state merges. Matches the batch twin's
-    min_by/max_by-with-timestamp-tiebreak semantics exactly.
-    """
-    ts_price = F.struct(F.col(ts_col).alias("t"), F.col(price_col).alias("p"))
-    aggs = [
-        F.min(ts_price).getField("p").alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max(ts_price).getField("p").alias("close"),
-        F.count(F.lit(1)).alias("n_ticks"),
-    ]
-    if vol_col:
-        aggs += [
-            F.sum(F.col(vol_col).cast(DEC)).cast("double").alias("vol"),
-            F.sum((F.col(price_col) * F.col(vol_col)).cast(DEC)).cast("double").alias("amount"),
-        ]
-    return (ticks.withWatermark(ts_col, watermark)
-            .groupBy(*key_cols, F.window(F.col(ts_col), duration))
-            .agg(*aggs)
-            .withColumn("bar_start", F.col("window.start"))
-            .withColumn("bar_end", F.col("window.end"))
-            .drop("window"))
+    """Watermarked tumbling-window OHLCV bars over a streaming DataFrame:
+    ``operators.bars.ohlc_bars`` on the watermarked ticks. Its open/close
+    rule (min/max of a (ts, price) struct) is order-independent, so the
+    stream's bars equal the batch bars of the same ticks."""
+    return ohlc_bars(ticks.withWatermark(ts_col, watermark), key_cols,
+                     ts_col, price_col, vol_col, duration)
 
 
 def stream_dedup_ticks(ticks: DataFrame, key_cols: list[str], ts_col: str,

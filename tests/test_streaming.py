@@ -26,15 +26,43 @@ def test_stream_bars_match_batch(spark, sf_dir, events_dir):
     got = spark.sql("select * from bars_test")
 
     batch = bars.ohlc_bars(catalog.load(spark, "events", sf_dir),
-                           ["event_type"], "ts", "value", id_col="event_id")
-    # open/close depend on arrival order in the streaming variant; the
-    # order-free aggregates must match exactly
+                           ["event_type"], "ts", "value")
+    # one bar rule: every column of the stream equals the batch bars
     key = ["event_type", "bar_start"]
-    g = {tuple(r[k] for k in key): (r["high"], r["low"], r["n_ticks"])
-         for r in got.collect()}
-    b = {tuple(r[k] for k in key): (r["high"], r["low"], r["n_ticks"])
-         for r in batch.collect()}
+    g = {tuple(r[k] for k in key): r.asDict() for r in got.collect()}
+    b = {tuple(r[k] for k in key): r.asDict() for r in batch.collect()}
     assert g == b and len(g) > 0
+
+
+def test_tied_timestamps_give_one_bar_in_any_row_order(spark, tmp_path):
+    """Ticks that share a timestamp: ohlc_bars gives the same bar for every
+    input row order, and it equals the stream's bar — open is the least
+    price at the first timestamp, close the greatest at the last."""
+    import datetime
+    t0 = datetime.datetime(2024, 1, 2, 9, 30, 0)
+    t1 = t0 + datetime.timedelta(seconds=30)
+    rows = [("A", t0, 10.0), ("A", t0, 5.0), ("A", t1, 7.0), ("A", t1, 9.0)]
+    schema = "code string, ts timestamp, price double"
+    cols = ["open", "high", "low", "close", "n_ticks"]
+
+    def batch_bar(order):
+        ticks = spark.createDataFrame([rows[i] for i in order],
+                                      schema).coalesce(1)
+        out = bars.ohlc_bars(ticks, ["code"], "ts", "price").collect()
+        assert len(out) == 1
+        return tuple(out[0][c] for c in cols)
+
+    src = str(tmp_path / "ticks")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (jobs.stream_ohlc_bars(stream, ["code"], "ts", "price")
+         .writeStream.format("memory").queryName("tied_bars")
+         .outputMode("complete").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = [tuple(r) for r in spark.sql(
+        f"select {', '.join(cols)} from tied_bars").collect()]
+    assert streamed == [(5.0, 10.0, 5.0, 9.0, 4)]
+    assert batch_bar([0, 1, 2, 3]) == batch_bar([1, 0, 3, 2]) == streamed[0]
 
 
 def test_stream_dedup(spark, events_dir, tmp_path):

@@ -1240,7 +1240,7 @@ def test_bloom_batched_probe_single_job(spark, tdir, spark_merges):
     jobs = sc.statusTracker().getJobIdsForGroup("bloom-batch-probe")
     assert len(jobs) == 1, jobs
     for (_, val, dtype, bits, k), pos in zip(probes, batch):
-        assert pos == t._bloom_positions(val, bits, k, dtype)
+        assert pos == t._bloom_positions_batch([(None, val, dtype, bits, k)])[0]
 
 
 def test_bloom_survives_merge_compact_and_checkpoint(spark, sf_dir, tdir):
@@ -1275,11 +1275,13 @@ def test_bloom_probe_matches_build_hashes(spark, tdir):
     t.create(df, bloom_cols=["v"], bloom_bits=4096, bloom_k=5)
     entry = t.live_files()[0]["bloom"]["v"]
     from data_integration_celery_spark.sinks.txlog import _bloom_admits
-    assert _bloom_admits(entry, t._bloom_positions(777, 4096, 5))
+    assert _bloom_admits(
+        entry, t._bloom_positions_batch([(None, 777, None, 4096, 5)])[0])
     # 20 random absent probes: k=5 bits over 4096 with one value set ->
     # essentially impossible to collide on all five
-    assert not any(_bloom_admits(entry, t._bloom_positions(x, 4096, 5))
-                   for x in range(1000, 1020))
+    assert not any(_bloom_admits(entry, pos) for pos in
+                   t._bloom_positions_batch([(None, x, None, 4096, 5)
+                                             for x in range(1000, 1020)]))
 
 
 def _bloom_table(spark, tdir):
@@ -1525,6 +1527,15 @@ def test_logstore_contract_matrix(spark, tdir):
             os.path.join(d, "00000000000000000020.ckpt.json"), b"{}")
         assert store.list_versions(d) == [7, 8], name
         assert store.list_versions(d, suffix=".ckpt.json") == [20], name
+        # maintenance I/O: exists/delete on a data file beside the log
+        os.makedirs(d, exist_ok=True)
+        data = os.path.join(d, "part-00000.parquet")
+        with open(data, "wb") as f:
+            f.write(b"x")
+        assert store.exists(data) is True, name
+        store.delete(data)
+        assert store.exists(data) is False, name
+        assert not os.path.exists(data), name
 
 
 def test_object_store_concurrent_writers_one_winner(tdir):
@@ -2260,7 +2271,8 @@ def test_driver_merge_equals_spark_merge(spark, tdir, monkeypatch,
                 f"SELECT * FROM read_parquet({paths!r}) "
                 f"ORDER BY code, n").fetchall()
         admits = [_bloom_admits(adds[0]["bloom"]["code"],
-                                t._bloom_positions(v, 4099, 3))
+                                t._bloom_positions_batch(
+                                    [(None, v, None, 4099, 3)])[0])
                   for v in ("k001", "ké0", "zz", "u5日")]
         got[name] = (_rows(t.snapshot()), duck,
                      {k: v for k, v in adds[0].items() if k != "path"},

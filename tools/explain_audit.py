@@ -90,7 +90,7 @@ RULES: dict[str, tuple[list[str], list[str]]] = {
         [r"partial", r"HashAggregate", r"hashpartitioning\(event_type"],
         [r"CartesianProduct", r"SinglePartition", r"Join"]),
     "a3_tick_to_bars": (
-        # min_by/max_by plan as (Object)HashAggregate or SortAggregate; the
+        # struct min/max plan as HashAggregate or SortAggregate; the
         # contract is map-side partial aggregation, whatever the operator
         [r"partial", r"Aggregate"], [r"CartesianProduct"]),
     "o3_topk_worst": (
